@@ -220,8 +220,8 @@ def test_udf_dtype_inferred_without_declaration(spark):
 
 
 def test_explain_features_tiers():
-    """Driver-side compilation report: tier + fanout + two-level verdicts
-    per output, no Spark session or data touched."""
+    """Driver-side compilation report: tier + fanout + bucket-summary
+    verdicts per output, no Spark session or data touched."""
     from tsflex_spark import FuncWrapper
 
     def my_custom(x):
@@ -229,12 +229,12 @@ def test_explain_features_tiers():
 
     fc = FeatureCollection(
         [
-            FeatureDescriptor("sum", "v", "4h", "10m"),   # fanout 24 -> two-level
+            FeatureDescriptor("sum", "v", "4h", "10m"),   # fanout 24
             FeatureDescriptor("corr", ("a", "b"), "4h", "10m"),
             FeatureDescriptor(
                 FuncWrapper(my_custom, output_names="rng"), "v", "1h", "1h"
             ),
-            FeatureDescriptor("median", "v", "4h", "10m"),  # holistic: no rewrite
+            FeatureDescriptor("median", "v", "4h", "10m"),  # holistic: no summary
         ]
     )
     rep = fc.explain_features().set_index("output")
@@ -250,6 +250,21 @@ def test_explain_features_tiers():
     fc2 = FeatureCollection([FeatureDescriptor("sum", "v", "4h", "10m")])
     rep2 = fc2.explain_features().set_index("output")
     assert bool(rep2.loc["v__sum__w=4h", "two_level"])
+
+    # an int window on a TIME index is count-based: its own tier, never
+    # the bucket summary; a decomposable fanout-1 config rides the summary
+    fc3 = FeatureCollection(
+        [
+            FeatureDescriptor("sum", "v", 240, 120),
+            FeatureDescriptor("max", "v", "1h", "1h"),
+        ]
+    )
+    rep3 = fc3.explain_features().set_index("output")
+    assert rep3.loc["v__sum__w=240", "tier"] == "count"
+    assert rep3.loc["v__sum__w=240", "fanout"] == 2.0
+    assert not rep3.loc["v__sum__w=240", "two_level"]
+    assert rep3.loc["v__max__w=1h", "tier"] == "native"
+    assert bool(rep3.loc["v__max__w=1h", "two_level"])
 
 
 def test_vectorized_batched_2d(spark):

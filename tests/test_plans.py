@@ -173,13 +173,58 @@ def test_udf_tier_single_arrow_pass_per_config(spark):
 
 
 def test_fine_stride_takes_two_level_plan(spark):
-    """sliding_fine_stride (fan-out 24) must compile through the bucketed
-    pre-aggregation — the __bkt partial-aggregate key appears in the plan
-    and the raw data is never exploded per segment."""
+    """sliding_fine_stride (fan-out 24) must compile through the bucket
+    summary — the __bkt partial-aggregate key appears in the plan and the
+    raw data is never exploded per segment."""
     import __spark_entry__ as E
 
     plan = plan_of(E.queries()["sliding_fine_stride"](spark, SF_DIR), "simple")
     assert "__bkt" in plan, plan[:2000]
+
+
+def test_multi_config_calculate_one_bucket_summary(spark):
+    """A keyed calculate over windows 1m/5m/15m x strides 30s+1m plus a
+    count window plans ONE ``__bkt`` partial aggregation for all three
+    time configs (one scan, one shuffle of bucket partials), merges the
+    count config by union + one groupBy — never a FullOuter join chain —
+    and stays at <= 30 exchanges (58 when every config scanned and
+    shuffled on its own)."""
+    import numpy as np
+
+    from tsflex_spark import FeatureCollection, FeatureDescriptor, MultipleFeatureDescriptors
+    from tsflex_spark.utils.plans import scale_report
+
+    rng = np.random.default_rng(3)
+    n = 2 * 3600
+    pdf = pd.DataFrame(
+        {
+            "rec": np.repeat([0, 1], n // 2),
+            "ts": np.tile(pd.date_range("2024-01-01", periods=n // 2, freq="1s"), 2),
+            "acc": rng.normal(0, 1, n),
+            "hr": rng.normal(70, 5, n),
+        }
+    )
+    fc = FeatureCollection(
+        [
+            MultipleFeatureDescriptors(
+                ["mean", "std", "min", "max", "sum", "count"], ["acc", "hr"],
+                ["1m", "5m", "15m"], ["30s", "1m"],
+            ),
+            FeatureDescriptor("sum", "hr", 240, 120),
+        ]
+    )
+    out = fc.calculate(spark.createDataFrame(pdf), ts_col="ts", key_cols=["rec"],
+                       approve_sparsity=True)
+    plan = plan_of(out, "simple")
+    bucket_partials = [
+        ln for ln in plan.splitlines()
+        if "HashAggregate" in ln and "__bkt" in ln and "partial_" in ln
+    ]
+    assert len(bucket_partials) == 1, bucket_partials
+    assert "FullOuter" not in plan
+    stats = dict(x.split("=", 1) for x in scale_report(out)["stats"])
+    assert int(stats["exchanges"]) <= 30, stats
+    assert len(out.columns) == 2 + 6 * 2 * 3 + 1
 
 
 def test_manual_segments_bucketed_equi_join(spark):

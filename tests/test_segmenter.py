@@ -436,10 +436,38 @@ def test_vectorized_flag_axis1_func(spark):
     assert out["v__bm__w=5"].tolist() == [2.0, 7.0]
 
 
+def _one_level(descs, series, window, strides):
+    """The reference side of the summary-vs-one-level parity tests:
+    ``descs`` plus a UDF-tier numpy sum on the same (window, strides)
+    config. A config holding a Python function never rides the bucket
+    summary, so every native function next to it takes the one-level
+    explode. The extra output is ``<series>__np_sum__w=<window>``."""
+    from tsflex_spark import FeatureCollection, FeatureDescriptor, FuncWrapper
+
+    def np_sum(x):  # nested: shipped to Python workers by value
+        return float(np.sum(x))
+
+    router = FeatureDescriptor(
+        FuncWrapper(np_sum, output_names="np_sum"), series, window, strides
+    )
+    return FeatureCollection([*descs, router])
+
+
+def _assert_np_sum(np_sum, native_sum):
+    """The one-level numpy sum equals the summary's native sum exactly; an
+    empty window is NaN on the UDF tier and the native sum's 0 fill."""
+    np_sum = np.asarray(np_sum, dtype=float)
+    native_sum = np.asarray(native_sum, dtype=float)
+    empty = np.isnan(np_sum)
+    assert (np_sum[~empty] == native_sum[~empty]).all()
+    assert (native_sum[empty] == 0.0).all()
+
+
 def test_two_level_rewrite_equivalence(spark):
-    """The pre-aggregation rewrite must produce exactly the one-level
-    results (decimal/integer inputs → bit-exact) on both TIME and
-    SEQUENCE domains, single and multi stride, with include_final."""
+    """The bucket summary must produce exactly the one-level results
+    (decimal/integer inputs → bit-exact) on both TIME and SEQUENCE
+    domains, single and multi stride, with include_final; the one-level
+    side's numpy sum matches the summary sum exactly."""
     from tsflex_spark import FeatureCollection, FeatureDescriptor
 
     rng = np.random.default_rng(5)
@@ -449,25 +477,20 @@ def test_two_level_rewrite_equivalence(spark):
     pdf = pd.DataFrame({"ts": ts, "v": (rng.integers(0, 10000, size=3000) / 100.0)})
     df = spark.createDataFrame(pdf).withColumn("v", F.col("v").cast("decimal(18,2)"))
 
-    fc = FeatureCollection(
-        [
-            FeatureDescriptor("sum", "v", "4h", ["10m", "15m"]),
-            FeatureDescriptor("count", "v", "4h", ["10m", "15m"]),
-            FeatureDescriptor("min", "v", "4h", ["10m", "15m"]),
-            FeatureDescriptor("max", "v", "4h", ["10m", "15m"]),
-            FeatureDescriptor("first", "v", "4h", ["10m", "15m"]),
-            FeatureDescriptor("last", "v", "4h", ["10m", "15m"]),
-        ]
-    )
-    try:
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 10**9  # force OFF
-        one = fc.calculate(df, ts_col="ts", include_final_window=True).toPandas()
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 1  # force ON
-        two = fc.calculate(df, ts_col="ts", include_final_window=True).toPandas()
-    finally:
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 8
+    descs = [
+        FeatureDescriptor("sum", "v", "4h", ["10m", "15m"]),
+        FeatureDescriptor("count", "v", "4h", ["10m", "15m"]),
+        FeatureDescriptor("min", "v", "4h", ["10m", "15m"]),
+        FeatureDescriptor("max", "v", "4h", ["10m", "15m"]),
+        FeatureDescriptor("first", "v", "4h", ["10m", "15m"]),
+        FeatureDescriptor("last", "v", "4h", ["10m", "15m"]),
+    ]
+    kw = dict(ts_col="ts", include_final_window=True)
+    one = _one_level(descs, "v", "4h", ["10m", "15m"]).calculate(df, **kw).toPandas()
+    two = FeatureCollection(descs).calculate(df, **kw).toPandas()
     one = one.sort_values("ts").reset_index(drop=True)
     two = two.sort_values("ts").reset_index(drop=True)
+    _assert_np_sum(one.pop("v__np_sum__w=4h"), two["v__sum__w=4h"])
     assert list(one.columns) == list(two.columns)
     for c in one.columns:
         a, b = one[c], two[c]
@@ -475,9 +498,51 @@ def test_two_level_rewrite_equivalence(spark):
         assert same.all(), (c, one[~same].head(), two[~same].head())
 
 
+def test_summary_grain_guard(spark):
+    """Bucket-table grouping rule (features/summary.py): configs share one
+    table at the gcd of their windows/strides unless that grain breaks
+    ``(w // g) <= 4 * fanout`` for a config — which then gets its own
+    table at its own gcd, or keeps the one-level explode when even that
+    is too fine. Each table matches the one-level results exactly."""
+    from tsflex_spark import FeatureCollection, FeatureDescriptor
+    from tsflex_spark.features.summary import plan_tables
+
+    # one shared 30 s table for the 1m/5m/15m x 30s+1m grid
+    grid = [(m * 60, (30, 60)) for m in (1, 5, 15)]
+    assert plan_tables(grid) == [(30, [0, 1, 2])]
+    # 61 / 60 is too fine even alone (grain 1: 61 > 4 * 1.02) and 2.5 / 1.0
+    # is not integral: neither buckets nor lowers the shared gcd. The
+    # rest share gcd 15, where 3600 // 15 = 240 > 4 * 6: 3600 / 600 gets
+    # its own table at 600, the others share one at gcd(90, 45, 180) = 45
+    cfgs = [(90, (45,)), (180, (45,)), (3600, (600,)), (61, (60,)), (2.5, (1.0,))]
+    assert plan_tables(cfgs) == [(45, [0, 1]), (600, [2])]
+    rep = FeatureCollection(
+        [FeatureDescriptor("sum", "v", w, list(ss)) for w, ss in cfgs]
+    ).explain_features(is_time=False).set_index("output")
+    assert rep["two_level"].tolist() == [True, True, True, False, False]
+
+    pos = np.arange(0, 8000, 3)
+    df = spark.createDataFrame(pd.DataFrame({"pos": pos, "v": (pos * 7) % 101}))
+    descs = [
+        FeatureDescriptor(f, "v", w, list(ss))
+        for w, ss in cfgs[:4] for f in ("sum", "max", "count")
+    ]
+    routers = [
+        _one_level([], "v", w, list(ss)).descriptors[0] for w, ss in cfgs[:4]
+    ]
+    kw = dict(ts_col="pos", approve_sparsity=True)
+    two = FeatureCollection(descs).calculate(df, **kw).toPandas()
+    one = FeatureCollection(descs + routers).calculate(df, **kw).toPandas()
+    one = one.drop(columns=[c for c in one.columns if "np_sum" in c])
+    assert list(one.columns) == list(two.columns) and len(one) == len(two)
+    for c in one.columns:
+        a, b = one[c], two[c]
+        assert ((a == b) | (a.isna() & b.isna())).all(), c
+
+
 def test_two_level_moments_and_two_series(spark):
     """std (moment) and corr/covar_pop (two-series) decompose through the
-    bucketed rewrite: corr/covar use the SAME exact-sum partials as the
+    bucket summary: corr/covar use the SAME exact-sum partials as the
     one-level builds (bit-exact on decimal inputs); std's textbook formula
     may differ from one-level Welford stddev_pop only in float ulps."""
     from tsflex_spark import FeatureCollection, FeatureDescriptor
@@ -498,22 +563,15 @@ def test_two_level_moments_and_two_series(spark):
         .withColumn("v", F.col("v").cast("decimal(12,2)"))
         .withColumn("w", F.col("w").cast("decimal(12,2)"))
     )
-    fc = FeatureCollection(
-        [
-            FeatureDescriptor("std", "v", "4h", "10m"),
-            FeatureDescriptor("var", "v", "4h", "10m"),
-            FeatureDescriptor("corr", ("v", "w"), "4h", "10m"),
-            FeatureDescriptor("covar_pop", ("v", "w"), "4h", "10m"),
-        ]
-    )
-    try:
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 10**9  # force OFF
-        one = fc.calculate(df, ts_col="ts").toPandas()
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 1  # force ON
-        two = fc.calculate(df, ts_col="ts").toPandas()
-    finally:
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 8
-    one = one.sort_values("ts").reset_index(drop=True)
+    descs = [
+        FeatureDescriptor("std", "v", "4h", "10m"),
+        FeatureDescriptor("var", "v", "4h", "10m"),
+        FeatureDescriptor("corr", ("v", "w"), "4h", "10m"),
+        FeatureDescriptor("covar_pop", ("v", "w"), "4h", "10m"),
+    ]
+    one = _one_level(descs, "v", "4h", "10m").calculate(df, ts_col="ts").toPandas()
+    two = FeatureCollection(descs).calculate(df, ts_col="ts").toPandas()
+    one = one.sort_values("ts").reset_index(drop=True).drop(columns="v__np_sum__w=4h")
     two = two.sort_values("ts").reset_index(drop=True)
     assert list(one.columns) == list(two.columns)
     # two-series natives: identical exact-sum formula both paths -> bit-exact
@@ -689,8 +747,8 @@ def test_dotted_output_names_survive_assembly(spark):
 
 
 def test_two_level_rewrite_equivalence_keyed(spark):
-    """The pre-aggregation rewrite must also be exact with key_cols —
-    per-key bounds anchor each key's bucket lattice independently."""
+    """The bucket summary must also be exact with key_cols — per-key
+    bounds anchor each key's bucket lattice independently."""
     from tsflex_spark import FeatureCollection, FeatureDescriptor
 
     rng = np.random.default_rng(9)
@@ -706,23 +764,19 @@ def test_two_level_rewrite_equivalence_keyed(spark):
         }
     )
     df = spark.createDataFrame(pdf).withColumn("v", F.col("v").cast("decimal(18,2)"))
-    fc = FeatureCollection(
-        [
-            FeatureDescriptor("sum", "v", "4h", "15m"),
-            FeatureDescriptor("count", "v", "4h", "15m"),
-            FeatureDescriptor("max", "v", "4h", "15m"),
-        ]
-    )
-    try:
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 10**9
-        one = fc.calculate(df, ts_col="ts", key_cols=["k"]).toPandas()
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 1
-        two = fc.calculate(df, ts_col="ts", key_cols=["k"]).toPandas()
-    finally:
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 8
+    descs = [
+        FeatureDescriptor("sum", "v", "4h", "15m"),
+        FeatureDescriptor("count", "v", "4h", "15m"),
+        FeatureDescriptor("max", "v", "4h", "15m"),
+    ]
+    kw = dict(ts_col="ts", key_cols=["k"])
+    one = _one_level(descs, "v", "4h", "15m").calculate(df, **kw).toPandas()
+    two = FeatureCollection(descs).calculate(df, **kw).toPandas()
     one = one.sort_values(["k", "ts"]).reset_index(drop=True)
     two = two.sort_values(["k", "ts"]).reset_index(drop=True)
     assert len(one) == len(two)
+    _assert_np_sum(one.pop("v__np_sum__w=4h"), two["v__sum__w=4h"])
+    assert list(one.columns) == list(two.columns)
     for c in one.columns:
         same = (one[c] == two[c]) | (one[c].isna() & two[c].isna())
         assert same.all(), c
@@ -896,7 +950,7 @@ def test_mode_native_categorical(spark):
 
 def test_two_level_threshold_counts(spark):
     """count_above/count_below/range_count/frac_above decompose through
-    the bucketed rewrite bit-exactly (pure counts); two different
+    the bucket summary bit-exactly (pure counts); two different
     thresholds on one config get distinct partials."""
     from tsflex_spark import FeatureCollection, FeatureDescriptor, FuncWrapper
 
@@ -906,23 +960,16 @@ def test_two_level_threshold_counts(spark):
     )
     pdf = pd.DataFrame({"ts": ts, "v": rng.integers(0, 100, size=2500).astype(float)})
     df = spark.createDataFrame(pdf)
-    fc = FeatureCollection(
-        [
-            FeatureDescriptor(FuncWrapper("count_above", output_names="a50", t=50.0), "v", "4h", "10m"),
-            FeatureDescriptor(FuncWrapper("count_above", output_names="a80", t=80.0), "v", "4h", "10m"),
-            FeatureDescriptor(FuncWrapper("count_below", output_names="b20", t=20.0), "v", "4h", "10m"),
-            FeatureDescriptor(FuncWrapper("range_count", output_names="r", lo=30.0, hi=60.0), "v", "4h", "10m"),
-            FeatureDescriptor(FuncWrapper("frac_above", output_names="f", t=50.0), "v", "4h", "10m"),
-        ]
-    )
-    try:
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 10**9
-        one = fc.calculate(df, ts_col="ts").toPandas()
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 1
-        two = fc.calculate(df, ts_col="ts").toPandas()
-    finally:
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 8
-    one = one.sort_values("ts").reset_index(drop=True)
+    descs = [
+        FeatureDescriptor(FuncWrapper("count_above", output_names="a50", t=50.0), "v", "4h", "10m"),
+        FeatureDescriptor(FuncWrapper("count_above", output_names="a80", t=80.0), "v", "4h", "10m"),
+        FeatureDescriptor(FuncWrapper("count_below", output_names="b20", t=20.0), "v", "4h", "10m"),
+        FeatureDescriptor(FuncWrapper("range_count", output_names="r", lo=30.0, hi=60.0), "v", "4h", "10m"),
+        FeatureDescriptor(FuncWrapper("frac_above", output_names="f", t=50.0), "v", "4h", "10m"),
+    ]
+    one = _one_level(descs, "v", "4h", "10m").calculate(df, ts_col="ts").toPandas()
+    two = FeatureCollection(descs).calculate(df, ts_col="ts").toPandas()
+    one = one.sort_values("ts").reset_index(drop=True).drop(columns="v__np_sum__w=4h")
     two = two.sort_values("ts").reset_index(drop=True)
     assert list(one.columns) == list(two.columns)
     for c in one.columns:
@@ -979,8 +1026,8 @@ def test_native_two_series_diff_features(spark):
 
 
 def test_two_level_diff_features_parity(spark):
-    """mean_abs_diff / rmse decompose through the two-level fine-stride
-    rewrite bit-identically to the one-level plan (decimal inputs: the
+    """mean_abs_diff / rmse decompose through the bucket summary at a fine
+    stride bit-identically to the one-level plan (decimal inputs: the
     partial sums are exact, the final double formula is token-identical)."""
     import numpy as np
     import pandas as pd
@@ -1003,7 +1050,7 @@ def test_two_level_diff_features_parity(spark):
     fine = FeatureCollection(descs("1s")).calculate(
         sdf, ts_col="ts", approve_sparsity=True
     ).toPandas()
-    coarse = FeatureCollection(descs("64s")).calculate(
+    coarse = _one_level(descs("64s"), "a", "64s", "64s").calculate(
         sdf, ts_col="ts", approve_sparsity=True
     ).toPandas()
     m = fine.merge(coarse, on="ts", suffixes=("_2l", "_1l"))
@@ -1116,7 +1163,7 @@ def test_native_change_features_shift_recipe(spark):
 
 def test_two_level_new_natives_parity(spark):
     """argmax/argmin/variation_coefficient + mean_diff/cid_ce/crossings
-    decompose through the bucketed two-level rewrite identically to the
+    decompose through the bucket summary identically to the
     one-level plan (decimal inputs → exact partial sums; argmax partial
     structs replay the one-level ordering)."""
     import numpy as np
@@ -1146,15 +1193,10 @@ def test_two_level_new_natives_parity(spark):
         FeatureDescriptor("sum_abs_diff", ("v", "v_lag"), "64s", "64s"),
         FeatureDescriptor("abs_max", "v", "64s", "64s"),
     ]
-    fc = FeatureCollection(descs)
-    try:
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 10**9
-        one = fc.calculate(sdf, ts_col="ts", approve_sparsity=True).toPandas()
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 1
-        two = fc.calculate(sdf, ts_col="ts", approve_sparsity=True).toPandas()
-    finally:
-        FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 8
-    one = one.sort_values("ts").reset_index(drop=True)
+    kw = dict(ts_col="ts", approve_sparsity=True)
+    one = _one_level(descs, "v", "64s", "64s").calculate(sdf, **kw).toPandas()
+    two = FeatureCollection(descs).calculate(sdf, **kw).toPandas()
+    one = one.sort_values("ts").reset_index(drop=True).drop(columns="v__np_sum__w=1m4s")
     two = two.sort_values("ts").reset_index(drop=True)
     assert len(one) >= 8 and list(one.columns) == list(two.columns)
     for c in one.columns:
@@ -1344,10 +1386,10 @@ def test_segmenter_fuzz_time_domain(spark):
 
 
 def test_two_level_rewrite_fuzz(spark):
-    """Hypothesis twin of the two-level equivalence test: RANDOM window /
+    """Hypothesis twin of the summary equivalence test: RANDOM window /
     stride / function subsets / irregular integer timestamps must produce
-    bit-identical results with the pre-aggregation rewrite forced ON vs
-    OFF (exact ops on integer data — no float tolerance needed)."""
+    bit-identical results from the bucket summary and the one-level
+    explode (exact ops on integer data — no float tolerance needed)."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
@@ -1371,22 +1413,18 @@ def test_two_level_rewrite_fuzz(spark):
         ts = np.array(sorted(ts_set), dtype=np.int64)
         vals = (ts * 13 % 97).astype(np.int64)
         df = spark.createDataFrame(pd.DataFrame({"ts": ts, "v": vals}))
-        fc = FeatureCollection(
-            [FeatureDescriptor(f, "v", window, [float(s) for s in strides])
-             for f in sorted(funcs)]
-        )
+        fstrides = [float(s) for s in strides]
+        descs = [FeatureDescriptor(f, "v", window, fstrides) for f in sorted(funcs)]
         kw = dict(
             ts_col="ts", include_final_window=final, approve_sparsity=True
         )
-        try:
-            FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 10**9  # force OFF
-            one = fc.calculate(df, **kw).toPandas()
-            FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 1  # force ON
-            two = fc.calculate(df, **kw).toPandas()
-        finally:
-            FeatureCollection.TWO_LEVEL_FANOUT_THRESHOLD = 8
+        one = _one_level(descs, "v", window, fstrides).calculate(df, **kw).toPandas()
+        two = FeatureCollection(descs).calculate(df, **kw).toPandas()
         one = one.sort_values("ts").reset_index(drop=True)
         two = two.sort_values("ts").reset_index(drop=True)
+        np_sum = one.pop(f"v__np_sum__w={window}")
+        if "sum" in funcs:
+            _assert_np_sum(np_sum, two[f"v__sum__w={window}"])
         assert list(one.columns) == list(two.columns)
         assert len(one) == len(two), (len(one), len(two))
         for c in one.columns:

@@ -251,6 +251,38 @@ def ivf_topk(
     return scored.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
 
 
+def _exact_d2_topk(Q, C, S, top: int):
+    """Per-query top-``top`` by EXACT squared euclidean distance.
+
+    ``S`` is the expanded-form ``‖q‖² − 2q·c + ‖c‖²`` matrix: one BLAS
+    matmul, but its cancellation error (up to a few ulps of ``‖q‖²+‖c‖²``)
+    swamps the distance of near-duplicates, so an identical vector can
+    score above a 1-ulp-perturbed one and d2 can go negative. The
+    candidates are every column within that error bound of the k-th
+    expanded score, re-scored as ``Σ(q−c)²`` (k·d flops per query, no
+    cancellation), then cut to ``top``. Returns ``(idx, d2)``, both
+    ``(n_queries, top)``.
+    """
+    import numpy as np
+
+    n = S.shape[1]
+    kth = np.partition(S, top - 1, axis=1)[:, top - 1 : top]
+    qq = (Q * Q).sum(axis=1, keepdims=True)
+    tol = 8.0 * (Q.shape[1] + 2) * np.finfo(np.float64).eps * (qq + (C * C).sum(axis=1).max())
+    m = int(min(n, max(top, (S <= kth + 2.0 * tol).sum(axis=1).max())))
+    cand = np.argpartition(S, m - 1, axis=1)[:, :m] if m < n else np.tile(np.arange(n), (len(Q), 1))
+    exact = np.empty(cand.shape, dtype=np.float64)
+    # chunk the queries so the (rows, m, d) difference block stays small
+    step = max(1, (1 << 22) // max(1, m * Q.shape[1]))
+    for lo in range(0, len(Q), step):
+        d = Q[lo : lo + step, None, :] - C[cand[lo : lo + step]]
+        exact[lo : lo + step] = np.einsum("ijk,ijk->ij", d, d)
+    if m > top:
+        keep = np.argpartition(exact, top - 1, axis=1)[:, :top]
+        return np.take_along_axis(cand, keep, axis=1), np.take_along_axis(exact, keep, axis=1)
+    return cand, exact
+
+
 def knn_join(
     df: DataFrame,
     queries: DataFrame,
@@ -265,7 +297,9 @@ def knn_join(
     most similar corpus vectors — ``(q_id, vec_id, cosine, rank)`` for
     ``metric='cosine'`` (descending similarity) or
     ``(q_id, vec_id, d2, rank)`` for ``metric='euclidean'`` (ascending
-    squared distance; one BLAS ``||q||² − 2·Q·Cᵀ + ||c||²`` per block).
+    squared distance; one BLAS ``||q||² − 2·Q·Cᵀ + ||c||²`` per block
+    picks the candidates, which are re-scored as exact ``Σ(q−c)²``, so
+    near-duplicates rank and score exactly).
 
     This is the retrieval-dataset builder (mine hard negatives / build
     eval sets for a whole query table at once), not the single-vector
@@ -335,13 +369,14 @@ def knn_join(
                     - 2.0 * (Q @ C.T)
                     + (C * C).sum(axis=1)
                 )
-                # float cancellation can push near-identical vectors
-                # slightly negative; clamp so d2 >= 0 holds downstream
-                np.maximum(S, 0.0, out=S)
             top = min(kk, S.shape[1])
-            idx = np.argpartition(S, top - 1, axis=1)[:, :top]
+            if metric == "cosine":
+                idx = np.argpartition(S, top - 1, axis=1)[:, :top]
+                vals = np.take_along_axis(S, idx, axis=1)
+            else:
+                idx, vals = _exact_d2_topk(Q, C, S, top)
             ids = pdf[id_col].to_numpy()
-            vals = np.take_along_axis(S, idx, axis=1).ravel()
+            vals = vals.ravel()
             yield pd.DataFrame(
                 {
                     q_id_col: np.repeat(qids, top),

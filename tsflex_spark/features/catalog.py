@@ -410,9 +410,9 @@ def native_names() -> list[str]:
 
 
 # --- two-level (partial/final) decomposition --------------------------------
-# For the pre-aggregation rewrite (feature_collection._run_grid_two_level):
-# a decomposable aggregate is computed as partial aggregates over aligned
-# buckets, then a final aggregate over each segment's buckets. Only
+# For the shared bucket summary (features/summary.py): a decomposable
+# aggregate is computed as partial aggregates over aligned buckets, then a
+# final aggregate over each segment's buckets. Only
 # algebraically-exact decompositions are registered — order-sensitive or
 # holistic functions (median/quantile/std/var/skew/kurt/slope/n_unique)
 # keep the one-level path.
@@ -486,7 +486,7 @@ _DECOMPOSABLE: dict[str, tuple] = {
     # inputs; for double inputs this is the textbook formula — decomposable
     # but subject to cancellation where one-level Welford (stddev_pop)
     # is stable, hence the possible last-ulp drift already documented on
-    # the two-level rewrite. ddof handled in decomposition().
+    # the bucket summary. ddof handled in decomposition().
     "var": (("sum", "sumsq", "cnt"), _var_pop_final),
     "nanvar": (("sum", "sumsq", "cnt"), _var_pop_final),
     "std": (("sum", "sumsq", "cnt"), lambda p: _sqrt_nonneg(_var_pop_final(p))),

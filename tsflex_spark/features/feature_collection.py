@@ -8,7 +8,10 @@ but compilation FUSES every descriptor that shares the same numeric
 expressions in that one groupBy (native tier), unrecognized Python callables
 run in one Arrow ``applyInPandas`` over the same grouping (UDF tier). The
 reference runs each function as a separate multiprocess task; Catalyst fuses
-ours into a handful of stages.
+ours into a handful of stages. Configs whose functions all decompose go one
+step further: every such config of a ``calculate()`` rolls up from ONE shared
+bucket table (``features/summary.py``), and all compiled parts merge through
+one ``unionByName`` + ``groupBy`` instead of a chain of full outer joins.
 
 Output naming grammar (API — ``reduce()`` parses it back):
 ``'|'.join(series)__<output>__w=<win_str>`` (reference strided_rolling.py:502-507).
@@ -28,6 +31,7 @@ from pyspark.sql import types as T
 
 from tsflex_spark.features.feature import FeatureDescriptor, MultipleFeatureDescriptors
 from tsflex_spark.features import segmenter as seg
+from tsflex_spark.features import summary
 from tsflex_spark.features.segmenter import (
     END,
     OUT_IDX,
@@ -306,62 +310,49 @@ class FeatureCollection:
         descriptor hits, BEFORE running anything (no Spark jobs, no data).
 
         Columns: output, series, window, strides, tier
-        (``native``/``native2``/``udf``), fanout (row-duplication factor
-        of the one-level plan), two_level (whether the pre-aggregation
-        rewrite would apply to the descriptor's config). The Spark analog
-        of ``df.explain()`` for the feature compiler: a ``udf`` row in the
+        (``native``/``native2``/``udf``, or ``count`` for an int window on
+        a TIME index — count-based windows segment in sample-position
+        space on their own path), fanout (row-duplication factor of the
+        one-level plan; samples per stride for ``count``), two_level
+        (whether the descriptor's config rides the shared bucket summary
+        — all functions decomposable, integral window/strides, within
+        the grain guard; see features/summary.py). The Spark analog of
+        ``df.explain()`` for the feature compiler: a ``udf`` row in the
         hot path is the first thing to look for when a job is slow.
         """
-        from math import gcd
-
-        from tsflex_spark.features.catalog import decomposition, decomposition2
-
         rows = []
         # group into configs exactly like calculate() does
         cfg_entries: Dict[Tuple, List[Tuple]] = {}
         for (series_tuple, win_str), fds in self._feature_desc_dict.items():
             for fd in fds:
                 if fd.window is None or not fd.stride:
-                    cfg = ("manual",)
+                    cfg: Tuple = ("manual",)
+                elif is_time and isinstance(fd.window, int) and not isinstance(fd.window, bool):
+                    cfg = ("count", int(fd.window), tuple(sorted({int(x) for x in fd.stride})))
                 else:
                     window_n = to_numeric_units(fd.window, is_time)
                     strides_n = tuple(
-                        sorted({to_numeric_units(s, is_time) for s in fd.stride})
+                        sorted({to_numeric_units(x, is_time) for x in fd.stride})
                     )
                     cfg = (window_n, strides_n)
                 cfg_entries.setdefault(cfg, []).append((series_tuple, win_str, fd))
+        rides = {cfg for _g, members in self._plan_summary(cfg_entries) for _i, cfg, _it in members}
         for cfg, entries in cfg_entries.items():
-            native, udf = self._split_tiers(entries)
-            decomposable = not udf and bool(native)
-            for series_tuple, win_str, fd, spec in native:
-                if getattr(spec, "arity", 1) == 2:
-                    d = decomposition2(spec.name, fd.function.kwargs)
-                else:
-                    d = decomposition(spec.name, fd.function.kwargs)
-                if d is None:
-                    decomposable = False
+            if cfg[0] == "manual":
+                fanout = None
+            elif cfg[0] == "count":
+                fanout = float(cfg[1]) / min(cfg[2])
+            else:
+                fanout = float(cfg[0]) / min(cfg[1])
             for series_tuple, win_str, fd in entries:
-                if len(series_tuple) == 1:
+                if cfg[0] == "count":
+                    tier = "count"
+                elif len(series_tuple) == 1:
                     tier = "native" if fd.function.native_spec else "udf"
                 elif len(series_tuple) == 2:
                     tier = "native2" if fd.function.native_spec2 else "udf"
                 else:
                     tier = "udf"
-                if cfg[0] == "manual":
-                    fanout, two = None, False
-                else:
-                    w, ss = cfg
-                    fanout = float(w) / min(ss)
-                    ints = all(
-                        float(x).is_integer() for x in (w, *ss)
-                    )
-                    g = gcd(*(int(x) for x in (w, *ss))) if ints else 0
-                    two = (
-                        decomposable
-                        and fanout >= self.TWO_LEVEL_FANOUT_THRESHOLD
-                        and g > 0
-                        and (int(w) // g) <= 4 * fanout
-                    )
                 for o in fd.function.output_names:
                     rows.append(
                         {
@@ -371,7 +362,7 @@ class FeatureCollection:
                             "strides": list(fd.stride) if fd.stride else None,
                             "tier": tier,
                             "fanout": fanout,
-                            "two_level": two,
+                            "two_level": cfg in rides,
                         }
                     )
         return pd.DataFrame(
@@ -505,13 +496,20 @@ class FeatureCollection:
 
         check_sparsity = not approve_sparsity and not manual
 
-        outputs: List[DataFrame] = []
+        # every decomposable time/sequence grid config rides a shared
+        # bucket summary (features/summary.py); holistic, UDF, count-based,
+        # manual and too-fine configs keep their own paths
+        tables = dict(enumerate(self._plan_summary(configs)))
+        table_of = {cfg: ti for ti, (_g, ms) in tables.items() for _i, cfg, _it in ms}
+
+        from tsflex_spark.utils.logging import log_execution
+
+        parts: List[Tuple[DataFrame, Optional[List[Tuple[int, str, str]]]]] = []
         for cfg, entries in configs.items():
             # execution-time logging (reference logs one line per feature
             # function; Spark fuses a config's functions into one job, so
-            # the logged unit is the compiled config — SURVEY §2.12)
-            from tsflex_spark.utils.logging import log_execution
-
+            # the logged unit is the compiled config — SURVEY §2.12; a
+            # shared summary's build is logged on its first member)
             funcs = "|".join(sorted({fd.function.func_name for _, _, fd in entries}))
             series = "|".join(sorted({s for st, _, _fd in entries for s in st}))
             # log the FULL output column names (naming grammar), matching
@@ -534,36 +532,97 @@ class FeatureCollection:
                 win_lbl = "|".join(sorted({ws for _, ws, _fd in entries}))
             stride_lbl = str(list(cfg[2]) if cfg[0] == "count" else cfg[1:]).replace(" ", "")
             with log_execution(funcs, series, win_lbl, stride_lbl, outs, logging_file_path):
-                if cfg[0] == "manual":
-                    out = self._run_manual_config(
+                if cfg in table_of:
+                    table = tables.pop(table_of[cfg], None)
+                    if table is not None:
+                        parts.append(
+                            self._run_summary(
+                                data_n, _bounds(), *table, f"__s{table_of[cfg]}_",
+                                include_final_window, key_cols, window_idx, domain,
+                                check_sparsity, include_empty_windows,
+                            )
+                        )
+                elif cfg[0] == "manual":
+                    parts.append((self._run_manual_config(
                         data_n, _bounds(), entries, cfg[1], segment_start_idxs,
-                        segment_end_idxs, key_cols, window_idx, domain, ts_col,
-                    )
+                        segment_end_idxs, key_cols, window_idx, domain,
+                    ), None))
                 elif cfg[0] == "count":
-                    out = self._run_count_config(
+                    parts.append((self._run_count_config(
                         data_n, entries, cfg[1], list(cfg[2]),
-                        include_final_window, key_cols, window_idx, bound_method, ts_col,
+                        include_final_window, key_cols, window_idx, bound_method,
                         include_empty_windows=include_empty_windows,
-                    )
+                    ), None))
                 else:
                     window_n, strides_n = cfg
-                    out = self._run_grid_config(
+                    parts.append((self._run_grid_config(
                         data_n, _bounds(), entries, window_n, list(strides_n),
-                        include_final_window, key_cols, window_idx, domain, ts_col,
+                        include_final_window, key_cols, window_idx, domain,
                         check_sparsity=check_sparsity,
                         include_empty_windows=include_empty_windows,
-                    )
-            outputs.append(out)
+                    ), None))
 
         if not return_df:
-            return outputs
-        result = outputs[0]
-        for other in outputs[1:]:
-            result = result.join(other, on=[ts_col, *key_cols], how="full")
-        feat_cols = sorted(c for c in result.columns if c not in (ts_col, *key_cols))
-        # output names may contain dots (user output_names) — backtick-quote
-        return result.select(
-            ts_col, *key_cols, *[F.col(f"`{c}`") for c in feat_cols]
+            return [self._assemble([p], key_cols, ts_col, domain) for p in parts]
+        return self._assemble(parts, key_cols, ts_col, domain)
+
+    @staticmethod
+    def _assemble(
+        parts: List[Tuple[DataFrame, Optional[List[Tuple[int, str, str]]]]],
+        key_cols: List[str],
+        ts_col: str,
+        domain: DataType,
+    ) -> DataFrame:
+        """Merge compiled parts into the wide result frame.
+
+        Every part carries ``keys, OUT_IDX`` plus either named feature
+        columns (one-level, count-based, manual paths) or, for a bucket
+        summary, long-format rows tagged with ``summary.CFG`` and the
+        ``(config, value column, output name)`` map. One
+        ``unionByName`` + ``groupBy(keys, OUT_IDX)`` pivots the summary
+        configs into columns and merges the other parts in the same
+        aggregation (each output column has exactly one source row per
+        group) — no full-outer-join chain. A single named part, or a
+        one-config summary, needs no aggregation at all.
+        """
+        q = summary._q
+        # per output: its name, its source inside the merge aggregation,
+        # and its column when the part is used as is
+        names: List[str] = []
+        srcs: List[str] = []
+        direct: List[str] = []
+        for frame, outs in parts:
+            if outs is None:
+                for c in frame.columns:
+                    if c != OUT_IDX and c not in key_cols:
+                        names.append(c)
+                        srcs.append(q(c))
+                        direct.append(q(c))
+            else:
+                for cfg_id, col, name in outs:
+                    names.append(name)
+                    srcs.append(f"IF({summary.CFG} = {cfg_id}, {q(col)}, NULL)")
+                    direct.append(q(col))
+        if len(parts) == 1 and (
+            parts[0][1] is None or len({c for c, _, _ in parts[0][1]}) == 1
+        ):
+            result, exprs = parts[0][0], direct
+        else:
+            union = parts[0][0]
+            for frame, _outs in parts[1:]:
+                union = union.unionByName(frame, allowMissingColumns=True)
+            result = union.groupBy(*key_cols, OUT_IDX).agg(
+                *[F.expr(f"max({src}) AS {q(n)}") for n, src in zip(names, srcs)]
+            )
+            exprs = [q(n) for n in names]
+        if domain == DataType.TIME:
+            ts = f"timestamp_micros(CAST({OUT_IDX} AS BIGINT)) AS {q(ts_col)}"
+        else:
+            ts = f"{OUT_IDX} AS {q(ts_col)}"
+        order = sorted(range(len(names)), key=names.__getitem__)
+        # output names may contain dots (user output_names) — quoted
+        return result.selectExpr(
+            ts, *[q(k) for k in key_cols], *[f"{exprs[i]} AS {q(names[i])}" for i in order]
         ).orderBy(*key_cols, ts_col)
 
     def calculate_streaming(
@@ -674,23 +733,29 @@ class FeatureCollection:
             )
         return outputs[0] if len(outputs) == 1 else outputs
 
-    def _attach_sparsity_observer(self, out: DataFrame, needed: List[str]) -> DataFrame:
+    def _attach_sparsity_observer(
+        self, out: DataFrame, counts: List[Tuple[str, str]]
+    ) -> DataFrame:
         """Non-eager sparsity check (reference strided_rolling.py:230-239
         warns on unequal per-window sample counts, ON by default).
 
         Instead of an extra eager job per config (which would double every
         ``calculate()``'s cluster work), the per-segment counts ride the
-        config's OWN aggregation as hidden ``__spc_i`` columns and are
+        config's OWN aggregation as hidden count columns and are
         reduced by ``DataFrame.observe`` — metrics Spark collects for free
         while the first real action on the result runs. A daemon thread
         waits on the observation and emits the warning; if the user never
         executes the plan, no work happens and no warning fires (lazy
         engine semantics). ``observe`` forbids DISTINCT aggregates, so
         non-uniformity is detected as ``min(count) != max(count)`` —
-        equivalent for "are all window counts equal". Segments absent from
-        the data side (restored by the spine join) count as 0 via the
-        coalesce, so gaps vs. empty windows are detected like the
-        reference's per-window counts.
+        equivalent for "are all window counts equal". ``counts`` pairs
+        each series with a SQL count expression over ``out``'s rows;
+        empty windows must read 0 (the one-level path coalesces the
+        spine join's NULLs, a bucket summary sums 0-count spine rows) and
+        rows that are not a window of that config NULL (a summary's
+        per-config filter), so gaps vs. empty windows are detected like
+        the reference's per-window counts. Several count expressions for
+        one series (one per summary config) warn at most once.
 
         Known Spark 4 (classic) interaction: once ANY Observation has
         been registered in a session — pending or resolved — MLlib's
@@ -708,21 +773,21 @@ class FeatureCollection:
 
         obs = Observation()
         exprs: List[Column] = []
-        for i in range(len(needed)):
-            c = F.coalesce(F.col(f"__spc_{i}"), F.lit(0))
-            exprs.append(F.min(c).alias(f"mn_{i}"))
-            exprs.append(F.max(c).alias(f"mx_{i}"))
+        for i, (_s, c) in enumerate(counts):
+            exprs.append(F.expr(f"min({c}) AS mn_{i}"))
+            exprs.append(F.expr(f"max({c}) AS mx_{i}"))
         out = out.observe(obs, exprs[0], *exprs[1:])
 
-        series = list(needed)
+        series = [s for s, _c in counts]
 
         def _watch() -> None:
             try:
                 m = obs.get  # blocks until the first action on `out` ends
             except Exception:
                 return
-            for i, s in enumerate(series):
-                if m.get(f"mn_{i}") != m.get(f"mx_{i}"):
+            gappy = {s for i, s in enumerate(series) if m.get(f"mn_{i}") != m.get(f"mx_{i}")}
+            for s in dict.fromkeys(series):
+                if s in gappy:
                     warnings.warn(
                         f"There are gaps in the sequence of the {s!r} series!",
                         RuntimeWarning,
@@ -734,7 +799,7 @@ class FeatureCollection:
         # one thread object per executed calculate()
         _SPARSITY_WATCHERS[:] = [w for w in _SPARSITY_WATCHERS if w.is_alive()]
         _SPARSITY_WATCHERS.append(t)
-        return out.drop(*[f"__spc_{i}" for i in range(len(needed))])
+        return out
 
     # ----------------------------------------------------------- internals
     def _split_tiers(
@@ -754,6 +819,75 @@ class FeatureCollection:
             else:
                 udf.append((series_tuple, win_str, fd))
         return native, udf
+
+    def _decomposed(self, entries: List[Tuple]) -> Optional[List[summary.Item]]:
+        """Summary items of a config whose functions are all native and
+        decomposable (``catalog.decomposition``/``decomposition2``), else
+        None — holistic aggregates and the UDF tier keep the one-level
+        path."""
+        from tsflex_spark.features.catalog import decomposition, decomposition2
+
+        native, udf = self._split_tiers(entries)
+        if udf or not native:
+            return None
+        items: List[summary.Item] = []
+        for series_tuple, win_str, fd, spec in native:
+            kwargs = fd.function.kwargs
+            d = (decomposition2 if getattr(spec, "arity", 1) == 2 else decomposition)(
+                spec.name, kwargs
+            )
+            if d is None:
+                return None
+            out_name = _col_name(series_tuple, fd.function.output_names[0], win_str)
+            items.append((series_tuple, out_name, spec, kwargs, d))
+        return items
+
+    def _plan_summary(
+        self, configs: Dict[Tuple, List[Tuple]]
+    ) -> List[Tuple[int, List[Tuple[int, Tuple, List[summary.Item]]]]]:
+        """The bucket tables of ``configs`` (``summary.plan_tables``):
+        ``[(grain, [(config id, config, summary items), ...]), ...]``."""
+        items = {
+            cfg: self._decomposed(entries)
+            for cfg, entries in configs.items()
+            if cfg[0] not in ("manual", "count")
+        }
+        grid = [cfg for cfg, it in items.items() if it is not None]
+        return [
+            (g, [(i, grid[i], items[grid[i]]) for i in idxs])
+            for g, idxs in summary.plan_tables(grid)
+        ]
+
+    def _run_summary(
+        self,
+        data_n: DataFrame,
+        bounds: DataFrame,
+        g: int,
+        members: List[Tuple[int, Tuple, List[summary.Item]]],
+        prefix: str,
+        include_final_window: bool,
+        key_cols: List[str],
+        window_idx: str,
+        domain: DataType,
+        check_sparsity: bool,
+        include_empty_windows: bool,
+    ) -> Tuple[DataFrame, List[Tuple[int, str, str]]]:
+        """One bucket summary at grain ``g`` for the decomposable grid
+        configs ``members`` (see features/summary.py); returns the
+        long-format frame and its ``(config id, value column, output
+        name)`` map for ``_assemble``."""
+        needed = sorted({s for _i, _cfg, items in members for st, *_r in items for s in st})
+        frame, outs, spc = summary.build(
+            data_n.select(TSN, *key_cols, *needed), bounds,
+            [(i, cfg[0], list(cfg[1]), items) for i, cfg, items in members], g,
+            include_final_window, key_cols, window_idx, domain,
+            include_empty_windows, prefix, needed if check_sparsity else [],
+        )
+        if spc:
+            frame = self._attach_sparsity_observer(
+                frame, [(s, expr) for s, expr, _c in spc]
+            ).drop(*dict.fromkeys(c for _s, _e, c in spc))
+        return frame, outs
 
     def _native_agg_exprs(self, native_entries: List[Tuple]) -> List[Column]:
         exprs = []
@@ -962,20 +1096,14 @@ class FeatureCollection:
         key_cols: List[str],
         window_idx: str,
         domain: DataType,
-        ts_col: str,
         check_sparsity: bool = False,
         include_empty_windows: bool = True,
     ) -> DataFrame:
+        """One-level plan: explode every row into its segments, one
+        ``groupBy(keys, segment)``. Holistic and UDF configs (and grid
+        configs too fine for a bucket table) take this path."""
         native, udf = self._split_tiers(entries)
         needed = sorted({s for series_tuple, _, _fd in entries for s in series_tuple})
-        two = self._try_two_level(
-            data_n.select(TSN, *key_cols, *needed), bounds, native, udf,
-            window_n, strides_n, include_final_window, key_cols, window_idx,
-            domain, ts_col, check_sparsity=check_sparsity,
-            include_empty_windows=include_empty_windows,
-        )
-        if two is not None:
-            return two
         assigned = seg.assign_segments(
             data_n.select(TSN, *key_cols, *needed),
             bounds, window_n, strides_n, include_final_window, key_cols,
@@ -1014,165 +1142,12 @@ class FeatureCollection:
         for colname, fill in self._native_empty_fills(native).items():
             out = out.withColumn(colname, F.coalesce(F.col(colname), F.lit(fill)))
         if spc:
-            out = self._attach_sparsity_observer(out, needed)
+            out = self._attach_sparsity_observer(
+                out,
+                [(s, f"coalesce(__spc_{i}, 0)") for i, s in enumerate(needed)],
+            ).drop(*[f"__spc_{i}" for i in range(len(needed))])
         out = out.withColumn(OUT_IDX, seg.out_idx_expr(window_idx, domain))
-        out = out.withColumn(ts_col, seg.output_index(F.col(OUT_IDX), domain))
-        return out.drop(SEG, SEG_END, OUT_IDX)
-
-    # pre-aggregation rewrite threshold: rewrite when a row would be
-    # duplicated into >= this many segments by the one-level explode
-    TWO_LEVEL_FANOUT_THRESHOLD = 8
-
-    def _try_two_level(
-        self,
-        data_sel: DataFrame,
-        bounds: DataFrame,
-        native: List[Tuple],
-        udf: List[Tuple],
-        window_n,
-        strides_n: List,
-        include_final_window: bool,
-        key_cols: List[str],
-        window_idx: str,
-        domain: DataType,
-        ts_col: str,
-        check_sparsity: bool = False,
-        include_empty_windows: bool = True,
-    ) -> Optional[DataFrame]:
-        """Two-level pre-aggregation for small-stride/large-window configs.
-
-        The one-level plan explodes every row into ~window/stride segments
-        — a window/stride data-duplication factor in the shuffle, fatal at
-        100 TB with fine strides. When every requested aggregate is
-        algebraically decomposable (catalog._DECOMPOSABLE), rewrite:
-
-        1. bucket rows at ``grain = gcd(window, strides)`` aligned to the
-           per-key START — one groupBy, NO row duplication, map-side
-           partial aggregation;
-        2. assign the (tiny) bucket table to segments with the normal
-           segment-assignment logic in bucket space (grain divides both
-           window and every stride, so buckets nest exactly);
-        3. final-aggregate partials per segment; same spine/fill tail.
-
-        Shuffle volume drops from fanout x data to data + fanout x
-        n_buckets. Derived results (mean/rms) may differ from the
-        one-level plan in the last float ulp (double-sum reassociation) —
-        exact for decimal/integer inputs. Returns None when the rewrite
-        does not apply.
-        """
-        from math import gcd
-
-        from tsflex_spark.features.catalog import (
-            decomposition,
-            decomposition2,
-            pair_partial_builder,
-            partial_builder,
-        )
-
-        if udf or not native:
-            return None
-        nums = []
-        for x in [window_n, *strides_n]:
-            if isinstance(x, bool):
-                return None
-            if isinstance(x, int):
-                nums.append(x)
-            elif isinstance(x, float) and x.is_integer():
-                nums.append(int(x))
-            else:
-                return None
-        w, ss = nums[0], nums[1:]
-        fanout = w / min(ss)
-        if fanout < self.TWO_LEVEL_FANOUT_THRESHOLD:
-            return None
-        g = gcd(w, *ss)
-        # a tiny gcd (stride not dividing window) makes buckets ~rows: no win
-        if g <= 0 or (w // g) > 4 * fanout:
-            return None
-        decos = []
-        for series_tuple, win_str, fd, spec in native:
-            if getattr(spec, "arity", 1) == 2:
-                d = decomposition2(spec.name, fd.function.kwargs)
-            else:
-                d = decomposition(spec.name, fd.function.kwargs)
-            if d is None:
-                return None
-            decos.append(d)
-
-        # 1. bucket partials (aligned to per-key START)
-        if key_cols:
-            joined = data_sel.join(F.broadcast(bounds), on=list(key_cols), how="inner")
-        else:
-            joined = data_sel.crossJoin(F.broadcast(bounds))
-        joined = joined.where((F.col(TSN) >= F.col(START)) & (F.col(TSN) <= F.col(END)))
-        bkt = F.col(START) + F.floor((F.col(TSN) - F.col(START)) / F.lit(g)).cast("long") * F.lit(g)
-        joined = joined.withColumn("__bkt", bkt)
-
-        partial_exprs: Dict[Tuple[str, str], str] = {}
-        agg_list: List[Column] = []
-        for (series_tuple, _ws, _fd, spec), (kinds, _fin) in zip(native, decos):
-            pair = getattr(spec, "arity", 1) == 2
-            sname = "|".join(series_tuple) if pair else series_tuple[0]
-            for kind in kinds:
-                key = (kind, sname)
-                if key not in partial_exprs:
-                    alias = f"__p_{kind}_{sname}"
-                    partial_exprs[key] = alias
-                    if pair:
-                        expr = pair_partial_builder(kind)(
-                            F.col(series_tuple[0]), F.col(series_tuple[1])
-                        )
-                    else:
-                        expr = partial_builder(kind)(F.col(sname), F.col(TSN))
-                    agg_list.append(expr.alias(alias))
-        # sparsity check rides the same partial/final aggregation (counts
-        # decompose exactly: per-segment count = Σ per-bucket counts)
-        spc_series = (
-            sorted({st[0] for st, _ws, _fd, _sp in native}) if check_sparsity else []
-        )
-        for sname in spc_series:
-            key = ("cnt", sname)
-            if key not in partial_exprs:
-                alias = f"__p_cnt_{sname}"
-                partial_exprs[key] = alias
-                agg_list.append(partial_builder("cnt")(F.col(sname), F.col(TSN)).alias(alias))
-        partials = joined.groupBy(*key_cols, "__bkt").agg(*agg_list)
-
-        # 2. bucket table -> segment assignment in bucket space
-        btab = partials.withColumnRenamed("__bkt", TSN)
-        assigned = seg.assign_segments(
-            btab, bounds, w, [int(x) for x in ss], include_final_window, key_cols
-        )
-        group_cols = [*key_cols, SEG]
-
-        # 3. final aggregation over each segment's buckets
-        final_exprs: List[Column] = []
-        for (series_tuple, win_str, fd, spec), (kinds, fin) in zip(native, decos):
-            pair = getattr(spec, "arity", 1) == 2
-            sname = "|".join(series_tuple) if pair else series_tuple[0]
-            out_name = _col_name(series_tuple, fd.function.output_names[0], win_str)
-            pcols = {k: F.col(f"`{partial_exprs[(k, sname)]}`") for k in kinds}
-            final_exprs.append(fin(pcols).alias(out_name))
-        for i, sname in enumerate(spc_series):
-            final_exprs.append(
-                F.sum(F.col(partial_exprs[("cnt", sname)])).alias(f"__spc_{i}")
-            )
-        result = assigned.groupBy(*group_cols).agg(*final_exprs)
-
-        if include_empty_windows:
-            spine = seg.make_segment_spine(
-                bounds, w, [int(x) for x in ss], include_final_window, key_cols
-            )
-            out = spine.join(result, on=group_cols, how="left")
-        else:
-            out = result.withColumn(SEG_END, F.col(SEG) + F.lit(w))
-        for colname, fill in self._native_empty_fills(native).items():
-            out = out.withColumn(colname, F.coalesce(F.col(colname), F.lit(fill)))
-        if spc_series:
-            out = self._attach_sparsity_observer(out, spc_series)
-        out = out.withColumn(OUT_IDX, seg.out_idx_expr(window_idx, domain))
-        out = out.withColumn(ts_col, seg.output_index(F.col(OUT_IDX), domain))
-        return out.drop(SEG, SEG_END, OUT_IDX)
+        return out.drop(SEG, SEG_END)
 
     def _run_count_config(
         self,
@@ -1184,7 +1159,6 @@ class FeatureCollection:
         key_cols: List[str],
         window_idx: str,
         bound_method: str,
-        ts_col: str,
         include_empty_windows: bool = True,
     ) -> DataFrame:
         """Count-based windows on a TIME index: segment in sample-position
@@ -1251,8 +1225,7 @@ class FeatureCollection:
         # positions are integers; middle floors (numpy int division)
         out = out.withColumn(OUT_IDX, F.floor(seg.out_idx_expr(window_idx, DataType.SEQUENCE)))
         out = out.join(pos_map, on=[*key_cols, OUT_IDX], how="left")
-        out = out.withColumn(ts_col, seg.output_index(F.col("__out_tsn"), DataType.TIME))
-        return out.drop(SEG, SEG_END, OUT_IDX, "__out_tsn")
+        return out.drop(SEG, SEG_END, OUT_IDX).withColumnRenamed("__out_tsn", OUT_IDX)
 
     def _run_manual_config(
         self,
@@ -1265,7 +1238,6 @@ class FeatureCollection:
         key_cols: List[str],
         window_idx: str,
         domain: DataType,
-        ts_col: str,
     ) -> DataFrame:
         """Explicit user segments (reference strided_rolling.py:198-214,
         feature_collection.py:895-927): both arrays ⇒ variable-length
@@ -1326,8 +1298,7 @@ class FeatureCollection:
         for colname, fill in self._native_empty_fills(native).items():
             out = out.withColumn(colname, F.coalesce(F.col(colname), F.lit(fill)))
         out = out.withColumn(OUT_IDX, seg.out_idx_expr(window_idx, domain))
-        out = out.withColumn(ts_col, seg.output_index(F.col(OUT_IDX), domain))
-        return out.drop(SEG, SEG_END, SEG_ID, OUT_IDX)
+        return out.drop(SEG, SEG_END, SEG_ID)
 
     # ------------------------------------------------------ group-by modes
     def _manual_entries(self) -> List[Tuple]:

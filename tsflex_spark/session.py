@@ -11,9 +11,45 @@ import os
 
 from pyspark.sql import SparkSession
 
+# driver heap ceiling when derived from the host (local mode: the driver
+# runs every task, so a quarter of host memory leaves room for Python
+# workers and the OS)
+_MAX_DRIVER_MEM_MB = 8192
+
+
+def host_defaults(meminfo: str = "/proc/meminfo") -> tuple:
+    """``(cores, driver memory)`` for a local session on this host.
+
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` win when set.
+    Otherwise cores are the CPUs this process may run on
+    (``os.sched_getaffinity``, which honours container cpusets) and the
+    driver heap is a quarter of ``MemTotal``, between 1 GB and
+    ``_MAX_DRIVER_MEM_MB``.
+    """
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    if not cpus:
+        try:
+            cpus = str(len(os.sched_getaffinity(0)))
+        except AttributeError:  # platforms without affinity (macOS)
+            cpus = str(os.cpu_count() or 1)
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if not mem:
+        total_mb = None
+        try:
+            with open(meminfo) as fh:
+                for line in fh:
+                    if line.startswith("MemTotal:"):
+                        total_mb = int(line.split()[1]) // 1024
+                        break
+        except OSError:
+            pass
+        mb = 4096 if total_mb is None else total_mb // 4
+        mem = f"{max(1024, min(mb, _MAX_DRIVER_MEM_MB))}m"
+    return cpus, mem
+
 
 def get_spark(app_name: str = "tsflex_spark", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, driver_mem = host_defaults()
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)
     builder = (
@@ -34,7 +70,7 @@ def get_spark(app_name: str = "tsflex_spark", shuffle_partitions: int | None = N
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         # UI off by default (port + memory overhead in tests); probes set
         # SPARK_GRAFT_UI=true to read per-stage shuffle bytes via the
         # status REST API
