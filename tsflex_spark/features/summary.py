@@ -47,7 +47,15 @@ from typing import Any, Dict, List, Optional, Sequence, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from tsflex_spark.features.segmenter import END, OUT_IDX, START, TSN, _BLOCK
+from tsflex_spark.features.segmenter import (
+    END,
+    OUT_IDX,
+    START,
+    TSN,
+    _BLOCK,
+    nb_sql,
+    sql_lit,
+)
 from tsflex_spark.utils.data import DataType
 
 CFG = "__cfg"  # member-config id column of the long-format summary
@@ -106,12 +114,6 @@ def _q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _lit(x: Any) -> str:
-    """SQL literal keeping the Python numeric type (int -> BIGINT,
-    float -> DOUBLE), so window arithmetic types match ``F.lit`` math."""
-    return f"{int(x)}L" if isinstance(x, int) else f"{float(x)!r}D"
-
-
 def out_sql(seg: str, w: str, window_idx: str, domain: DataType) -> str:
     """``segmenter.out_idx_expr`` as SQL over a segment-start expression
     ``seg`` and window ``w`` (token-identical arithmetic, so the output
@@ -126,14 +128,6 @@ def out_sql(seg: str, w: str, window_idx: str, domain: DataType) -> str:
             half = f"floor({half})"
         return f"({seg}) + {half}"
     raise ValueError(f"window_idx {window_idx!r} must be one of begin/middle/end")
-
-
-def nb_sql(w: str, s: str, include_final: bool) -> str:
-    """``segmenter._nb_expr`` as SQL: segment count of one stride."""
-    nb0 = f"greatest(floor(({END} - {START} - {w}) / {s}) + 1, 0L)"
-    if not include_final:
-        return nb0
-    return f"({nb0} + IF({START} + {nb0} * {s} <= {END}, 1L, 0L))"
 
 
 def build(
@@ -229,10 +223,10 @@ def build(
         per_stride = []
         for s in ss:
             S = _integral(s) // g
-            nb = nb_sql(_lit(w), _lit(s), include_final_window)
+            nb = nb_sql(sql_lit(w), sql_lit(s), include_final_window)
             hi = f"least(floor({BKT} / {S}), {nb} - 1)"
             lo = f"greatest(floor(({BKT} - {W}) / {S}) + 1, 0L)"
-            o = out_sql(f"{START} + __k * {_lit(s)}", _lit(w), window_idx, domain)
+            o = out_sql(f"{START} + __k * {sql_lit(s)}", sql_lit(w), window_idx, domain)
             per_stride.append(
                 f"transform(filter(sequence({lo}, greatest({lo}, {hi})), __k -> __k <= {hi}), "
                 f"__k -> named_struct('{CFG}', {cfg_id}, '{OUT_IDX}', {o}))"
@@ -250,8 +244,8 @@ def build(
         # multi-stride config's coinciding starts repeat harmlessly (NULL
         # partials add nothing to any aggregate)
         cs = ", ".join(
-            f"named_struct('__c', {cfg_id}, '__n', {nb_sql(_lit(w), _lit(s), include_final_window)}, "
-            f"'__s', {_lit(s)}, '__w', {_lit(w)})"
+            f"named_struct('__c', {cfg_id}, '__n', {nb_sql(sql_lit(w), sql_lit(s), include_final_window)}, "
+            f"'__s', {sql_lit(s)}, '__w', {sql_lit(w)})"
             for cfg_id, w, ss, _items in members
             for s in ss
         )
