@@ -227,6 +227,57 @@ def test_multi_config_calculate_one_bucket_summary(spark):
     assert len(out.columns) == 2 + 6 * 2 * 3 + 1
 
 
+def test_window_paths_merge_tiers_without_full_outer_join(spark):
+    """Every window path computes its segment features in one shared
+    step: a native and a UDF function plan one native groupBy and ONE
+    Arrow pass, merged by union + groupBy — never a FullOuter join. A
+    count window runs the grid path in position space without a spine
+    (no ``__blk`` explode)."""
+    import numpy as np
+
+    from tsflex_spark import FeatureCollection, FeatureDescriptor, FuncWrapper
+
+    ts = pd.date_range("2024-01-01", periods=40, freq="1s")
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "k": np.repeat([0, 1], 20),
+                "ts": np.tile(ts[:20], 2),
+                "g": np.tile(["x", "x", "y", "y"], 10),
+                "v": np.arange(40.0),
+            }
+        )
+    )
+
+    def fc(window, stride):
+        # median: holistic, so the grid config takes the one-level path
+        return FeatureCollection(
+            [
+                FeatureDescriptor("median", "v", window, stride),
+                FeatureDescriptor(FuncWrapper(np.ptp, output_names="ptp"), "v", window, stride),
+            ]
+        )
+
+    kw = dict(key_cols=["k"], approve_sparsity=True)
+    outs = {
+        "grid": fc("6s", "3s").calculate(df, **kw),
+        "count": fc(6, 3).calculate(df, **kw),
+        "manual": fc("6s", "3s").calculate(
+            df, segment_start_idxs=ts[:20:5], segment_end_idxs=ts[4:20:5], **kw
+        ),
+        "group_by_all": fc("6s", "3s").calculate(df, group_by_all="k"),
+        "group_by_consecutive": fc("6s", "3s").calculate(
+            df, group_by_consecutive="g", **kw
+        ),
+    }
+    for path, out in outs.items():
+        plan = plan_of(out, "simple")
+        assert "FullOuter" not in plan, (path, plan)
+        assert plan.count("FlatMapGroupsInPandas") == 1, (path, plan)
+        assert out.count() > 0, path
+    assert "__blk" not in plan_of(outs["count"], "simple")
+
+
 def test_manual_segments_bucketed_equi_join(spark):
     """User-supplied segments must join via bucketed hash equi-joins —
     never a BroadcastNestedLoopJoin on the raw range predicate."""

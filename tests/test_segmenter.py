@@ -867,6 +867,48 @@ def test_include_empty_windows_false_count_based(spark):
         check_like=True,
     )
 
+    # keyed, NULL gaps (bounds start/end on non-NULL samples), two
+    # strides, final windows, a UDF: positions are dense per key, so every
+    # segment of the reference's grid is non-empty and the default result
+    # is the include_empty_windows=False one
+    from tests.conftest import ref_segment_starts
+    from tsflex_spark import FuncWrapper
+
+    vals = {
+        "a": [None, None] + [float(i) for i in range(30)] + [None] * 3,
+        "b": [float(i) for i in range(10)] + [None] * 4 + [float(i) for i in range(9)],
+    }
+    rows = [
+        (k, ts[i].to_pydatetime(), v) for k, vs in vals.items() for i, v in enumerate(vs)
+    ]
+    sdf = spark.createDataFrame(rows, "k string, ts timestamp, v double")
+    fc = FeatureCollection(
+        [
+            FeatureDescriptor("sum", "v", 6, [4, 5]),
+            FeatureDescriptor(FuncWrapper(np.ptp, output_names="ptp"), "v", 6, [4, 5]),
+        ]
+    )
+    for window_idx in ("begin", "middle", "end"):
+        kw = dict(
+            ts_col="ts", key_cols=["k"], approve_sparsity=True,
+            include_final_window=True, window_idx=window_idx,
+        )
+        full = fc.calculate(sdf, **kw).toPandas()
+        lean = fc.calculate(sdf, include_empty_windows=False, **kw).toPandas()
+        pd.testing.assert_frame_equal(
+            lean.sort_values(["k", "ts"]).reset_index(drop=True),
+            full.sort_values(["k", "ts"]).reset_index(drop=True),
+            check_like=True,
+        )
+        for k, vs in vals.items():
+            v = pd.Series(vs, dtype=float)
+            present = np.flatnonzero(v.notna().to_numpy())
+            starts = ref_segment_starts(present[0], present[-1], 6, [4, 5], True)
+            got = full[full["k"] == k]
+            assert len(got) == len(starts)
+            assert sorted(got["v__sum__w=6"]) == sorted(v.iloc[st:st + 6].sum() for st in starts)
+            assert got["v__ptp__w=6"].notna().all()
+
 
 def test_group_by_consecutive_null_keys_reference_parity(spark):
     """NULL group keys: the reference DROPS NaN rows first (inplace, so
@@ -900,6 +942,38 @@ def test_group_by_consecutive_null_keys_reference_parity(spark):
     assert str(out.loc[0, "__end"]) == "2024-01-01 00:00:01"  # last member
     assert str(out.loc[1, "__end"]) == "2024-01-01 00:00:05"
     assert str(out.loc[2, "__end"]) == "2024-01-01 00:00:09"
+
+
+def test_group_by_consecutive_null_key_native_and_udf(spark):
+    """A NULL ``key_cols`` value is one key like any other: its runs come
+    out once each, with the native and the UDF feature on the same row
+    (the merge of the two tiers must match NULL keys, which an equi-join
+    never does)."""
+    from tsflex_spark import FuncWrapper
+
+    ts = pd.date_range("2024-01-01", periods=5, freq="1s")
+    rows = [
+        (u, t.to_pydatetime(), g, float(i))
+        for u in ("a", None)
+        for i, (t, g) in enumerate(zip(ts, ["x", "x", "y", "y", "x"]))
+    ]
+    fc = FeatureCollection(
+        [
+            FeatureDescriptor("sum", "v", "1s", "1s"),
+            FeatureDescriptor(FuncWrapper(np.ptp, output_names="ptp"), "v", "1s", "1s"),
+        ]
+    )
+    out = fc.calculate(
+        spark.createDataFrame(rows, "user string, ts timestamp, g string, v double"),
+        ts_col="ts", key_cols=["user"], group_by_consecutive="g", approve_sparsity=True,
+    ).toPandas()
+    for user in ("a", None):
+        got = out[out["user"].isna()] if user is None else out[out["user"] == user]
+        got = got.sort_values("ts").reset_index(drop=True)
+        assert list(got["g"]) == ["x", "y", "x"]
+        assert list(got["ts"]) == [ts[0], ts[2], ts[4]]
+        assert list(got["v__sum__w=manual"]) == [1.0, 5.0, 4.0]
+        assert list(got["v__ptp__w=manual"]) == [1.0, 1.0, 0.0]
 
 
 def test_threshold_count_natives(spark):

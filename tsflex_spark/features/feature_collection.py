@@ -3,15 +3,19 @@
 The registry mirrors the reference's plan dict
 ``{(series_tuple, window): [FeatureDescriptor]}`` (feature_collection.py:88-93),
 but compilation FUSES every descriptor that shares the same numeric
-(window, strides) config into a single segment-assignment + a single
-``groupBy(seg_start)`` — recognized functions become JVM aggregate
-expressions in that one groupBy (native tier), unrecognized Python callables
-run in one Arrow ``applyInPandas`` over the same grouping (UDF tier). The
-reference runs each function as a separate multiprocess task; Catalyst fuses
-ours into a handful of stages. Configs whose functions all decompose go one
-step further: every such config of a ``calculate()`` rolls up from ONE shared
-bucket table (``features/summary.py``), and all compiled parts merge through
-one ``unionByName`` + ``groupBy`` instead of a chain of full outer joins.
+(window, strides) config into one segment assignment and one per-segment
+feature step (``_segment_features``), shared by every window path (grid,
+count-based, manual, ``group_by_all``, ``group_by_consecutive``):
+recognized functions become JVM aggregate expressions in one
+``groupBy(segment)`` (native tier), unrecognized Python callables run in
+one Arrow ``applyInPandas`` over the same grouping (UDF tier), and the two
+merge through ``unionByName`` + ``groupBy`` — no full outer join anywhere.
+Count-based configs are the grid path run over per-key sample positions.
+The reference runs each function as a separate multiprocess task; Catalyst
+fuses ours into a handful of stages. Configs whose functions all decompose
+go one step further: every such config of a ``calculate()`` rolls up from
+ONE shared bucket table (``features/summary.py``), and all compiled parts
+merge through the same ``unionByName`` + ``groupBy``.
 
 Output naming grammar (API — ``reduce()`` parses it back):
 ``'|'.join(series)__<output>__w=<win_str>`` (reference strided_rolling.py:502-507).
@@ -55,6 +59,22 @@ FeatureInput = Union[
 
 def _col_name(series_tuple: Tuple[str, ...], output_name: str, win_str: str) -> str:
     return f"{'|'.join(series_tuple)}__{output_name}__w={win_str}"
+
+
+def _merge(
+    frames: Sequence[DataFrame], group_cols: Sequence[str], outs: Sequence[Tuple[str, str]]
+) -> DataFrame:
+    """``unionByName`` + one ``groupBy(group_cols)`` with ``max(src) AS
+    name`` per ``(name, SQL source)`` output. Every output has exactly one
+    non-NULL source row per group, so ``max`` picks it. Unlike a full
+    outer join, the groupBy matches NULL keys."""
+    union = frames[0]
+    for frame in frames[1:]:
+        union = union.unionByName(frame, allowMissingColumns=True)
+    q = summary._q
+    return union.groupBy(*group_cols).agg(
+        *[F.expr(f"max({src}) AS {q(name)}") for name, src in outs]
+    )
 
 
 def _materialize_bounds(bounds_plan: DataFrame, key_cols: Sequence[str]) -> DataFrame:
@@ -311,8 +331,8 @@ class FeatureCollection:
 
         Columns: output, series, window, strides, tier
         (``native``/``native2``/``udf``, or ``count`` for an int window on
-        a TIME index — count-based windows segment in sample-position
-        space on their own path), fanout (row-duplication factor of the
+        a TIME index — count-based windows run the grid path in
+        sample-position space), fanout (row-duplication factor of the
         one-level plan; samples per stride for ``count``), two_level
         (whether the descriptor's config rides the shared bucket summary
         — all functions decomposable, integral window/strides, within
@@ -551,7 +571,6 @@ class FeatureCollection:
                     parts.append((self._run_count_config(
                         data_n, entries, cfg[1], list(cfg[2]),
                         include_final_window, key_cols, window_idx, bound_method,
-                        include_empty_windows=include_empty_windows,
                     ), None))
                 else:
                     window_n, strides_n = cfg
@@ -608,11 +627,8 @@ class FeatureCollection:
         ):
             result, exprs = parts[0][0], direct
         else:
-            union = parts[0][0]
-            for frame, _outs in parts[1:]:
-                union = union.unionByName(frame, allowMissingColumns=True)
-            result = union.groupBy(*key_cols, OUT_IDX).agg(
-                *[F.expr(f"max({src}) AS {q(n)}") for n, src in zip(names, srcs)]
+            result = _merge(
+                [frame for frame, _outs in parts], [*key_cols, OUT_IDX], list(zip(names, srcs))
             )
             exprs = [q(n) for n in names]
         if domain == DataType.TIME:
@@ -903,12 +919,41 @@ class FeatureCollection:
             exprs.append(col.alias(out_name))
         return exprs
 
-    def _native_empty_fills(self, native_entries: List[Tuple]) -> Dict[str, float]:
+    def _fill_empty(self, out: DataFrame, entries: List[Tuple]) -> DataFrame:
+        """Native-tier value of a window no row fed (``NativeSpec.empty``)."""
+        native, _udf = self._split_tiers(entries)
         fills = {}
-        for series_tuple, win_str, fd, spec in native_entries:
+        for series_tuple, win_str, fd, spec in native:
             if spec.empty is not None:
-                fills[_col_name(series_tuple, fd.function.output_names[0], win_str)] = spec.empty
-        return fills
+                name = _col_name(series_tuple, fd.function.output_names[0], win_str)
+                fills[name] = F.coalesce(F.col(name), F.lit(spec.empty))
+        return out.withColumns(fills) if fills else out
+
+    def _segment_features(
+        self,
+        assigned: DataFrame,
+        entries: List[Tuple],
+        group_cols: List[str],
+        domain: DataType,
+        extra: Sequence[Column] = (),
+    ) -> DataFrame:
+        """The per-segment feature step every window path shares: one
+        ``groupBy(group_cols)`` for the native tier plus the ``extra``
+        aggregates (hidden sparsity counts, run bounds), one Arrow pass
+        for the UDF tier, and — when both run — one ``_merge`` of the two
+        on ``group_cols``."""
+        native, udf = self._split_tiers(entries)
+        parts: List[DataFrame] = []
+        if native or extra:
+            parts.append(
+                assigned.groupBy(*group_cols).agg(*self._native_agg_exprs(native), *extra)
+            )
+        if udf:
+            parts.append(self._udf_apply(assigned, udf, group_cols, domain))
+        if len(parts) == 1:
+            return parts[0]
+        outs = [(c, summary._q(c)) for p in parts for c in p.columns if c not in group_cols]
+        return _merge(parts, group_cols, outs)
 
     def _udf_apply(
         self,
@@ -916,16 +961,14 @@ class FeatureCollection:
         udf_entries: List[Tuple],
         group_cols: List[str],
         domain: DataType = DataType.SEQUENCE,
-        bucketed: bool = True,
     ) -> DataFrame:
         """UDF tier: Arrow ``applyInPandas`` computing every Python feature
         function of this config per segment group.
 
-        ``bucketed=True`` (segment modes) hashes segments into
-        ``2 × defaultParallelism`` buckets so ONE Arrow call processes many
-        segments — per-group Python/Arrow overhead dominates when segments
-        are numerous and small (same trade measured ~4× in the pandas
-        processing tier). Within a bucket, ``vectorized`` numpy functions
+        Segments are hashed into ``2 × defaultParallelism`` buckets so ONE
+        Arrow call processes many segments — per-group Python/Arrow
+        overhead dominates when segments are numerous and small (same
+        trade measured ~4× in the pandas processing tier). Within a bucket, ``vectorized`` numpy functions
         whose segments are equal-length get the reference's true
         (nb, window) batch (strided_rolling.py:379-453) in ONE call;
         ragged segments fall back to per-segment (1, n) calls.
@@ -1002,16 +1045,6 @@ class FeatureCollection:
             except Exception:
                 outs = [np.nan] * len(fw.output_names)
             _store(row, spec_idx, fw, outs)
-
-        def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(TSN)
-            row: Dict[str, Any] = {c: pdf[c].iloc[0] for c in group_cols}
-            for spec_idx in range(len(out_specs)):
-                _fill_one(row, pdf, spec_idx)
-            return pd.DataFrame([row])
-
-        if not bucketed:
-            return assigned.groupBy(*group_cols).applyInPandas(run, schema)
 
         vec_flags = [
             fw.vectorized and fw.input_type is np.ndarray
@@ -1100,9 +1133,9 @@ class FeatureCollection:
         include_empty_windows: bool = True,
     ) -> DataFrame:
         """One-level plan: explode every row into its segments, one
-        ``groupBy(keys, segment)``. Holistic and UDF configs (and grid
-        configs too fine for a bucket table) take this path."""
-        native, udf = self._split_tiers(entries)
+        ``groupBy(keys, segment)``. Holistic and UDF configs, grid configs
+        too fine for a bucket table and count-based configs (in position
+        space) take this path."""
         needed = sorted({s for series_tuple, _, _fd in entries for s in series_tuple})
         assigned = seg.assign_segments(
             data_n.select(TSN, *key_cols, *needed),
@@ -1116,18 +1149,7 @@ class FeatureCollection:
             if check_sparsity
             else []
         )
-        parts: List[DataFrame] = []
-        if native:
-            parts.append(
-                assigned.groupBy(*group_cols).agg(*self._native_agg_exprs(native), *spc)
-            )
-        elif spc:
-            parts.append(assigned.groupBy(*group_cols).agg(*spc))
-        if udf:
-            parts.append(self._udf_apply(assigned, udf, group_cols, domain))
-        result = parts[0]
-        for p in parts[1:]:
-            result = result.join(p, on=group_cols, how="full")
+        result = self._segment_features(assigned, entries, group_cols, domain, spc)
 
         if include_empty_windows:
             spine = seg.make_segment_spine(
@@ -1139,8 +1161,7 @@ class FeatureCollection:
             # fine stride over a long sparse span the spine is orders of
             # magnitude larger than the data (#keys x span/stride rows)
             out = result.withColumn(SEG_END, F.col(SEG) + F.lit(window_n))
-        for colname, fill in self._native_empty_fills(native).items():
-            out = out.withColumn(colname, F.coalesce(F.col(colname), F.lit(fill)))
+        out = self._fill_empty(out, entries)
         if spc:
             out = self._attach_sparsity_observer(
                 out,
@@ -1159,17 +1180,18 @@ class FeatureCollection:
         key_cols: List[str],
         window_idx: str,
         bound_method: str,
-        include_empty_windows: bool = True,
     ) -> DataFrame:
-        """Count-based windows on a TIME index: segment in sample-position
-        space, stitch the time index back onto the output positions
-        (reference TimeIndexSampleStridedRolling, strided_rolling.py:627-698).
+        """Count-based windows on a TIME index: the grid path run in
+        sample-position space, with the time index stitched back onto the
+        output positions (reference TimeIndexSampleStridedRolling,
+        strided_rolling.py:627-698).
 
-        Position numbering is a per-key ``row_number`` ordered by ts — one
-        window-function pass; everything downstream reuses the grid path in
-        position space. Output ts = the timestamp AT the output position
-        (begin/middle/end sample), exactly the reference's
-        ``series_index[df.index]`` stitch.
+        Positions are a per-key ``row_number`` ordered by ts. They are
+        dense, so every segment holds the row at its own start position:
+        no window is empty and the grid path runs without a spine. Output
+        ts = the timestamp AT the output position (begin/middle/end
+        sample), exactly the reference's ``series_index[df.index]``
+        stitch.
         """
         needed = sorted({s for series_tuple, _, _fd in entries for s in series_tuple})
         # the position numbering feeds THREE consumers (bounds, segment
@@ -1178,7 +1200,7 @@ class FeatureCollection:
         # subexpression reuse across a DAG in Spark) — one checkpointed
         # pass is the scale-correct trade at any data size. EAGER: a lazy
         # checkpoint can ABBA-deadlock against concurrent AQE stage
-        # submission (see the bounds comment in calculate)
+        # submission (see _materialize_bounds)
         from tsflex_spark.utils.data import cut_lineage
 
         pos = cut_lineage(
@@ -1188,44 +1210,17 @@ class FeatureCollection:
         )
         pos_map = pos.select(*key_cols, F.col("__rn").alias(OUT_IDX), F.col(TSN).alias("__out_tsn"))
         data_ps = pos.drop(TSN).withColumnRenamed("__rn", TSN)
-
-        bounds = seg.make_bounds(data_ps, needed, key_cols, bound_method)
-        if not key_cols:
-            # <=1 row (global agg over the checkpointed positions): collect
-            # and rebuild as a literal frame — assignment + spine then read
-            # a LocalTableScan instead of re-running the aggregate subtree
-            # once per consumer inside the action (see _materialize_bounds)
-            bounds = _materialize_bounds(bounds, key_cols)
-        assigned = seg.assign_segments(
-            data_ps.select(TSN, *key_cols, *needed),
-            bounds, window_c, strides_c, include_final_window, key_cols,
+        # SEQUENCE: index-aware UDFs see the sample position, not the
+        # stitched time index
+        out = self._run_grid_config(
+            data_ps, seg.make_bounds(data_ps, needed, key_cols, bound_method),
+            entries, window_c, strides_c, include_final_window, key_cols,
+            window_idx, DataType.SEQUENCE, include_empty_windows=False,
         )
-        group_cols = [*key_cols, SEG]
-        native, udf = self._split_tiers(entries)
-        parts: List[DataFrame] = []
-        if native:
-            parts.append(assigned.groupBy(*group_cols).agg(*self._native_agg_exprs(native)))
-        if udf:
-            # count-based windows run in position space — index-aware funcs
-            # see the sample position, not the stitched time index
-            parts.append(self._udf_apply(assigned, udf, group_cols, DataType.SEQUENCE))
-        result = parts[0]
-        for p in parts[1:]:
-            result = result.join(p, on=group_cols, how="full")
-
-        if include_empty_windows:
-            spine = seg.make_segment_spine(
-                bounds, window_c, strides_c, include_final_window, key_cols
-            )
-            out = spine.join(result, on=group_cols, how="left")
-        else:
-            out = result.withColumn(SEG_END, F.col(SEG) + F.lit(window_c))
-        for colname, fill in self._native_empty_fills(native).items():
-            out = out.withColumn(colname, F.coalesce(F.col(colname), F.lit(fill)))
         # positions are integers; middle floors (numpy int division)
-        out = out.withColumn(OUT_IDX, F.floor(seg.out_idx_expr(window_idx, DataType.SEQUENCE)))
+        out = out.withColumn(OUT_IDX, F.floor(OUT_IDX))
         out = out.join(pos_map, on=[*key_cols, OUT_IDX], how="left")
-        return out.drop(SEG, SEG_END, OUT_IDX).withColumnRenamed("__out_tsn", OUT_IDX)
+        return out.drop(OUT_IDX).withColumnRenamed("__out_tsn", OUT_IDX)
 
     def _run_manual_config(
         self,
@@ -1277,26 +1272,16 @@ class FeatureCollection:
         key_rows = data_n.select(*key_cols).distinct() if key_cols else None
         spine = seg.manual_segment_spine(spark, starts, ends, key_rows)
 
-        native, udf = self._split_tiers(entries)
         needed = sorted({s for series_tuple, _, _fd in entries for s in series_tuple})
         max_len = float(np.max(ends - starts)) if len(starts) else 1.0
         assigned = seg.assign_manual_segments(
             data_n.select(TSN, *key_cols, *needed), spine, max_len, key_cols
         )
         group_cols = [*key_cols, SEG_ID]
-
-        parts: List[DataFrame] = []
-        if native:
-            parts.append(assigned.groupBy(*group_cols).agg(*self._native_agg_exprs(native)))
-        if udf:
-            parts.append(self._udf_apply(assigned.drop(SEG, SEG_END), udf, group_cols, domain))
-        result = parts[0]
-        for p in parts[1:]:
-            result = result.join(p, on=group_cols, how="full")
-
-        out = spine.join(result, on=group_cols, how="left")
-        for colname, fill in self._native_empty_fills(native).items():
-            out = out.withColumn(colname, F.coalesce(F.col(colname), F.lit(fill)))
+        result = self._segment_features(
+            assigned.drop(SEG, SEG_END), entries, group_cols, domain
+        )
+        out = self._fill_empty(spine.join(result, on=group_cols, how="left"), entries)
         out = out.withColumn(OUT_IDX, seg.out_idx_expr(window_idx, domain))
         return out.drop(SEG, SEG_END, SEG_ID)
 
@@ -1334,7 +1319,6 @@ class FeatureCollection:
         domain = determine_type(data, ts_col)
         data_n = seg.numeric_index(data, ts_col, domain)
         entries = self._manual_entries()
-        native, udf = self._split_tiers(entries)
         # NULL (and float-NaN) group keys are dropped — Spark groupBy keeps
         # them, the reference drops them with a warning (:509-519)
         cond = F.lit(True)
@@ -1343,15 +1327,7 @@ class FeatureCollection:
             if isinstance(data.schema[g].dataType, (T.FloatType, T.DoubleType)):
                 c = c & ~F.isnan(F.col(g))
             cond = cond & c
-        clean = data_n.where(cond)
-        parts: List[DataFrame] = []
-        if native:
-            parts.append(clean.groupBy(*gcols).agg(*self._native_agg_exprs(native)))
-        if udf:
-            parts.append(self._udf_apply(clean, udf, gcols, domain))
-        result = parts[0]
-        for p in parts[1:]:
-            result = result.join(p, on=gcols, how="full")
+        result = self._segment_features(data_n.where(cond), entries, gcols, domain)
         feat_cols = sorted(c for c in result.columns if c not in gcols)
         return result.select(*gcols, *[F.col(f"`{c}`") for c in feat_cols]).orderBy(*gcols)
 
@@ -1388,35 +1364,27 @@ class FeatureCollection:
             key_cols=key_cols,
         )
 
-        entries = self._manual_entries()
-        native, udf = self._split_tiers(entries)
-        group_cols = [*key_cols, "__island"]
-        base_aggs = [
+        run_aggs = [
             F.first(F.col(gcol)).alias(gcol),
             F.min(TSN).alias("__start_n"),
             F.max(TSN).alias("__last_n"),
         ]
-        parts: List[DataFrame] = []
-        parts.append(islands.groupBy(*group_cols).agg(*base_aggs, *self._native_agg_exprs(native)))
-        if udf:
-            parts.append(self._udf_apply(islands, udf, group_cols, domain))
-        result = parts[0]
-        for p in parts[1:]:
-            result = result.join(p, on=group_cols, how="full")
+        result = self._segment_features(
+            islands, self._manual_entries(), [*key_cols, "__island"], domain, run_aggs
+        )
         # reported __end = the run's last member index (reference :713-714;
         # the +1day/+1 exclusive bump only feeds the reference's INTERNAL
         # slicing, which island membership already encodes here — so no
         # island+1 self-join is needed at all)
-        result = result.withColumn("__end_n", F.col("__last_n"))
         result = (
             result.withColumn(ts_col, seg.output_index(F.col("__start_n"), domain))
             .withColumn("__start", seg.output_index(F.col("__start_n"), domain))
-            .withColumn("__end", seg.output_index(F.col("__end_n"), domain))
+            .withColumn("__end", seg.output_index(F.col("__last_n"), domain))
         )
         feat_cols = sorted(
             c
             for c in result.columns
-            if c not in (ts_col, gcol, "__start", "__end", "__start_n", "__last_n", "__end_n", "__island", *key_cols)
+            if c not in (ts_col, gcol, "__start", "__end", "__start_n", "__last_n", "__island", *key_cols)
         )
         return result.select(
             ts_col,

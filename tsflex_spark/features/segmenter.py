@@ -17,7 +17,9 @@ segments ``k ∈ [floor((t-w-start0)/s)+1, floor((t-start0)/s)]`` — a bounded
 ``sequence``/``explode`` (fan-out ≤ ceil(window/stride)+1 per stride), then one
 ``groupBy(seg_start)``. Exactly one shuffle; no join against the data at all
 (bounds are a one-row-per-key broadcast). Empty segments are restored by a
-left join from the independently generated segment spine. Manual
+left join from the independently generated segment spine — on a time or
+sequence grid only: count-based windows segment dense per-key sample
+positions, where every segment holds the row at its own start. Manual
 (user-supplied) segments use a bucketed equi-join instead (granule = max
 segment length), which AQE/Catalyst executes as a hash join, never a
 nested-loop.
@@ -58,7 +60,7 @@ def numeric_index(df: DataFrame, ts_col: str, domain: DataType) -> DataFrame:
     return df.withColumn(TSN, F.col(ts_col))
 
 
-def output_index(col: Column, domain: DataType, is_float: bool = False) -> Column:
+def output_index(col: Column, domain: DataType) -> Column:
     """Numeric index → user-facing index value."""
     if domain == DataType.TIME:
         return F.timestamp_micros(col.cast("long"))
@@ -255,17 +257,26 @@ def assign_manual_segments(
     return joined.drop("__bkt")
 
 
-def out_idx_expr(window_idx: str, domain: DataType) -> Column:
-    """Output index per ``window_idx`` (reference strided_rolling.py:276-293)."""
+def out_sql(seg: str, end: str, window_idx: str, domain: DataType) -> str:
+    """Output index per ``window_idx`` (reference strided_rolling.py:276-293)
+    as SQL over segment-start and segment-end expressions, each a column
+    or parenthesized. The one
+    definition: the grid, count and manual paths parse it over
+    ``SEG``/``SEG_END`` (``out_idx_expr``), a bucket summary over its
+    exploded starts — token-identical arithmetic, so every path's output
+    index is bit-identical."""
     if window_idx == "end":
-        col = F.col(SEG_END)
-    elif window_idx == "begin":
-        col = F.col(SEG)
-    elif window_idx == "middle":
-        half = (F.col(SEG_END) - F.col(SEG)) / F.lit(2)
+        return end
+    if window_idx == "begin":
+        return seg
+    if window_idx == "middle":
+        half = f"({end} - {seg}) / 2"
         if domain == DataType.TIME:
-            half = F.floor(half)
-        col = F.col(SEG) + half
-    else:
-        raise ValueError(f"window_idx {window_idx!r} must be one of begin/middle/end")
-    return col
+            half = f"floor({half})"
+        return f"{seg} + {half}"
+    raise ValueError(f"window_idx {window_idx!r} must be one of begin/middle/end")
+
+
+def out_idx_expr(window_idx: str, domain: DataType) -> Column:
+    """Output index of every ``SEG``/``SEG_END`` row (``out_sql``)."""
+    return F.expr(out_sql(SEG, SEG_END, window_idx, domain))

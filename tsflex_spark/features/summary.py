@@ -54,6 +54,7 @@ from tsflex_spark.features.segmenter import (
     TSN,
     _BLOCK,
     nb_sql,
+    out_sql,
     sql_lit,
 )
 from tsflex_spark.utils.data import DataType
@@ -114,20 +115,10 @@ def _q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def out_sql(seg: str, w: str, window_idx: str, domain: DataType) -> str:
-    """``segmenter.out_idx_expr`` as SQL over a segment-start expression
-    ``seg`` and window ``w`` (token-identical arithmetic, so the output
-    index is bit-identical to the one-level plan's)."""
-    if window_idx == "end":
-        return f"({seg}) + {w}"
-    if window_idx == "begin":
-        return f"({seg})"
-    if window_idx == "middle":
-        half = f"((({seg}) + {w}) - ({seg})) / 2"
-        if domain == DataType.TIME:
-            half = f"floor({half})"
-        return f"({seg}) + {half}"
-    raise ValueError(f"window_idx {window_idx!r} must be one of begin/middle/end")
+def _out(seg: str, w: str, window_idx: str, domain: DataType) -> str:
+    """``segmenter.out_sql`` over the segment starting at SQL ``seg`` with
+    window ``w``."""
+    return out_sql(f"({seg})", f"(({seg}) + {w})", window_idx, domain)
 
 
 def build(
@@ -226,7 +217,7 @@ def build(
             nb = nb_sql(sql_lit(w), sql_lit(s), include_final_window)
             hi = f"least(floor({BKT} / {S}), {nb} - 1)"
             lo = f"greatest(floor(({BKT} - {W}) / {S}) + 1, 0L)"
-            o = out_sql(f"{START} + __k * {sql_lit(s)}", sql_lit(w), window_idx, domain)
+            o = _out(f"{START} + __k * {sql_lit(s)}", sql_lit(w), window_idx, domain)
             per_stride.append(
                 f"transform(filter(sequence({lo}, greatest({lo}, {hi})), __k -> __k <= {hi}), "
                 f"__k -> named_struct('{CFG}', {cfg_id}, '{OUT_IDX}', {o}))"
@@ -263,7 +254,7 @@ def build(
             .selectExpr(
                 *keys_q,
                 f"__c AS {CFG}",
-                f"{out_sql(f'{START} + __k * __s', '__w', window_idx, domain)} AS {OUT_IDX}",
+                f"{_out(f'{START} + __k * __s', '__w', window_idx, domain)} AS {OUT_IDX}",
             )
         )
         rows = rows.unionByName(spine, allowMissingColumns=True)
