@@ -12,7 +12,7 @@ form so AQE may coalesce. Values must be partitioning-independent.
 
 from pyspark.sql import functions as F
 
-from tsflex_spark.utils.data import keyed_fan_out
+from tsflex_spark.utils.data import fan_out, keyed_fan_out
 
 
 def test_pins_to_input_splits_when_wider_than_parallelism(spark):
@@ -72,3 +72,55 @@ def test_repetition_stats_values_unchanged_by_partitioning(spark):
     one = repetition_stats(docs.coalesce(1), "text", "doc_id").orderBy("doc_id").collect()
     many = repetition_stats(docs.repartition(8), "text", "doc_id").orderBy("doc_id").collect()
     assert one == many
+
+
+def _jobs_launched(spark, group, fn):
+    """Run ``fn`` under a fresh job group; the ids of the jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_exchange_input_is_not_probed(spark):
+    # an aggregate output: probing its partition count would run the
+    # aggregate's shuffle stage at plan-build time under AQE
+    agg = (
+        spark.range(1000)
+        .withColumn("k", F.col("id") % 13)
+        .groupBy("k")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    par = spark.sparkContext.defaultParallelism
+    jobs = _jobs_launched(
+        spark,
+        "fan_out_exchange_probe",
+        lambda: (keyed_fan_out(agg, "k"), fan_out(agg)),
+    )
+    assert list(jobs) == []
+    keyed = keyed_fan_out(agg, "k")._jdf.queryExecution().optimizedPlan().toString()
+    assert "RepartitionByExpression" in keyed
+    assert fan_out(agg).rdd.getNumPartitions() == par
+    assert sorted(map(tuple, keyed_fan_out(agg, "k").collect())) == sorted(
+        map(tuple, agg.collect())
+    )
+
+
+def test_one_split_scan_still_fans_out(spark, tmp_path):
+    path = str(tmp_path / "one.parquet")
+    spark.range(500).withColumn("k", F.col("id") % 7).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() == 1
+    par = spark.sparkContext.defaultParallelism
+    jobs = _jobs_launched(
+        spark,
+        "fan_out_scan_probe",
+        lambda: (keyed_fan_out(scan, "k"), fan_out(scan)),
+    )
+    assert list(jobs) == []
+    assert fan_out(scan).rdd.getNumPartitions() == par
+    plan = keyed_fan_out(scan, "k")._jdf.queryExecution().optimizedPlan().toString()
+    assert "RepartitionByExpression" in plan

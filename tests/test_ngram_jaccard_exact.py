@@ -9,6 +9,8 @@ partial-overlap cases, under both prune modes and the shingles= reuse
 path.
 """
 
+import re
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -87,3 +89,60 @@ def test_pair_id_missing_from_corpus_dropped(spark):
     # a pair whose id has no shingle rows yields no row (inner-join
     # semantics, unchanged from the equi-join shape)
     assert got == {(0, 1)}
+
+
+# shingle hashes vs a Python reference: code-point slicing of the text
+# normalized as the engine does (ASCII \s runs -> one space, lowercase,
+# no trim), each gram hashed by Spark's own xxhash64
+HASH_DOCS = {
+    10: None,
+    11: "",
+    12: "ab",  # shorter than every k but 1
+    13: "  Two\t\tspaces \n\r and\x0btabs   ",
+    14: "Crème brûlée à la CAFÉ, naïve façade",
+    15: "日本語のテキストと中文文本",
+    16: "emoji 😀😃 and astral 𝄞𝄢 mixed in",
+}
+
+
+def _ref_grams(text, k):
+    if text is None:
+        return {None}
+    n = re.sub(r"\s+", " ", text, flags=re.ASCII).lower()
+    return {n[i : i + k] for i in range(max(len(n) - k + 1, 1))}
+
+
+@pytest.mark.parametrize("k", [1, 3, 5, 9])
+def test_shingle_hashes_match_code_point_reference(spark, k):
+    df = spark.createDataFrame(list(HASH_DOCS.items()), "doc_id long, text string")
+    got = {tuple(r) for r in shingle_rows(df, "text", "doc_id", k).collect()}
+    ref = spark.createDataFrame(
+        [(i, g) for i, t in HASH_DOCS.items() for g in _ref_grams(t, k)],
+        "doc_id long, g string",
+    )
+    want = {tuple(r) for r in ref.select("doc_id", F.xxhash64("g")).collect()}
+    assert got == want
+
+
+@pytest.mark.parametrize("k", [1, 3, 5, 9])
+def test_invalid_utf8_shingles_match_substr(spark, k):
+    # lone continuation bytes, an overlong lead, a stray 0xFF and a lead
+    # byte truncated at the end: Spark counts each as one character
+    df = spark.sql(
+        "SELECT * FROM VALUES "
+        "(1L, CAST(unhex('41808142C0AF4344FF4546') AS STRING)), "
+        "(2L, CAST(unhex('4142434445464748F0') AS STRING)) AS t(doc_id, text)"
+    )
+    got = {tuple(r) for r in shingle_rows(df, "text", "doc_id", k).collect()}
+    norm = F.lower(F.regexp_replace("text", r"\s+", " "))
+    n = F.length("n")
+    substr = (
+        df.select("doc_id", norm.alias("n"))
+        .select(
+            "doc_id",
+            "n",
+            F.explode(F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))).alias("i"),
+        )
+        .select("doc_id", F.xxhash64(F.col("n").substr(F.col("i"), F.lit(k))))
+    )
+    assert got == {tuple(r) for r in substr.collect()}

@@ -42,6 +42,7 @@ from typing import List, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tsflex_spark.datapipe.text import _char_grams
 from tsflex_spark.utils.data import fan_out
 
 
@@ -56,17 +57,7 @@ def _ngram_rows(
     # the filter the explode emits one NULL gram whose xxhash64 is the
     # hash of the bare seed, an accidental bucket
     d = fan_out(df.select(id_col, text_col)).where(F.col(text_col).isNotNull())
-    d = d.withColumn(
-        "__norm", F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
-    )
-    n = F.length("__norm")
-    idx = F.sequence(F.lit(1), F.greatest(n - F.lit(ngram - 1), F.lit(1)))
-    return d.select(
-        id_col,
-        F.explode(
-            F.transform(idx, lambda i: F.col("__norm").substr(i, F.lit(ngram)))
-        ).alias("__g"),
-    )
+    return _char_grams(d, text_col, id_col, ngram)
 
 
 def _bucket_and_sign(dim: int) -> tuple:

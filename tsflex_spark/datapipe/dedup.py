@@ -67,27 +67,6 @@ def dedup_exact_stats(df: DataFrame, col: str, id_col: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- MinHash
-def _with_shingles(df: DataFrame, text_col: str, k: int, out_col: str = "__sh") -> DataFrame:
-    """Add the character k-shingle set of (lowercased, whitespace-normalized)
-    ``text_col`` as ``out_col``.
-
-    PERF: the normalized text MUST be materialized as its own projection
-    before the per-position ``substr`` transform — inlining it into the
-    lambda makes Spark re-run ``regexp_replace`` once per shingle position
-    (O(n²) regex work per document; 20× slowdown measured at sf0.1).
-    CollapseProject keeps the hoisted column because it is referenced more
-    than once.
-    """
-    df = df.withColumn("__norm", F.lower(F.regexp_replace(F.col(text_col), r"\s+", " ")))
-    n = F.length("__norm")
-    idx = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))
-    df = df.withColumn(
-        out_col,
-        F.array_distinct(F.transform(idx, lambda i: F.col("__norm").substr(i, F.lit(k)))),
-    )
-    return df.drop("__norm")
-
-
 def shingle_rows(
     df: DataFrame, text_col: str, id_col: str, k: int = 5, out_col: str = "__s"
 ) -> DataFrame:
@@ -98,13 +77,19 @@ def shingle_rows(
     distinct + joins shuffle ~3x less than 5-char strings. Collisions:
     ~n²/2^64 for n distinct shingles per doc — irrelevant below ~10^8.
 
-    PERF: positions are exploded FIRST and the shingle is a plain
-    ``substr`` projection — everything stays in whole-stage codegen.
-    Higher-order-function lambdas (``transform``) are interpreted per
-    element and measured ~10x slower; worse, an inner ``explode`` after a
-    transform triggers InferFiltersFromGenerate, which re-inlines the whole
-    shingle expression into the scan filter (O(n^2) regex per row measured
-    220s at sf0.1 -> this shape: ~2s).
+    PERF: shingles come from ``text._char_grams``: positions are
+    exploded FIRST and the shingle is a plain slice projection —
+    everything stays in whole-stage codegen. Higher-order-function
+    lambdas (``transform``) are interpreted per element and measured
+    ~10x slower; worse, an inner ``explode`` after a transform triggers
+    InferFiltersFromGenerate, which re-inlines the whole shingle
+    expression into the scan filter (O(n^2) regex per row measured 220s
+    at sf0.1 -> this shape: ~2s). The slice is O(k): on ASCII text it
+    cuts the raw bytes, where a string ``substr`` walks the UTF-8 bytes
+    from the start to character i — O(position) per shingle, O(n²) per
+    document. Measured on the perfbench corpus_dedup input (1000 docs of
+    ~200 words, 0.93M distinct shingles), 3 task threads of a 4-core VM:
+    the whole ``shingle_rows`` pass 2.57 s → 0.66 s (median of 7).
 
     PERF (r11, guide §2.3/§2.4 — shuffle the payload once, never the
     exploded form): the input is hash-repartitioned BY ID before the
@@ -128,27 +113,17 @@ def shingle_rows(
     # utils.data.keyed_fan_out, extracted from this site r11 so the
     # pattern is one implementation shared with the other explode+
     # keyed-aggregate operators).
+    from tsflex_spark.datapipe.text import _char_grams
     from tsflex_spark.utils.data import keyed_fan_out
 
-    d = keyed_fan_out(df, id_col)
-    d = d.withColumn(
-        "__norm", F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
+    d = _char_grams(keyed_fan_out(df, id_col), text_col, id_col, k)
+    # hash BEFORE the distinct: the dedup shuffle then carries two longs
+    # instead of strings — measured 1.7x faster at 1M shingle rows than
+    # distinct-on-string. xxhash64 of the binary gram equals xxhash64 of
+    # the same k-char string.
+    return d.select(F.col(id_col), F.xxhash64("__g").alias(out_col)).dropDuplicates(
+        [id_col, out_col]
     )
-    d = d.select(
-        F.col(id_col),
-        F.col("__norm"),
-        F.explode_outer(
-            F.sequence(F.lit(1), F.greatest(F.length("__norm") - F.lit(k - 1), F.lit(1)))
-        ).alias("__i"),
-    )
-    # hash BEFORE the distinct: xxhash64 of a 5-char substr is ~ns-cheap,
-    # and the dedup shuffle then carries two longs instead of strings —
-    # measured 1.7x faster at 1M shingle rows than distinct-on-string
-    d = d.select(
-        F.col(id_col),
-        F.xxhash64(F.col("__norm").substr(F.col("__i"), F.lit(k))).alias(out_col),
-    ).dropDuplicates([id_col, out_col])
-    return d
 
 
 def minhash_signatures(

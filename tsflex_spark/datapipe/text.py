@@ -26,6 +26,43 @@ def _tokens(col: Column) -> Column:
     return F.filter(F.split(col, r"\s+"), lambda x: x != F.lit(""))
 
 
+def _char_grams(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
+    """(id, __g) — one row per character k-gram position of the
+    lowercased, whitespace-collapsed ``text_col``; ``__g`` is the gram's
+    UTF-8 bytes (binary). NULL text yields one NULL gram, and text of at
+    most k characters yields one gram, the whole text (``""`` included).
+
+    PERF: positions are exploded FIRST and the gram is a plain slice
+    projection, so everything stays in whole-stage codegen (a
+    ``transform`` lambda is interpreted per element). A string
+    ``substr`` walks the UTF-8 bytes from the start to find character i,
+    so slicing every position costs O(n²) per document. When the text
+    is ASCII (Spark's character count equals its byte count, so
+    character i is byte i) the gram is sliced from the raw bytes in
+    O(k) instead. Other text — multi-byte characters or invalid UTF-8 —
+    keeps the string ``substr``; its cast to binary is the same bytes,
+    so ``xxhash64`` of either gram equals ``xxhash64`` of the string.
+    The raw-bytes ``cast`` (not ``encode``) keeps invalid UTF-8 as is.
+    """
+    norm = F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
+    # __norm is referenced several times, so CollapseProject keeps it
+    # as its own projection and the regex runs once per document
+    d = df.select(F.col(id_col), norm.alias("__norm"))
+    n = F.length("__norm")
+    d = d.select(
+        F.col(id_col),
+        F.col("__norm"),
+        F.col("__norm").cast("binary").alias("__bytes"),
+        (n == F.octet_length("__norm")).alias("__ascii"),
+        F.explode(F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))).alias("__i"),
+    )
+    i, width = F.col("__i"), F.lit(k)
+    gram = F.when(F.col("__ascii"), F.col("__bytes").substr(i, width)).otherwise(
+        F.col("__norm").substr(i, width).cast("binary")
+    )
+    return d.select(F.col(id_col), gram.alias("__g"))
+
+
 def text_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Char + token counts per document (oracle-matched in DuckDB)."""
     df = fan_out(df)
@@ -636,18 +673,7 @@ def hash_embed(
     ``dim``-wide buffer per doc, never the n-grams), then a codegen
     normalize. No Python anywhere.
     """
-    d = fan_out(df.select(id_col, text_col))
-    d = d.withColumn(
-        "__norm", F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
-    )
-    n = F.length("__norm")
-    idx = F.sequence(F.lit(1), F.greatest(n - F.lit(ngram - 1), F.lit(1)))
-    rows = d.select(
-        id_col,
-        F.explode(
-            F.transform(idx, lambda i: F.col("__norm").substr(i, F.lit(ngram)))
-        ).alias("__g"),
-    )
+    rows = _char_grams(fan_out(df.select(id_col, text_col)), text_col, id_col, ngram)
     h = F.xxhash64("__g")
     sign = F.when(F.pmod(F.xxhash64("__g", F.lit(1)), F.lit(2)) == 0, 1).otherwise(-1)
     b = F.pmod(h, F.lit(dim))

@@ -85,6 +85,47 @@ def long_to_wide(
     return piv.agg(F.first(value_col))
 
 
+def _plans_exchange(plan) -> bool:
+    """True when the physical ``plan`` holds an exchange (or, under AQE,
+    a subquery)."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        # AQE wraps exactly the plans with an exchange or a subquery
+        return True
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if "Exchange" in node.nodeName():
+            return True
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return False
+
+
+def _known_partitions(df: DataFrame) -> int | None:
+    """``df``'s partition count when it is known without running a job,
+    else None.
+
+    An input that plans no exchange (a scan, a checkpoint, a narrow chain
+    over them) is probed through the RDD of its own physical plan, which
+    runs nothing. An output of ``repartition(n)`` keeps ``n`` (AQE never
+    changes a user-fixed count), read from the plan. Any other exchange
+    — a join or aggregate output — gives None: probing it would run every
+    upstream shuffle stage at plan-build time under AQE, and the real
+    action would then run them again.
+    """
+    qe = df._jdf.queryExecution()
+    if not _plans_exchange(qe.executedPlan()):
+        return qe.toRdd().getNumPartitions()
+    node = qe.optimizedPlan()
+    while node.nodeName() in ("Project", "Filter"):
+        node = node.child()
+    if node.nodeName() == "Repartition" and node.shuffle():
+        return node.numPartitions()
+    if node.nodeName() == "RepartitionByExpression" and node.optNumPartitions().isDefined():
+        return node.optNumPartitions().get()
+    return None
+
+
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Repartition a narrow input before compute-amplifying ops.
 
@@ -95,6 +136,9 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     the shuffle moves only the narrow input (cheap), the amplified work
     then spreads across every core. A 100 TB input already has thousands
     of splits and passes through untouched.
+
+    An input whose count is unknown without a job (a join or aggregate
+    output, see :func:`_known_partitions`) is repartitioned unprobed.
     """
     if df.isStreaming:
         # streams have no static partition count to probe (df.rdd throws);
@@ -102,7 +146,8 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
         return df
     sc = df.sparkSession.sparkContext
     target = int(min_partitions or sc.defaultParallelism)
-    if df.rdd.getNumPartitions() < target:
+    n = _known_partitions(df)
+    if n is None or n < target:
         return df.repartition(target)
     return df
 
@@ -125,13 +170,14 @@ def keyed_fan_out(df: DataFrame, key_col: str) -> DataFrame:
     granularity (no task explodes more than one input split's worth of
     rows); small inputs keep the bare ``REPARTITION_BY_COL`` form so
     AQE may still coalesce. Skew note: one key = one partition's worth
-    of work is the explode's inherent granularity either way.
+    of work is the explode's inherent granularity either way. An input
+    whose count is unknown without a job (see :func:`_known_partitions`)
+    takes the bare form.
     """
     if df.isStreaming:
         return df.repartition(F.col(key_col))
-    sc = df.sparkSession.sparkContext
-    in_parts = df.rdd.getNumPartitions()
-    if in_parts > sc.defaultParallelism:
+    in_parts = _known_partitions(df)
+    if in_parts is not None and in_parts > df.sparkSession.sparkContext.defaultParallelism:
         return df.repartition(in_parts, F.col(key_col))
     return df.repartition(F.col(key_col))
 
