@@ -103,7 +103,8 @@ def test_exchange_input_is_not_probed(spark):
     assert list(jobs) == []
     keyed = keyed_fan_out(agg, "k")._jdf.queryExecution().optimizedPlan().toString()
     assert "RepartitionByExpression" in keyed
-    assert fan_out(agg).rdd.getNumPartitions() == par
+    planned = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert fan_out(agg).rdd.getNumPartitions() == max(par, planned)
     assert sorted(map(tuple, keyed_fan_out(agg, "k").collect())) == sorted(
         map(tuple, agg.collect())
     )
@@ -124,3 +125,35 @@ def test_one_split_scan_still_fans_out(spark, tmp_path):
     assert fan_out(scan).rdd.getNumPartitions() == par
     plan = keyed_fan_out(scan, "k")._jdf.queryExecution().optimizedPlan().toString()
     assert "RepartitionByExpression" in plan
+
+
+def test_wide_exchange_input_keeps_its_planned_width(spark):
+    # a join output planned wider than defaultParallelism is re-split to
+    # its planned width, never narrowed to one partition per core
+    par = spark.sparkContext.defaultParallelism
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(par + 5))
+    try:
+        left = spark.range(2000).withColumn("k", F.col("id") % 97)
+        right = spark.range(97).withColumnRenamed("id", "k")
+        joined = left.join(right.hint("shuffle_hash"), "k")
+        jobs = _jobs_launched(spark, "fan_out_wide_join", lambda: fan_out(joined))
+        assert list(jobs) == []
+        assert fan_out(joined).rdd.getNumPartitions() == par + 5
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def test_force_applied_aqe_scan_is_still_probed(spark):
+    # under spark.sql.adaptive.forceApply AQE wraps a plain scan too; the
+    # scan has no exchange, so keyed_fan_out still pins to its splits
+    par = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.adaptive.forceApply", "true")
+    try:
+        scan = spark.range(0, 4000, 1, par + 3).withColumn("k", F.col("id") % 7)
+        assert scan._jdf.queryExecution().executedPlan().nodeName() == "AdaptiveSparkPlan"
+        jobs = _jobs_launched(spark, "fan_out_forced_aqe", lambda: keyed_fan_out(scan, "k"))
+        assert list(jobs) == []
+        assert keyed_fan_out(scan, "k").rdd.getNumPartitions() == par + 3
+    finally:
+        spark.conf.unset("spark.sql.adaptive.forceApply")

@@ -127,7 +127,8 @@ def test_shingle_hashes_match_code_point_reference(spark, k):
 @pytest.mark.parametrize("k", [1, 3, 5, 9])
 def test_invalid_utf8_shingles_match_substr(spark, k):
     # lone continuation bytes, an overlong lead, a stray 0xFF and a lead
-    # byte truncated at the end: Spark counts each as one character
+    # byte truncated at the end; the normalizing regexp_replace turns
+    # each into U+FFFD, on both sides
     df = spark.sql(
         "SELECT * FROM VALUES "
         "(1L, CAST(unhex('41808142C0AF4344FF4546') AS STRING)), "

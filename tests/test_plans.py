@@ -723,3 +723,28 @@ def test_point_in_time_join_plan_shape(spark):
     out = point_in_time_join(lab, {"f1": f1, "f2": f2}, on="ts", by=["k"], strict=True)
     rep = scale_report(out)
     assert rep["findings"] == [], rep["findings"]
+
+
+def test_char_grams_split_once_per_document(spark):
+    """Every char-gram site splits the text into characters once per
+    document: the ``split`` sits BELOW the Generate, never in the
+    per-gram projection above it."""
+    from tsflex_spark.datapipe.classifier import QualityClassifier, score_quality
+    from tsflex_spark.datapipe.dedup import shingle_rows
+    from tsflex_spark.datapipe.text import hash_embed
+
+    docs = spark.createDataFrame(
+        [(1, "Crème brûlée"), (2, "plain ascii text"), (3, None)],
+        "doc_id long, text string",
+    )
+    clf = QualityClassifier(weights=[0.1] * 16, intercept=0.0, dim=16, ngram=3)
+    for df in (
+        shingle_rows(docs, "text", "doc_id", 3),
+        hash_embed(docs, "text", "doc_id", dim=16, ngram=3),
+        score_quality(docs, clf, "text", "doc_id"),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        above, sep, below = plan.partition("Generate explode(sequence(1, ")
+        assert sep, plan
+        assert "split(" not in above and "substr" not in above, plan
+        assert "split(lower(regexp_replace(" in below, plan

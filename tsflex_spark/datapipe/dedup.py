@@ -84,12 +84,10 @@ def shingle_rows(
     ~10x slower; worse, an inner ``explode`` after a transform triggers
     InferFiltersFromGenerate, which re-inlines the whole shingle
     expression into the scan filter (O(n^2) regex per row measured 220s
-    at sf0.1 -> this shape: ~2s). The slice is O(k): on ASCII text it
-    cuts the raw bytes, where a string ``substr`` walks the UTF-8 bytes
-    from the start to character i — O(position) per shingle, O(n²) per
-    document. Measured on the perfbench corpus_dedup input (1000 docs of
-    ~200 words, 0.93M distinct shingles), 3 task threads of a 4-core VM:
-    the whole ``shingle_rows`` pass 2.57 s → 0.66 s (median of 7).
+    at sf0.1 -> this shape: ~2s). The slice is O(k): it joins k entries
+    of the document's character array, where a string ``substr`` walks
+    the UTF-8 bytes from the start to character i — O(position) per
+    shingle, O(n²) per document.
 
     PERF (r11, guide §2.3/§2.4 — shuffle the payload once, never the
     exploded form): the input is hash-repartitioned BY ID before the
@@ -119,8 +117,7 @@ def shingle_rows(
     d = _char_grams(keyed_fan_out(df, id_col), text_col, id_col, k)
     # hash BEFORE the distinct: the dedup shuffle then carries two longs
     # instead of strings — measured 1.7x faster at 1M shingle rows than
-    # distinct-on-string. xxhash64 of the binary gram equals xxhash64 of
-    # the same k-char string.
+    # distinct-on-string
     return d.select(F.col(id_col), F.xxhash64("__g").alias(out_col)).dropDuplicates(
         [id_col, out_col]
     )

@@ -28,38 +28,34 @@ def _tokens(col: Column) -> Column:
 
 def _char_grams(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
     """(id, __g) — one row per character k-gram position of the
-    lowercased, whitespace-collapsed ``text_col``; ``__g`` is the gram's
-    UTF-8 bytes (binary). NULL text yields one NULL gram, and text of at
-    most k characters yields one gram, the whole text (``""`` included).
+    lowercased, whitespace-collapsed ``text_col``. NULL text yields one
+    NULL gram, and text of at most k characters yields one gram, the
+    whole text (``""`` included).
 
-    PERF: positions are exploded FIRST and the gram is a plain slice
+    PERF: positions are exploded FIRST and the gram is a plain
     projection, so everything stays in whole-stage codegen (a
     ``transform`` lambda is interpreted per element). A string
-    ``substr`` walks the UTF-8 bytes from the start to find character i,
-    so slicing every position costs O(n²) per document. When the text
-    is ASCII (Spark's character count equals its byte count, so
-    character i is byte i) the gram is sliced from the raw bytes in
-    O(k) instead. Other text — multi-byte characters or invalid UTF-8 —
-    keeps the string ``substr``; its cast to binary is the same bytes,
-    so ``xxhash64`` of either gram equals ``xxhash64`` of the string.
-    The raw-bytes ``cast`` (not ``encode``) keeps invalid UTF-8 as is.
+    ``substr(s, i, k)`` walks the UTF-8 bytes from the start to find
+    character i: O(position) per gram, O(n²) per document. Instead the
+    text is split into its characters once per document and each gram
+    joins a k-slice of that array, O(k). ``split(s, '')`` cuts the bytes
+    into the characters ``length`` and ``substr`` count, without
+    decoding them; the normalized text is valid UTF-8 anyway
+    (``regexp_replace`` decodes it, turning each malformed byte into
+    U+FFFD). The split sits BELOW the explode: a non-generator item in
+    the explode's own select is evaluated above the Generate, once per
+    gram.
     """
     norm = F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
-    # __norm is referenced several times, so CollapseProject keeps it
-    # as its own projection and the regex runs once per document
-    d = df.select(F.col(id_col), norm.alias("__norm"))
-    n = F.length("__norm")
+    d = df.select(F.col(id_col), F.split(norm, "").alias("__chars"))
+    # size(NULL) is NULL (or -1), so NULL text still yields one position
+    npos = F.greatest(F.size("__chars") - F.lit(k - 1), F.lit(1))
     d = d.select(
         F.col(id_col),
-        F.col("__norm"),
-        F.col("__norm").cast("binary").alias("__bytes"),
-        (n == F.octet_length("__norm")).alias("__ascii"),
-        F.explode(F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))).alias("__i"),
+        F.col("__chars"),
+        F.explode(F.sequence(F.lit(1), npos)).alias("__i"),
     )
-    i, width = F.col("__i"), F.lit(k)
-    gram = F.when(F.col("__ascii"), F.col("__bytes").substr(i, width)).otherwise(
-        F.col("__norm").substr(i, width).cast("binary")
-    )
+    gram = F.array_join(F.slice("__chars", F.col("__i"), F.lit(k)), "")
     return d.select(F.col(id_col), gram.alias("__g"))
 
 

@@ -86,15 +86,20 @@ def long_to_wide(
 
 
 def _plans_exchange(plan) -> bool:
-    """True when the physical ``plan`` holds an exchange (or, under AQE,
-    a subquery)."""
+    """True when the physical ``plan`` holds an exchange or a subquery;
+    executing such a plan runs a job before its first task."""
     if plan.nodeName() == "AdaptiveSparkPlan":
-        # AQE wraps exactly the plans with an exchange or a subquery
-        return True
+        # AQE wraps plans with an exchange or a subquery, and every plan
+        # under spark.sql.adaptive.forceApply: look at its current plan,
+        # exchanges included (wrapped in query stages once it has run)
+        plan = plan.executedPlan()
     stack = [plan]
     while stack:
         node = stack.pop()
-        if "Exchange" in node.nodeName():
+        if "QueryStage" in node.nodeName():
+            stack.append(node.plan())
+            continue
+        if "Exchange" in node.nodeName() or not node.subqueries().isEmpty():
             return True
         kids = node.children()
         stack.extend(kids.apply(i) for i in range(kids.size()))
@@ -134,11 +139,16 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     many the cluster has. When the scan has fewer partitions than the
     target (default ``sc.defaultParallelism``), round-robin repartition —
     the shuffle moves only the narrow input (cheap), the amplified work
-    then spreads across every core. A 100 TB input already has thousands
+    then spreads across every core. A 100 TB scan already has thousands
     of splits and passes through untouched.
 
     An input whose count is unknown without a job (a join or aggregate
-    output, see :func:`_known_partitions`) is repartitioned unprobed.
+    output, see :func:`_known_partitions`) is repartitioned unprobed, to
+    at least ``spark.sql.shuffle.partitions`` — the width its own
+    exchange plans — so a wide join output is never narrowed to one
+    partition per core. That costs one shuffle of the input; probing
+    instead would run every upstream shuffle stage at plan-build time
+    and again in the real action.
     """
     if df.isStreaming:
         # streams have no static partition count to probe (df.rdd throws);
@@ -147,7 +157,10 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     sc = df.sparkSession.sparkContext
     target = int(min_partitions or sc.defaultParallelism)
     n = _known_partitions(df)
-    if n is None or n < target:
+    if n is None:
+        planned = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        return df.repartition(max(target, planned))
+    if n < target:
         return df.repartition(target)
     return df
 
