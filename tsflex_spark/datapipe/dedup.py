@@ -87,7 +87,10 @@ def shingle_rows(
     at sf0.1 -> this shape: ~2s). The slice is O(k): it joins k entries
     of the document's character array, where a string ``substr`` walks
     the UTF-8 bytes from the start to character i — O(position) per
-    shingle, O(n²) per document.
+    shingle, O(n²) per document. Measured on the perfbench corpus_dedup
+    input (1000 docs, ~1310 characters each), 3 task threads of a 4-core
+    VM: the whole ``shingle_rows`` pass 2.87 s → 0.80 s, and 2.70 s →
+    0.68 s with its letters swapped for CJK characters.
 
     PERF (r11, guide §2.3/§2.4 — shuffle the payload once, never the
     exploded form): the input is hash-repartitioned BY ID before the
