@@ -10,6 +10,9 @@ decimals on BOTH sides to absorb summation-order differences.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+import warnings
 from collections.abc import Callable
 
 import pandas as pd
@@ -17,6 +20,38 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tsflex_spark import FeatureCollection, FeatureDescriptor
+from tsflex_spark.datapipe.dedup import (
+    connected_components,
+    dedup_against_store,
+    duplicate_spans,
+    edit_similarity,
+    fuzzy_join,
+    minhash_dedup,
+    minhash_lsh_candidates,
+    minhash_signatures,
+    ngram_jaccard,
+    remove_duplicate_spans,
+    shingle_rows,
+    simhash_pairs,
+    sketch_signatures,
+    span_gram_rows,
+)
+from tsflex_spark.datapipe.dsir import (
+    fit_bucket_logratio,
+    hashed_buckets,
+    importance_weights,
+)
+from tsflex_spark.datapipe.graph import pagerank
+from tsflex_spark.datapipe.text import (
+    _tokens,
+    hash_embed,
+    language_id,
+    quality_score,
+    repetition_stats,
+    top_ngrams,
+)
+from tsflex_spark.utils.data import fan_out
+from tsflex_spark.utils.pool import LegPool
 from tsflex_spark.utils.time_args import ts_micros
 
 # epoch-microsecond window constants shared by Spark + DuckDB oracle
@@ -39,6 +74,18 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tsflex_spark.sources import read_events
 
     return read_events(spark, sf_dir)
+
+
+def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    _utc(spark)
+    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
+def _corpus_shingles(docs: DataFrame) -> DataFrame:
+    """The corpus (doc_id, 5-shingle hash) table, checkpointed: every
+    gate that shingles the whole corpus feeds it to several plan
+    branches (sizes + both pair sides of the Jaccard verify, sketches)."""
+    return shingle_rows(docs, "text", "doc_id").localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------- q:
@@ -1216,8 +1263,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the IP passthrough) and verifies ``extract_urls`` counts, the first
     URL's registrable domain, and the post-``domain_filter`` blocklist
     survivor count — C4/RefinedWeb source filtering, replayed in SQL."""
-    _utc(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _documents(spark, sf_dir)
     from tsflex_spark.datapipe.curation import deterministic_split, stratified_sample
     from tsflex_spark.datapipe.dedup import dedup_exact_stats, remove_duplicate_lines
 
@@ -1796,8 +1842,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop as a recursive CTE over the DISTINCT word vocabulary (rank =
     list_position over the literal merge keys), then sums token counts
     and stable vocab ids per document."""
-    _utc(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _documents(spark, sf_dir)
     from tsflex_spark.datapipe.lm import bigram_rows, score_perplexity, train_ngram_lm
     from tsflex_spark.datapipe.text import text_stats, token_count_bpe_ish
     from tsflex_spark.utils.distributed import exact_quantiles
@@ -1815,8 +1860,6 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (guide §2.6) — ~1.5 s less build wall at sf0.1, identical plans.
     # Concurrent first use of the shared bg checkpoint is safe (the
     # block manager locks per-partition computation).
-    from tsflex_spark.utils.pool import LegPool
-
     from tsflex_spark.datapipe.lm import score_perplexity_kn, train_kn_lm
     from tsflex_spark.utils.distributed import exact_quantiles as _eq
 
@@ -1858,76 +1901,76 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.when(F.col("q") == 0.95, F.col("value"))).alias("p95_chars"),
         )
 
-    leg_pool = LegPool(3, "text_stats")
-    ppl_fut = leg_pool.submit(_laplace_leg)
-    kn_fut = leg_pool.submit(_kn_leg)
-    cuts_fut = leg_pool.submit(_cuts_leg)
+    with LegPool(3, "text_stats") as leg_pool:
+        ppl_fut = leg_pool.submit(_laplace_leg)
+        kn_fut = leg_pool.submit(_kn_leg)
+        cuts_fut = leg_pool.submit(_cuts_leg)
 
-    out = base.join(bpe, on="doc_id").join(leg_pool.result(ppl_fut), on="doc_id")
-    from tsflex_spark.datapipe.text import chunk_documents
+        out = base.join(bpe, on="doc_id").join(leg_pool.result(ppl_fut), on="doc_id")
+        from tsflex_spark.datapipe.text import chunk_documents
 
-    ch = chunk_documents(docs, "text", id_col="doc_id", max_tokens=64, overlap=16)
-    cha = ch.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_chunks"),
-        F.sum("n_chunk_tokens").alias("sum_chunk_tokens"),
-        F.sum(F.length("chunk_text")).cast("long").alias("sum_chunk_chars"),
-    )
-    out = out.join(cha, on="doc_id")
-    # KN training consumes the SAME bigram explode the Laplace leg
-    # checkpointed above (g-col rename instead of re-exploding the
-    # corpus); the chain ran on the background pool started above
-    out = out.join(leg_pool.result(kn_fut), on="doc_id")
-    from tsflex_spark.datapipe.text import normalize_unicode
-
-    nsrc = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            # DECOMPOSED combining sequences (explicit escapes; a
-            # composed literal would make normalization a no-op)
-            F.lit(" nfc:e\u0301:A\u030A:o\u0308"),
-        ).alias("__nf"),
-    )
-    nu = normalize_unicode(nsrc, "__nf", out_col="__nfo", form="NFC")
-    nleg = nu.select(
-        "doc_id",
-        F.length("__nfo").cast("long").alias("nfc_chars"),
-        F.expr("right(__nfo, 10)").alias("nfc_tail"),
-    )
-    out = out.join(nleg, on="doc_id")
-    from tsflex_spark.datapipe.text import pack_sequences
-
-    sz = docs.select(
-        "doc_id",
-        (F.length("text").cast("long") * 1000 + F.col("doc_id")).alias("__cnt"),
-    )
-    packed = pack_sequences(
-        sz,
-        "__cnt",
-        budget=8_000_000,
-        deterministic=True,
-        id_col="doc_id",
-        num_buckets=32,
-    )
-    pleg = packed.select("doc_id", F.col("bin_id").cast("long").alias("pack_bin"))
-    out = out.join(pleg, on="doc_id")
-    from tsflex_spark.datapipe.bpe import BPETokenizer, bpe_encode
-
-    btok = BPETokenizer(
-        _BPE_GATE_MERGES, lowercase=True, alphabet=_BPE_GATE_ALPHABET
-    )
-    enc = bpe_encode(docs, "text", "doc_id", btok, out_col="__toks", ids=True)
-    bleg = (
-        enc.select("doc_id", F.col("n_tokens"), F.explode_outer("__toks").alias("__tid"))
-        .groupBy("doc_id")
-        .agg(
-            F.first("n_tokens").cast("long").alias("bpe_enc_tokens"),
-            F.coalesce(F.sum("__tid"), F.lit(0)).cast("long").alias("bpe_enc_id_sum"),
+        ch = chunk_documents(docs, "text", id_col="doc_id", max_tokens=64, overlap=16)
+        cha = ch.groupBy("doc_id").agg(
+            F.count(F.lit(1)).alias("n_chunks"),
+            F.sum("n_chunk_tokens").alias("sum_chunk_tokens"),
+            F.sum(F.length("chunk_text")).cast("long").alias("sum_chunk_chars"),
         )
-    )
-    out = out.join(bleg, on="doc_id")
-    # quantile cutoffs from the background pool (see _cuts_leg above)
-    out = out.join(F.broadcast(leg_pool.result(cuts_fut)))
+        out = out.join(cha, on="doc_id")
+        # KN training consumes the SAME bigram explode the Laplace leg
+        # checkpointed above (g-col rename instead of re-exploding the
+        # corpus); the chain ran on the background pool started above
+        out = out.join(leg_pool.result(kn_fut), on="doc_id")
+        from tsflex_spark.datapipe.text import normalize_unicode
+
+        nsrc = docs.select(
+            "doc_id",
+            F.concat(
+                F.col("text"),
+                # DECOMPOSED combining sequences (explicit escapes; a
+                # composed literal would make normalization a no-op)
+                F.lit(" nfc:e\u0301:A\u030A:o\u0308"),
+            ).alias("__nf"),
+        )
+        nu = normalize_unicode(nsrc, "__nf", out_col="__nfo", form="NFC")
+        nleg = nu.select(
+            "doc_id",
+            F.length("__nfo").cast("long").alias("nfc_chars"),
+            F.expr("right(__nfo, 10)").alias("nfc_tail"),
+        )
+        out = out.join(nleg, on="doc_id")
+        from tsflex_spark.datapipe.text import pack_sequences
+
+        sz = docs.select(
+            "doc_id",
+            (F.length("text").cast("long") * 1000 + F.col("doc_id")).alias("__cnt"),
+        )
+        packed = pack_sequences(
+            sz,
+            "__cnt",
+            budget=8_000_000,
+            deterministic=True,
+            id_col="doc_id",
+            num_buckets=32,
+        )
+        pleg = packed.select("doc_id", F.col("bin_id").cast("long").alias("pack_bin"))
+        out = out.join(pleg, on="doc_id")
+        from tsflex_spark.datapipe.bpe import BPETokenizer, bpe_encode
+
+        btok = BPETokenizer(
+            _BPE_GATE_MERGES, lowercase=True, alphabet=_BPE_GATE_ALPHABET
+        )
+        enc = bpe_encode(docs, "text", "doc_id", btok, out_col="__toks", ids=True)
+        bleg = (
+            enc.select("doc_id", F.col("n_tokens"), F.explode_outer("__toks").alias("__tid"))
+            .groupBy("doc_id")
+            .agg(
+                F.first("n_tokens").cast("long").alias("bpe_enc_tokens"),
+                F.coalesce(F.sum("__tid"), F.lit(0)).cast("long").alias("bpe_enc_id_sum"),
+            )
+        )
+        out = out.join(bleg, on="doc_id")
+        # quantile cutoffs from the background pool (see _cuts_leg above)
+        out = out.join(F.broadcast(leg_pool.result(cuts_fut)))
     return out.select(
         "doc_id",
         "n_chars",
@@ -2141,6 +2184,43 @@ ORDER BY s.doc_id
 """.replace("__BPE_LEG__", _bpe_leg_sql())
 
 
+def _quality_features(docs: DataFrame) -> DataFrame:
+    return quality_score(docs, "text", id_col="doc_id")
+
+
+def _language_ids(docs: DataFrame) -> DataFrame:
+    return language_id(docs, "text", id_col="doc_id")
+
+
+def _repetition_features(docs: DataFrame) -> DataFrame:
+    return repetition_stats(docs, "text", id_col="doc_id")
+
+
+def _dsir_buckets(docs: DataFrame) -> DataFrame:
+    """The ONE corpus gram pass (per-doc hashed bucket counts), checkpointed.
+    It feeds both the log-ratio fit (raw side) and the per-doc weights.
+    Checkpoint-free, the fit consumed the gram exchange from inside a
+    BROADCAST subtree that AQE materializes on a separate thread, so
+    stage-cache dedup was a race and a REST profile caught the gram pass
+    executing TWICE; the checkpoint (n_docs x 64 rows) makes the single
+    pass deterministic."""
+    return hashed_buckets(docs, "text", "doc_id", 64).localCheckpoint(eager=True)
+
+
+def _dsir_weights(docs: DataFrame, dbk: DataFrame) -> DataFrame:
+    target = docs.where(F.col("doc_id") % 10 == 0).select("text")
+    lr = fit_bucket_logratio(
+        target, docs.select("text"), "text", num_buckets=64, raw_buckets=dbk
+    )
+    return importance_weights(
+        docs, lr, "text", id_col="doc_id", num_buckets=64, buckets=dbk
+    ).select(
+        "doc_id",
+        F.col("n_grams").alias("dsir_n_grams"),
+        F.col("logw_e6").alias("dsir_logw_e6"),
+    )
+
+
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text quality features (SURVEY north-star): length / word-length /
     punct / digit / upper / stopword ratios + composite score — pure
@@ -2165,87 +2245,46 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHOLE chain — Spark xxhash64 over every distinct gram STRING (the
     recursive-CTE XXH64 replay), bucket histograms for target and raw,
     the alpha-smoothed ln(p/q) table, and the per-doc Σ c·lr_e6."""
-    _utc(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    from tsflex_spark.datapipe.dsir import hashed_buckets as _hb
-    from tsflex_spark.utils.pool import LegPool
+    docs = _documents(spark, sf_dir)
+    from tsflex_spark.datapipe.text import redact_pii
 
-    # DSIR gram-pass checkpoint on a background thread, submitted BEFORE
-    # the other legs' plan construction so the py4j build below overlaps
-    # the pass (guide §2.6); joined at the dsir section — see the
-    # race-on-exchange-reuse note there.
-    dsir_pool = LegPool(1, "quality_dsir")
-    dbk_fut = dsir_pool.submit(
-        lambda: _hb(docs, "text", "doc_id", 64).localCheckpoint(eager=True)
-    )
-    from tsflex_spark.datapipe.text import (
-        language_id,
-        quality_score,
-        redact_pii,
-        repetition_stats,
-    )
-
-    q = quality_score(docs, "text", id_col="doc_id")
-    lang = language_id(docs, "text", id_col="doc_id")
-    rep = repetition_stats(docs, "text", id_col="doc_id")
-    pii_src = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" reach me at user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@mail.example.com or 192.168."),
-            (F.col("doc_id") % 256).cast("string"),
-            F.lit(".7, SSN 123-45-"),
-            F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-        ).alias("__txt"),
-    )
-    red = redact_pii(
-        pii_src,
-        "__txt",
-        out_col="__red",
-        kinds=("email", "ssn", "ipv4", "cc16"),
-        count_col="pii_count",
-    ).select(
-        "doc_id",
-        F.col("pii_count").cast("long").alias("pii_count"),
-        F.length("__red").cast("long").alias("n_chars_redacted"),
-    )
-    from tsflex_spark.datapipe.dsir import (
-        fit_bucket_logratio,
-        importance_weights,
-    )
-
-    # r10: ONE corpus gram pass feeds both the log-ratio fit (raw side)
-    # and the per-doc weights — previously each exploded the corpus
-    # separately (hashed_buckets reuse; identical integers either way).
-    # r11 (revised): the checkpoint-free shape relied on runtime
-    # exchange reuse, but the log-ratio fit consumes the gram exchange
-    # from inside a BROADCAST subtree that AQE materializes on a
-    # separate thread — stage-cache dedup is then a race, and a REST
-    # profile caught the full gram pass executing TWICE (two stages
-    # each writing the same 2.3 MB (id,bucket) shuffle). Checkpointing
-    # the aggregated dbk frame (n_docs x 64 rows — tiny) makes the
-    # single gram pass deterministic; the build ran on the background
-    # LegPool thread submitted at the top of this gate, so the four
-    # legs' plan construction above overlapped it (guide §2.6).
-    dbk = dsir_pool.result(dbk_fut)
-    target = docs.where(F.col("doc_id") % 10 == 0).select("text")
-    lr = fit_bucket_logratio(
-        target, docs.select("text"), "text", num_buckets=64, raw_buckets=dbk
-    )
-    dw = importance_weights(
-        docs, lr, "text", id_col="doc_id", num_buckets=64, buckets=dbk
-    ).select(
-        "doc_id",
-        F.col("n_grams").alias("dsir_n_grams"),
-        F.col("logw_e6").alias("dsir_logw_e6"),
-    )
+    # the DSIR gram-pass checkpoint builds on a background thread,
+    # submitted BEFORE the other legs' plan construction so the py4j
+    # build below overlaps the pass (guide §2.6)
+    with LegPool(1, "quality_dsir") as dsir_pool:
+        dbk_fut = dsir_pool.submit(lambda: _dsir_buckets(docs))
+        q = _quality_features(docs)
+        lang = _language_ids(docs)
+        rep = _repetition_features(docs)
+        pii_src = docs.select(
+            "doc_id",
+            F.concat(
+                F.col("text"),
+                F.lit(" reach me at user"),
+                F.col("doc_id").cast("string"),
+                F.lit("@mail.example.com or 192.168."),
+                (F.col("doc_id") % 256).cast("string"),
+                F.lit(".7, SSN 123-45-"),
+                F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
+            ).alias("__txt"),
+        )
+        red = redact_pii(
+            pii_src,
+            "__txt",
+            out_col="__red",
+            kinds=("email", "ssn", "ipv4", "cc16"),
+            count_col="pii_count",
+        ).select(
+            "doc_id",
+            F.col("pii_count").cast("long").alias("pii_count"),
+            F.length("__red").cast("long").alias("n_chars_redacted"),
+        )
+        dbk = dsir_pool.result(dbk_fut)
     return (
         q.join(lang, on="doc_id")
         .join(rep, on="doc_id")
         .join(red, on="doc_id")
-        .join(dw, on="doc_id")
+        .join(_dsir_weights(docs, dbk), on="doc_id")
         .orderBy("doc_id")
     )
 
@@ -2454,8 +2493,7 @@ def q_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stripes+tails) and the xor/min/max of the actual fingerprint VALUES
     must match bit-for-bit (the xor flips on any single-bit error in any
     document's hash)."""
-    _utc(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _documents(spark, sf_dir)
     from tsflex_spark.datapipe.text import fingerprint
 
     fp = fingerprint(docs, "text", id_col="doc_id")
@@ -2582,6 +2620,55 @@ SELECT (SELECT count(*) FROM documents) AS n_docs,
 """
 
 
+def _consecutive_jaccard(docs: DataFrame, sh: DataFrame) -> DataFrame:
+    """Exact 5-shingle Jaccard of the pairs (2i, 2i+1). prune=False: the
+    pairs touch EVERY doc, so the involved-docs semi-join would keep
+    100% of the shingle table."""
+    pairs = docs.select(F.col("doc_id").alias("id_a")).where(
+        F.col("id_a") % 2 == 0
+    ).withColumn("id_b", F.col("id_a") + 1)
+    pairs = pairs.join(
+        docs.select(F.col("doc_id").alias("id_b")), on="id_b", how="left_semi"
+    )
+    return ngram_jaccard(
+        docs, pairs, "text", id_col="doc_id", shingles=sh, prune=False
+    ).withColumn("kind", F.lit("consec"))
+
+
+def _fuzzy_pairs(docs: DataFrame) -> DataFrame:
+    """Exact-recall ``fuzzy_join`` at threshold 0.5 between the even and
+    odd docs of the doc_id<200 slice. The slice is shingled directly so
+    the predicate stays at the parquet scan, where filtering the
+    checkpointed CORPUS shingle table would scan all ~10M (id, hash) rows
+    twice to keep 4% of them (measured: 1.9 s -> 0.4 s at sf0.1)."""
+    small = docs.where(F.col("doc_id") < 200)
+    left = small.where(F.col("doc_id") % 2 == 0).select(
+        F.col("doc_id").alias("id_a"), "text"
+    )
+    right = small.where(F.col("doc_id") % 2 == 1).select(
+        F.col("doc_id").alias("id_b"), "text"
+    )
+    small_sh = shingle_rows(small, "text", "doc_id")
+    lsh = small_sh.where(F.col("doc_id") % 2 == 0).select(
+        F.col("doc_id").alias("id_a"), "__s"
+    )
+    rsh = small_sh.where(F.col("doc_id") % 2 == 1).select(
+        F.col("doc_id").alias("id_b"), "__s"
+    )
+    return fuzzy_join(
+        left, right, "text", "id_a", "id_b", threshold=0.5, shingle_k=5,
+        method="exact", left_shingles=lsh, right_shingles=rsh,
+    ).withColumn("kind", F.lit("fuzzy"))
+
+
+def _edit_scores(docs: DataFrame, consec: DataFrame, fuzzy: DataFrame) -> DataFrame:
+    """Levenshtein similarity over 128-char prefixes of EVERY pair of both
+    legs."""
+    return edit_similarity(
+        consec.unionByName(fuzzy), docs, "text", "doc_id", prefix_len=128
+    )
+
+
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram (5-shingle) Jaccard similarity on consecutive-doc pairs
     (SURVEY north-star near-dup verification stage), fused (round 7) with
@@ -2603,54 +2690,10 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     work, identical verification semantics), and the fuzzy leg shingles
     its 200-doc slice directly (parquet doc_id pushdown) instead of
     filtering the 10M-row corpus shingle checkpoint twice."""
-    _utc(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    from tsflex_spark.datapipe.dedup import (
-        edit_similarity,
-        fuzzy_join,
-        ngram_jaccard,
-        shingle_rows,
+    docs = _documents(spark, sf_dir)
+    out = _edit_scores(
+        docs, _consecutive_jaccard(docs, _corpus_shingles(docs)), _fuzzy_pairs(docs)
     )
-
-    pairs = docs.select(F.col("doc_id").alias("id_a")).where(
-        F.col("id_a") % 2 == 0
-    ).withColumn("id_b", F.col("id_a") + 1)
-    pairs = pairs.join(
-        docs.select(F.col("doc_id").alias("id_b")), on="id_b", how="left_semi"
-    )
-    # the shingle table feeds three plan branches — materialize it once;
-    # pairs touch every doc, so the involved-doc prune checkpoint inside
-    # ngram_jaccard would just re-materialize the whole table
-    sh = shingle_rows(docs, "text", "doc_id").localCheckpoint(eager=True)
-    # prune=False: the consecutive pairs touch EVERY doc, so the
-    # involved-docs semi-join would keep 100% of the shingle table
-    consec = ngram_jaccard(
-        docs, pairs, "text", id_col="doc_id", shingles=sh, prune=False
-    ).withColumn("kind", F.lit("consec"))
-    small = docs.where(F.col("doc_id") < 200)
-    left = small.where(F.col("doc_id") % 2 == 0).select(
-        F.col("doc_id").alias("id_a"), "text"
-    )
-    right = small.where(F.col("doc_id") % 2 == 1).select(
-        F.col("doc_id").alias("id_b"), "text"
-    )
-    # the fuzzy sides cover 200 docs: shingling that slice directly keeps
-    # the doc_id<200 predicate at the parquet scan, where filtering the
-    # checkpointed CORPUS shingle table would scan all ~10M (id, hash)
-    # rows twice to keep 4% of them (measured: 1.9 s -> 0.4 s at sf0.1)
-    small_sh = shingle_rows(small, "text", "doc_id")
-    lsh = small_sh.where(F.col("doc_id") % 2 == 0).select(
-        F.col("doc_id").alias("id_a"), "__s"
-    )
-    rsh = small_sh.where(F.col("doc_id") % 2 == 1).select(
-        F.col("doc_id").alias("id_b"), "__s"
-    )
-    fz = fuzzy_join(
-        left, right, "text", "id_a", "id_b", threshold=0.5, shingle_k=5,
-        method="exact", left_shingles=lsh, right_shingles=rsh,
-    ).withColumn("kind", F.lit("fuzzy"))
-    allp = consec.unionByName(fz)
-    out = edit_similarity(allp, docs, "text", "doc_id", prefix_len=128)
     return out.coalesce(1).orderBy("kind", "id_a", "id_b")
 
 
@@ -2708,6 +2751,90 @@ ORDER BY kind, id_a, id_b
 """
 
 
+def _span_tokens(docs: DataFrame) -> DataFrame:
+    """The checkpointed whitespace tokenize: one corpus regex pass shared
+    by the span positions and top_ngrams (tokens= reuse)."""
+    return (
+        fan_out(docs)
+        .select("doc_id", _tokens(F.lower(F.col("text"))).alias("__t"))
+        .localCheckpoint(eager=True)
+    )
+
+
+def _span_positions(docs: DataFrame, tok: DataFrame) -> DataFrame:
+    """The checkpointed (id, pos, gram-hash) table: span detection AND
+    removal both consume it (halves the dominant scan)."""
+    return span_gram_rows(docs, "text", "doc_id", n=8, tokens=tok).localCheckpoint(
+        eager=True
+    )
+
+
+def _span_rows(docs: DataFrame, pos_rows: DataFrame) -> DataFrame:
+    spans = duplicate_spans(
+        docs, "text", id_col="doc_id", n=8, min_occurrences=2,
+        positions=pos_rows,
+    )
+    return spans.select(
+        F.lit("span").alias("kind"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("span_start").cast("long").alias("span_start"),
+        F.col("span_end").cast("long").alias("span_end"),
+        F.col("n_grams").cast("long").alias("n_grams"),
+        F.lit(None).cast("string").alias("ngram"),
+        F.lit(None).cast("long").alias("n_occ"),
+        F.lit(None).cast("double").alias("val"),
+    )
+
+
+def _top_ngram_rows(docs: DataFrame, tok: DataFrame) -> DataFrame:
+    tn = top_ngrams(docs, n=3, k=50, text_col="text", min_count=2, tokens=tok)
+    return tn.select(
+        F.lit("ngram").alias("kind"),
+        F.lit(None).cast("long").alias("doc_id"),
+        F.lit(None).cast("long").alias("span_start"),
+        F.lit(None).cast("long").alias("span_end"),
+        F.lit(None).cast("long").alias("n_grams"),
+        F.col("ngram"),
+        F.col("count").cast("long").alias("n_occ"),
+        F.lit(None).cast("double").alias("val"),
+    )
+
+
+def _hash_embed_rows(docs: DataFrame) -> DataFrame:
+    he = hash_embed(docs, "text", id_col="doc_id", dim=16, ngram=3)
+    return he.select(
+        "doc_id", F.posexplode("embedding").alias("j", "val")
+    ).select(
+        F.lit("hembed").alias("kind"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("j").cast("long").alias("span_start"),
+        F.lit(None).cast("long").alias("span_end"),
+        F.lit(None).cast("long").alias("n_grams"),
+        F.lit(None).cast("string").alias("ngram"),
+        F.lit(None).cast("long").alias("n_occ"),
+        F.col("val"),
+    )
+
+
+def _despan_rows(docs: DataFrame, pos_rows: DataFrame) -> DataFrame:
+    """The REMOVAL half of passage dedup — keep-one canonical occurrence,
+    non-canonical spans cut, text rebuilt. n_grams carries the kept-token
+    count, n_occ the rebuilt length."""
+    rds = remove_duplicate_spans(
+        docs, "text", id_col="doc_id", n=8, out_col="__rb", positions=pos_rows
+    )
+    return rds.select(
+        F.lit("despan").alias("kind"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.lit(None).cast("long").alias("span_start"),
+        F.lit(None).cast("long").alias("span_end"),
+        F.size(F.split(F.col("__rb"), " ")).cast("long").alias("n_grams"),
+        F.lit(None).cast("string").alias("ngram"),
+        F.length("__rb").cast("long").alias("n_occ"),
+        F.lit(None).cast("double").alias("val"),
+    )
+
+
 def q_passage_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Passage-level dedup signal (Lee et al. 2022 ExactSubstr, reshaped
     for Spark: ``dedup.duplicate_spans`` — maximal token spans whose every
@@ -2731,83 +2858,13 @@ def q_passage_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers, their squares sum exactly in doubles, and sqrt + divide
     are correctly rounded — so the coordinates are bit-identical with
     no rounding tolerance."""
-    _utc(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    from tsflex_spark.datapipe.dedup import duplicate_spans
-    from tsflex_spark.datapipe.text import hash_embed, top_ngrams
-
-    # detection AND removal consume the same (id, pos, gram-hash) table —
-    # build it once, checkpoint, pass to both (halves the dominant scan).
-    # Round 8: the whitespace tokenize is ALSO shared with top_ngrams via
-    # the checkpointed token frame (tokens= reuse, one corpus regex pass)
-    from tsflex_spark.datapipe.dedup import span_gram_rows
-    from tsflex_spark.datapipe.text import _tokens
-    from tsflex_spark.utils.data import fan_out
-
-    tok = (
-        fan_out(docs)
-        .select("doc_id", _tokens(F.lower(F.col("text"))).alias("__t"))
-        .localCheckpoint(eager=True)
-    )
-    pos_rows = span_gram_rows(
-        docs, "text", "doc_id", n=8, tokens=tok
-    ).localCheckpoint(eager=True)
-    spans = duplicate_spans(
-        docs, "text", id_col="doc_id", n=8, min_occurrences=2,
-        positions=pos_rows,
-    )
-    sp = spans.select(
-        F.lit("span").alias("kind"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("span_start").cast("long").alias("span_start"),
-        F.col("span_end").cast("long").alias("span_end"),
-        F.col("n_grams").cast("long").alias("n_grams"),
-        F.lit(None).cast("string").alias("ngram"),
-        F.lit(None).cast("long").alias("n_occ"),
-        F.lit(None).cast("double").alias("val"),
-    )
-    tn = top_ngrams(docs, n=3, k=50, text_col="text", min_count=2, tokens=tok)
-    ng = tn.select(
-        F.lit("ngram").alias("kind"),
-        F.lit(None).cast("long").alias("doc_id"),
-        F.lit(None).cast("long").alias("span_start"),
-        F.lit(None).cast("long").alias("span_end"),
-        F.lit(None).cast("long").alias("n_grams"),
-        F.col("ngram"),
-        F.col("count").cast("long").alias("n_occ"),
-        F.lit(None).cast("double").alias("val"),
-    )
-    he = hash_embed(docs, "text", id_col="doc_id", dim=16, ngram=3)
-    hrows = he.select(
-        "doc_id", F.posexplode("embedding").alias("j", "val")
-    ).select(
-        F.lit("hembed").alias("kind"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("j").cast("long").alias("span_start"),
-        F.lit(None).cast("long").alias("span_end"),
-        F.lit(None).cast("long").alias("n_grams"),
-        F.lit(None).cast("string").alias("ngram"),
-        F.lit(None).cast("long").alias("n_occ"),
-        F.col("val"),
-    )
-    # fourth block: the REMOVAL half of passage dedup — keep-one
-    # canonical occurrence, non-canonical spans cut, text rebuilt.
-    # n_grams carries the kept-token count, n_occ the rebuilt length
-    from tsflex_spark.datapipe.dedup import remove_duplicate_spans
-
-    rds = remove_duplicate_spans(
-        docs, "text", id_col="doc_id", n=8, out_col="__rb", positions=pos_rows
-    )
-    dsp = rds.select(
-        F.lit("despan").alias("kind"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.lit(None).cast("long").alias("span_start"),
-        F.lit(None).cast("long").alias("span_end"),
-        F.size(F.split(F.col("__rb"), " ")).cast("long").alias("n_grams"),
-        F.lit(None).cast("string").alias("ngram"),
-        F.length("__rb").cast("long").alias("n_occ"),
-        F.lit(None).cast("double").alias("val"),
-    )
+    docs = _documents(spark, sf_dir)
+    tok = _span_tokens(docs)
+    pos_rows = _span_positions(docs, tok)
+    sp = _span_rows(docs, pos_rows)
+    ng = _top_ngram_rows(docs, tok)
+    hrows = _hash_embed_rows(docs)
+    dsp = _despan_rows(docs, pos_rows)
     # fifth block (round 9): BPE TRAINING behind a hash check — the
     # driver-side merge loop (bpe.train_bpe) runs on a planted
     # micro-corpus (the Sennrich et al. 2016 running example: low x5,
@@ -3019,8 +3076,6 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collects its bounded query side; bm25 collects its df table;
     # pca_train its moments) — independent chains, so they run on a
     # small driver pool and their fetch jobs overlap (guide §2.6).
-    from tsflex_spark.utils.pool import LegPool
-
     # brute leg rides the same knn_join BLAS kernel as the batch leg
     # (one Arrow matmul per corpus partition + per-partition partial
     # top-k) — no interpreted zip_with/aggregate lambda anywhere in the
@@ -3044,71 +3099,72 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb.where(F.col("vec_id") > 4), qs, k=5, q_id_col="q_id"
         ).select(F.lit("knn").alias("method"), "q_id", "vec_id", "cosine", "rank")
 
-    leg_pool = LegPool(2, "cosine_topk")
-    brute_fut = leg_pool.submit(_brute_leg)
-    knn_fut = leg_pool.submit(_knn_leg)
-    # PCA isometry leg: full-rank (k = d) PCA is an orthonormal rotation
-    # of the centered space, so euclidean top-10 in PCA coordinates MUST
-    # equal euclidean top-10 on the raw vectors (DuckDB computes the
-    # latter). Gates pca_train's moment reduction + eigh + pca_transform's
-    # projection end-to-end on ids/ranks (cosine emitted NULL — pca-space
-    # distances differ from raw by rotation float dust, ids don't).
-    from tsflex_spark.datapipe.embedding import pca_train, pca_transform
+    with LegPool(2, "cosine_topk") as leg_pool:
+        brute_fut = leg_pool.submit(_brute_leg)
+        knn_fut = leg_pool.submit(_knn_leg)
+        # PCA isometry leg: full-rank (k = d) PCA is an orthonormal rotation
+        # of the centered space, so euclidean top-10 in PCA coordinates MUST
+        # equal euclidean top-10 on the raw vectors (DuckDB computes the
+        # latter). Gates pca_train's moment reduction + eigh + pca_transform's
+        # projection end-to-end on ids/ranks (cosine emitted NULL — pca-space
+        # distances differ from raw by rotation float dust, ids don't).
+        from tsflex_spark.datapipe.embedding import pca_train, pca_transform
 
-    dim = len(emb.select("embedding").first()["embedding"])
-    model = pca_train(emb, k=dim)
-    proj = pca_transform(emb, model, out_col="p")
-    # euclidean knn_join in PCA coordinates: same BLAS kernel, expanded
-    # ||q||² − 2·Q·Cᵀ + ||c||² form; ranks (not distances) are gated, so
-    # rotation/expansion float dust is immaterial
-    qp1 = proj.where(F.col("vec_id") == 0).select(
-        F.lit(0).cast("long").alias("q_id"), F.col("p").alias("embedding")
-    )
-    pca_top = knn_join(
-        proj.where(F.col("vec_id") != 0).select("vec_id", F.col("p").alias("embedding")),
-        qp1,
-        k=10,
-        metric="euclidean",
-    ).select(
-        F.lit("pca64").alias("method"),
-        "q_id",
-        "vec_id",
-        F.lit(None).cast("double").alias("cosine"),
-        "rank",
-    )
-    # BM25 leg: lexical retrieval over documents (datapipe/retrieval).
-    # idf literals come from python libm log on exact integer (N, df) —
-    # DuckDB's ln on the same doubles is the same libm, and every other
-    # operand (tf, dl, avgdl) is integer-exact, so the double scores are
-    # bit-equal; micro-rounding to 1e-6 on both sides removes any last-ulp
-    # risk before the (score, id) ordering.
-    from tsflex_spark.datapipe.retrieval import bm25_score
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    bm = bm25_score(
-        docs, BM25_GATE_QUERY, text_col="text", id_col="doc_id",
-        k1=_BM25_K1, b=_BM25_B,
-    )
-    bm = bm.select(
-        F.col("doc_id").alias("vec_id"),
-        (F.round(F.col("bm25") * 1e6)).cast("long").alias("s_e6"),
-    )
-    bm_top = (
-        bm.orderBy(F.col("s_e6").desc(), F.col("vec_id"))
-        .limit(10)
-        .select(
-            F.lit("bm25").alias("method"),
-            F.lit(0).cast("long").alias("q_id"),
-            "vec_id",
-            (F.col("s_e6").cast("double") / F.lit(1e6)).alias("cosine"),
-            F.row_number()
-            .over(Window.orderBy(F.col("s_e6").desc(), F.col("vec_id")))
-            .alias("rank"),
+        dim = len(emb.select("embedding").first()["embedding"])
+        model = pca_train(emb, k=dim)
+        proj = pca_transform(emb, model, out_col="p")
+        # euclidean knn_join in PCA coordinates: same BLAS kernel, expanded
+        # ||q||² − 2·Q·Cᵀ + ||c||² form; ranks (not distances) are gated, so
+        # rotation/expansion float dust is immaterial
+        qp1 = proj.where(F.col("vec_id") == 0).select(
+            F.lit(0).cast("long").alias("q_id"), F.col("p").alias("embedding")
         )
-    )
+        pca_top = knn_join(
+            proj.where(F.col("vec_id") != 0).select("vec_id", F.col("p").alias("embedding")),
+            qp1,
+            k=10,
+            metric="euclidean",
+        ).select(
+            F.lit("pca64").alias("method"),
+            "q_id",
+            "vec_id",
+            F.lit(None).cast("double").alias("cosine"),
+            "rank",
+        )
+        # BM25 leg: lexical retrieval over documents (datapipe/retrieval).
+        # idf literals come from python libm log on exact integer (N, df) —
+        # DuckDB's ln on the same doubles is the same libm, and every other
+        # operand (tf, dl, avgdl) is integer-exact, so the double scores are
+        # bit-equal; micro-rounding to 1e-6 on both sides removes any last-ulp
+        # risk before the (score, id) ordering.
+        from tsflex_spark.datapipe.retrieval import bm25_score
+
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        bm = bm25_score(
+            docs, BM25_GATE_QUERY, text_col="text", id_col="doc_id",
+            k1=_BM25_K1, b=_BM25_B,
+        )
+        bm = bm.select(
+            F.col("doc_id").alias("vec_id"),
+            (F.round(F.col("bm25") * 1e6)).cast("long").alias("s_e6"),
+        )
+        bm_top = (
+            bm.orderBy(F.col("s_e6").desc(), F.col("vec_id"))
+            .limit(10)
+            .select(
+                F.lit("bm25").alias("method"),
+                F.lit(0).cast("long").alias("q_id"),
+                "vec_id",
+                (F.col("s_e6").cast("double") / F.lit(1e6)).alias("cosine"),
+                F.row_number()
+                .over(Window.orderBy(F.col("s_e6").desc(), F.col("vec_id")))
+                .alias("rank"),
+            )
+        )
+        brute = leg_pool.result(brute_fut)
+        knn = leg_pool.result(knn_fut)
     return (
-        leg_pool.result(brute_fut)
-        .unionByName(leg_pool.result(knn_fut))
+        brute.unionByName(knn)
         .unionByName(pca_top)
         .unionByName(bm_top)
         .coalesce(1).orderBy("method", "q_id", "rank")
@@ -3253,6 +3309,10 @@ def q_ann_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
         .sort_values("vec_id")
         .reset_index(drop=True)
     )
+    # the query row must lead the fetch, or qv silently becomes the
+    # smallest base vector and the codebook loses its first row
+    if int(head_pd["vec_id"].iloc[0]) != 0:
+        raise ValueError("embeddings.parquet has no query row vec_id 0")
     qv = [float(x) for x in head_pd["embedding"].iloc[0]]
     cb_pd = head_pd.iloc[1:].reset_index(drop=True)
     ivf = ivf_topk(base, qv, k=10, nlist=16, nprobe=16)
@@ -3332,93 +3392,91 @@ def q_ann_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, rows, "method string, vec_id long, metric double, rank int"
         )
 
-    from tsflex_spark.utils.pool import LegPool
-
-    km_pool = LegPool(1, "ann_kmeans")
-    km_fut = km_pool.submit(_kmeans_leg)
-    # pq / ivfpq legs (round 10, r9 verdict task 4): the PQ/ADC search
-    # surface promoted from pytest-only to hash legs. The codebook is
-    # PLANTED deterministically from the corpus itself — subspace s's
-    # centroids are the s-th subvectors of the _PQ_KSUB smallest vec_ids
-    # (the kmeans-init precedent: skips pq_train's RNG-seeded Lloyd,
-    # which SQL cannot replay; _lloyd itself is the same family the
-    # kmeans leg's CTE fuzz covers) — so the oracle replays codebook
-    # construction, per-subspace assignment (argmin -2·x·c + ||c||²,
-    # first-index tie-break), the ADC distance table, IVF cell probing,
-    # and the top-k end-to-end from the parquet rows alone. Four legs:
-    #   pq          — ADC top-10 over the full corpus (pq_assign +
-    #                 pq_search through the real Arrow-BLAS UDFs)
-    #   pq_codes    — corpus-wide weighted checksum of EVERY PQ code
-    #                 (one flipped assignment anywhere changes it)
-    #   ivfpq       — the composed plan: coarse cells prune to
-    #                 nprobe/nlist, ADC scans the remainder
-    #   ivfpq_cells — corpus-wide sum of cell assignments + count
-    from tsflex_spark.datapipe.similarity import (
-        IVFIndex,
-        PQCodebook,
-        ivf_assign,
-        ivfpq_search,
-        pq_assign,
-        pq_search,
-    )
-
-    # codebook rows come from the single driver fetch above (first
-    # _PQ_KSUB of the max(_KM_K, _PQ_KSUB) rows — same frame, same order)
-    Xcb = np.asarray(
-        cb_pd["embedding"].head(_PQ_KSUB).tolist(), dtype="float64"
-    )
-    dsub = _ANN_DIM // _PQ_M
-    cb = PQCodebook(
-        np.stack([Xcb[:, s * dsub : (s + 1) * dsub] for s in range(_PQ_M)])
-    )
-    ivf_idx = IVFIndex(Xcb[:_IVFPQ_NLIST])
-    # one encode pass feeds all four legs (pq_code + __cell side by side)
-    enc = ivf_assign(pq_assign(base, cb), ivf_idx).localCheckpoint(eager=True)
-    wpq = Window.orderBy(F.col("approx_dist").asc(), F.col("vec_id"))
-    pqrows = pq_search(enc, cb, qv, k=10).select(
-        F.lit("pq").alias("method"),
-        "vec_id",
-        F.col("approx_dist").alias("metric"),
-        F.row_number().over(wpq).alias("rank"),
-    )
-    ipqrows = ivfpq_search(
-        enc, ivf_idx, cb, qv, k=10, nprobe=_IVFPQ_NPROBE
-    ).select(
-        F.lit("ivfpq").alias("method"),
-        "vec_id",
-        F.col("approx_dist").alias("metric"),
-        F.row_number().over(wpq).alias("rank"),
-    )
-    pqchk = (
-        enc.select("__cell", F.posexplode("pq_code").alias("s", "c"))
-        .agg(
-            F.sum((F.col("s") + 1) * F.col("c")).alias("m"),
-            F.count(F.lit(1)).alias("n"),
-            # each cell appears m times per vector in this exploded view —
-            # divide back out so the sum is over vectors, not code slots
-            (F.sum("__cell") / _PQ_M).alias("cs"),
+    with LegPool(1, "ann_kmeans") as km_pool:
+        km_fut = km_pool.submit(_kmeans_leg)
+        # pq / ivfpq legs (round 10, r9 verdict task 4): the PQ/ADC search
+        # surface promoted from pytest-only to hash legs. The codebook is
+        # PLANTED deterministically from the corpus itself — subspace s's
+        # centroids are the s-th subvectors of the _PQ_KSUB smallest vec_ids
+        # (the kmeans-init precedent: skips pq_train's RNG-seeded Lloyd,
+        # which SQL cannot replay; _lloyd itself is the same family the
+        # kmeans leg's CTE fuzz covers) — so the oracle replays codebook
+        # construction, per-subspace assignment (argmin -2·x·c + ||c||²,
+        # first-index tie-break), the ADC distance table, IVF cell probing,
+        # and the top-k end-to-end from the parquet rows alone. Four legs:
+        #   pq          — ADC top-10 over the full corpus (pq_assign +
+        #                 pq_search through the real Arrow-BLAS UDFs)
+        #   pq_codes    — corpus-wide weighted checksum of EVERY PQ code
+        #                 (one flipped assignment anywhere changes it)
+        #   ivfpq       — the composed plan: coarse cells prune to
+        #                 nprobe/nlist, ADC scans the remainder
+        #   ivfpq_cells — corpus-wide sum of cell assignments + count
+        from tsflex_spark.datapipe.similarity import (
+            IVFIndex,
+            PQCodebook,
+            ivf_assign,
+            ivfpq_search,
+            pq_assign,
+            pq_search,
         )
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit("pq_codes").alias("method"),
-                        F.lit(-1).cast("long").alias("vec_id"),
-                        F.col("m").cast("double").alias("metric"),
-                        F.col("n").cast("int").alias("rank"),
-                    ),
-                    F.struct(
-                        F.lit("ivfpq_cells").alias("method"),
-                        F.lit(-1).cast("long").alias("vec_id"),
-                        F.col("cs").cast("double").alias("metric"),
-                        (F.col("n") / _PQ_M).cast("int").alias("rank"),
-                    ),
-                )
-            ).alias("r")
+
+        # codebook rows come from the single driver fetch above (first
+        # _PQ_KSUB of the max(_KM_K, _PQ_KSUB) rows — same frame, same order)
+        Xcb = np.asarray(
+            cb_pd["embedding"].head(_PQ_KSUB).tolist(), dtype="float64"
         )
-        .select("r.*")
-    )
-    km = km_pool.result(km_fut)
+        dsub = _ANN_DIM // _PQ_M
+        cb = PQCodebook(
+            np.stack([Xcb[:, s * dsub : (s + 1) * dsub] for s in range(_PQ_M)])
+        )
+        ivf_idx = IVFIndex(Xcb[:_IVFPQ_NLIST])
+        # one encode pass feeds all four legs (pq_code + __cell side by side)
+        enc = ivf_assign(pq_assign(base, cb), ivf_idx).localCheckpoint(eager=True)
+        wpq = Window.orderBy(F.col("approx_dist").asc(), F.col("vec_id"))
+        pqrows = pq_search(enc, cb, qv, k=10).select(
+            F.lit("pq").alias("method"),
+            "vec_id",
+            F.col("approx_dist").alias("metric"),
+            F.row_number().over(wpq).alias("rank"),
+        )
+        ipqrows = ivfpq_search(
+            enc, ivf_idx, cb, qv, k=10, nprobe=_IVFPQ_NPROBE
+        ).select(
+            F.lit("ivfpq").alias("method"),
+            "vec_id",
+            F.col("approx_dist").alias("metric"),
+            F.row_number().over(wpq).alias("rank"),
+        )
+        pqchk = (
+            enc.select("__cell", F.posexplode("pq_code").alias("s", "c"))
+            .agg(
+                F.sum((F.col("s") + 1) * F.col("c")).alias("m"),
+                F.count(F.lit(1)).alias("n"),
+                # each cell appears m times per vector in this exploded view —
+                # divide back out so the sum is over vectors, not code slots
+                (F.sum("__cell") / _PQ_M).alias("cs"),
+            )
+            .select(
+                F.explode(
+                    F.array(
+                        F.struct(
+                            F.lit("pq_codes").alias("method"),
+                            F.lit(-1).cast("long").alias("vec_id"),
+                            F.col("m").cast("double").alias("metric"),
+                            F.col("n").cast("int").alias("rank"),
+                        ),
+                        F.struct(
+                            F.lit("ivfpq_cells").alias("method"),
+                            F.lit(-1).cast("long").alias("vec_id"),
+                            F.col("cs").cast("double").alias("metric"),
+                            (F.col("n") / _PQ_M).cast("int").alias("rank"),
+                        ),
+                    )
+                ).alias("r")
+            )
+            .select("r.*")
+        )
+        km = km_pool.result(km_fut)
     return (
         lsh.unionByName(ivf)
         .unionByName(km)
@@ -3629,6 +3687,29 @@ ORDER BY method, "rank", vec_id
 """
 
 
+def _jaccard_edges(docs: DataFrame, sh: DataFrame) -> DataFrame:
+    """Consecutive-doc pairs (i, i+1) with exact Jaccard >= 0.2, checkpointed
+    (CC, PageRank, degrees and the split hash all read it). prune=False:
+    the pairs cover every doc, so the involved-doc prune keeps the whole
+    shingle table."""
+    pairs = docs.select(F.col("doc_id").alias("id_a")).withColumn(
+        "id_b", F.col("id_a") + 1
+    )
+    pairs = pairs.join(
+        docs.select(F.col("doc_id").alias("id_b")), on="id_b", how="left_semi"
+    )
+    sim = ngram_jaccard(docs, pairs, "text", id_col="doc_id", shingles=sh, prune=False)
+    return sim.where(F.col("jaccard") >= 0.2).localCheckpoint(eager=True)
+
+
+def _edge_components(edges: DataFrame) -> DataFrame:
+    return connected_components(edges, "id_a", "id_b")
+
+
+def _edge_pagerank(edges: DataFrame) -> DataFrame:
+    return pagerank(edges, "id_a", "id_b", damping=0.85, iters=6)
+
+
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup candidate pairs resolved into duplicate CLUSTERS
     (SURVEY north-star dedup, final stage): consecutive-doc pairs are
@@ -3644,57 +3725,31 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket, and ``n_splits`` (count of distinct member splits) must be
     exactly 1 — the no-leakage invariant itself, computed from the
     engine's actual per-doc assignments, not assumed."""
-    _utc(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    from tsflex_spark.datapipe.dedup import (
-        connected_components,
-        ngram_jaccard,
-        shingle_rows,
-    )
-
-    pairs = docs.select(F.col("doc_id").alias("id_a")).withColumn(
-        "id_b", F.col("id_a") + 1
-    )
-    pairs = pairs.join(
-        docs.select(F.col("doc_id").alias("id_b")), on="id_b", how="left_semi"
-    )
-    # shingle rows feed three plan branches (sizes + both join sides);
-    # checkpoint once instead of recomputing the explode+distinct 3x
-    sh = shingle_rows(docs, "text", "doc_id").localCheckpoint(eager=True)
-    # pairs cover EVERY doc (consecutive ids): the involved-doc prune keeps
-    # the whole table, so skip its checkpoint — the caller's is enough
-    sim = ngram_jaccard(
-        docs, pairs, "text", id_col="doc_id", shingles=sh, prune_checkpoint=False
-    )
-    edges = sim.where(F.col("jaccard") >= 0.2).localCheckpoint(eager=True)
+    docs = _documents(spark, sf_dir)
+    edges = _jaccard_edges(docs, _corpus_shingles(docs))
     # r10: PageRank's fixed-iteration loop only needs the edge
     # checkpoint, not the CC labels — run it from a second driver
     # thread so its per-iteration jobs overlap the union-find collect
     # and split-hash legs below (guide §2.6; concurrent first use of
     # the edges RDD is safe — the block manager locks per-partition
-    # computation). Joined via pr_pool.result(pr_fut) before the stats join.
-    from tsflex_spark.utils.pool import LegPool
+    # computation).
+    from tsflex_spark.datapipe.graph import degrees
 
-    from tsflex_spark.datapipe.graph import degrees, pagerank
-
-    pr_pool = LegPool(1, "dup_pagerank")
-    pr_fut = pr_pool.submit(
-        lambda: pagerank(edges, "id_a", "id_b", damping=0.85, iters=6)
-    )
-    cc = connected_components(edges, "id_a", "id_b")
-    labeled = docs.select("doc_id").join(
-        cc, docs["doc_id"] == cc["node"], "left"
-    ).select(
-        F.col("doc_id"),
-        F.coalesce("component", F.col("doc_id")).alias("cluster_id"),
-    )
-    # round 7: per-cluster graph stats promote datapipe/graph.py from
-    # pytest-only to oracle-verified — PageRank mass (6 fixed power
-    # iterations, damping 0.85, dangling-mass redistribution) and total
-    # degree over the SAME candidate edge graph; the DuckDB oracle
-    # unrolls the identical iterations as a generated CTE chain.
-    # (r10: the iterations ran on the background thread started above.)
-    pr = pr_pool.result(pr_fut)
+    with LegPool(1, "dup_pagerank") as pr_pool:
+        pr_fut = pr_pool.submit(lambda: _edge_pagerank(edges))
+        cc = _edge_components(edges)
+        labeled = docs.select("doc_id").join(
+            cc, docs["doc_id"] == cc["node"], "left"
+        ).select(
+            F.col("doc_id"),
+            F.coalesce("component", F.col("doc_id")).alias("cluster_id"),
+        )
+        # round 7: per-cluster graph stats promote datapipe/graph.py from
+        # pytest-only to oracle-verified — PageRank mass (6 fixed power
+        # iterations, damping 0.85, dangling-mass redistribution) and total
+        # degree over the SAME candidate edge graph; the DuckDB oracle
+        # unrolls the identical iterations as a generated CTE chain.
+        pr = pr_pool.result(pr_fut)
     dg = degrees(edges, "id_a", "id_b").select(
         "node", (F.col("out_degree") + F.col("in_degree")).alias("dtot")
     )
@@ -3819,6 +3874,129 @@ GROUP BY lbl.cluster_id ORDER BY lbl.cluster_id
 """
 
 
+def _sketches(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(shingle checkpoint, sketch checkpoint). Both sketches come from
+    ONE fused groupBy(doc_id) aggregate over the shingle table
+    (sketch_signatures): one scan + one doc-keyed exchange instead of two
+    of each, and the tiny (1 row/doc) fused result is the checkpoint both
+    band branches, the xor leg and the mh_dedup leg read."""
+    sh = _corpus_shingles(docs)
+    sk = sketch_signatures(
+        docs, "text", "doc_id", num_hashes=128, shingles=sh
+    ).localCheckpoint(eager=True)
+    return sh, sk
+
+
+def _minhash_candidates(sk: DataFrame) -> DataFrame:
+    return minhash_lsh_candidates(sk.select("doc_id", "minhash"), "doc_id", num_bands=16)
+
+
+def _simhash_candidates(sk: DataFrame) -> DataFrame:
+    return simhash_pairs(
+        sk.select("doc_id", "simhash"), id_col="doc_id", max_hamming=8
+    ).select("id_a", "id_b")
+
+
+def _sketch_xor(sk: DataFrame) -> DataFrame:
+    # two aggregates, not one: exploding minhash replicates simhash 128x
+    # per doc (xor of an even count vanishes), and DISTINCT would collapse
+    # byte-identical duplicate docs the oracle counts once per doc
+    return (
+        sk.select(F.explode("minhash").alias("__v"))
+        .agg(F.expr("bit_xor(__v)").alias("mh_xor"))
+        .join(F.broadcast(sk.agg(F.expr("bit_xor(simhash)").alias("sim_xor"))))
+    )
+
+
+def _survivor_rows(df: DataFrame, method: str) -> DataFrame:
+    return df.select(
+        F.lit(method).alias("method"),
+        F.col("doc_id").alias("id_a"),
+        F.lit(-1).cast("long").alias("id_b"),
+        F.lit(None).cast("double").alias("jaccard"),
+    )
+
+
+def _store_rows(docs: DataFrame, store_dir: str) -> DataFrame:
+    """Incremental dedup vs a PERSISTENT band store
+    (``dedup_against_store``): bootstrap the parquet store from the EVEN
+    docs (within_batch=False: every even doc's 16 band hashes are
+    appended), then probe the ODD docs read-only — an odd doc survives
+    iff NONE of its band hashes collides with any even doc's same-band
+    hash. The oracle replays the whole chain from raw text (64-bin OPH
+    signatures, Spark's array→string cast, xxhash64 per band), so a
+    wrong signature slot, band split or store-join bug adds or drops a
+    survivor row. ``store_dir`` is emptied first, so repeat calls are
+    deterministic.
+
+    Bounded slice (doc_id < 1000, the oracle replays the same bound):
+    the collision semantics are not scale-dependent, and the slice keeps
+    the store write + checkpoint barriers ~constant across SFs. ONE
+    64-bin signature pass feeds both batches (signatures= reuse); the
+    slice is shingled directly so the predicate reaches the parquet
+    scan."""
+    shutil.rmtree(store_dir, ignore_errors=True)
+    s_docs = docs.where(F.col("doc_id") < 1000)
+    sig64 = minhash_signatures(
+        s_docs, "text", "doc_id", num_hashes=64,
+        shingles=shingle_rows(s_docs, "text", "doc_id"),
+    ).localCheckpoint(eager=True)
+    even = s_docs.where(F.col("doc_id") % 2 == 0)
+    odd = s_docs.where(F.col("doc_id") % 2 == 1)
+    dedup_against_store(
+        even, store_dir, "text", "doc_id",
+        num_hashes=64, num_bands=16, within_batch=False, signatures=sig64,
+    )
+    sur = dedup_against_store(
+        odd, store_dir, "text", "doc_id",
+        num_hashes=64, num_bands=16, within_batch=False,
+        update_store=False, signatures=sig64,
+    )
+    return _survivor_rows(sur, "store")
+
+
+def _mh_dedup_rows(docs: DataFrame, sh: DataFrame, sk: DataFrame) -> DataFrame:
+    """The END-PRODUCT of the flagship near-dup op — minhash_dedup's
+    SURVIVOR set ("drop the higher id of every confirmed pair").
+    prefilter_margin=None keeps the path exact (the signature-estimate
+    prefilter is a probabilistic recall trade the oracle can't replay);
+    the oracle's survivor set is documents minus every id_b of the
+    all-pairs exact-Jaccard >= 0.8 set — so a band miss, a verify bug,
+    or a keep-rule regression all change rows.
+
+    128 hashes / 16 bands (8 rows/band) is EXACTLY the banding whose full
+    recall the minhash candidate-superset contract certifies on these
+    corpora, and it reuses the gate's fused signatures (``sk``), so this
+    adds a band self-join + verify on the ~tp-sized candidate set, not a
+    second corpus signature pass. (Auto 8-band/64-hash missed one J≈0.9
+    pair at sf0.01; 16-band/64-hash had full recall but 4-row bands
+    ballooned the candidates ~250x, +30 s at sf0.1.)
+
+    CORPUS-VERSION DEPENDENCY: the survivor set is LSH-candidate-limited
+    but compared against an ALL-PAIRS truth, so full banding recall is
+    certified only on the CURRENT gate corpora (0.99989/pair at J=0.8).
+    If the test data is regenerated and this goes red, diff the survivor
+    sets: a missing pair that ngram_jaccard confirms >= 0.8 from raw
+    shingles means re-pin the banding, not an engine fix. For the same
+    reason minhash_dedup's recall warning (fires below 0.999 catch
+    probability at the threshold; 128h/16b = 0.947 at J=0.8) is
+    suppressed HERE ONLY — it would be noise in bench/gate stderr.
+
+    Bounded slice (doc_id < 1000): vacuous at the oracle-checked SFs
+    (500 docs) and a 25x verify reduction at the sf0.1 bench corpus
+    (5000 docs), where the minhash contract leg already re-verifies
+    corpus-wide. The corpus-wide ``sh``/``sk`` pass through unchanged —
+    minhash_dedup semi-join-prunes them to the slice."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)
+        mhd = minhash_dedup(
+            docs.where(F.col("doc_id") < 1000), "text", id_col="doc_id",
+            threshold=0.8, num_hashes=128, num_bands=16, shingles=sh,
+            signatures=sk.select("doc_id", "minhash"), prefilter_margin=None,
+        )
+    return _survivor_rows(mhd, "mh_dedup")
+
+
 def q_sketch_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both hash-sketch dedup paths in one gate (driver caps queries() at
     50), now FULLY oracle-checked by gating the candidate-superset
@@ -3849,199 +4027,53 @@ def q_sketch_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     densification (three consecutive empty bins) cannot fire on KB-
     sized docs; it stays pytest-covered, and if it ever fired here the
     gate would mismatch loudly rather than silently diverge."""
-    _utc(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    from tsflex_spark.datapipe.dedup import (
-        minhash_lsh_candidates,
-        ngram_jaccard,
-        shingle_rows,
-        simhash_pairs,
-        sketch_signatures,
-    )
-
-    # store leg, submitted FIRST from a second driver thread: it shares
-    # nothing with the main sketch legs, but its bootstrap write and
-    # signature materialization are EAGER — run serially they add ~3 s
-    # of build-time barriers during which the main legs' jobs leave the
-    # cores idle (guide §2.6: independent jobs overlap; the Spark
-    # scheduler is thread-safe). Joined via store_pool.result(store_fut) below —
-    # same plans, same store contents, ~2.5 s less wall at sf0.1.
-    # Bounded verification slice (doc_id < 1000, oracle replays the same
-    # bound — the edit-prefix-128 precedent): the collision semantics
-    # being verified (signature slots, band split, array->string cast,
-    # store membership join) are not scale-dependent, and the slice
-    # keeps the per-gate store write + checkpoint barriers ~constant
-    # across SFs. ONE 64-bin signature pass feeds both batches
-    # (signatures= reuse); the slice is shingled directly so the
-    # doc_id predicate reaches the parquet scan.
-    import shutil
-    import tempfile
-
-    from tsflex_spark.datapipe.dedup import dedup_against_store, minhash_signatures
-    from tsflex_spark.utils.pool import LegPool
-
+    docs = _documents(spark, sf_dir)
+    # the store leg shares nothing with the sketch legs, but its bootstrap
+    # write and signature checkpoint are EAGER: submitted FIRST from a
+    # second driver thread, those barriers overlap the sketch legs' jobs
+    # instead of serializing ~3 s of idle cores (guide §2.6)
     store_dir = os.path.join(
         tempfile.gettempdir(),
         "tsflex_store_gate",
         os.path.basename(sf_dir.rstrip("/")) or "sf",
     )
-    shutil.rmtree(store_dir, ignore_errors=True)
-
-    def _store_leg() -> DataFrame:
-        s_docs = docs.where(F.col("doc_id") < 1000)
-        sig64 = minhash_signatures(
-            s_docs, "text", "doc_id", num_hashes=64,
-            shingles=shingle_rows(s_docs, "text", "doc_id"),
-        ).localCheckpoint(eager=True)
-        even = s_docs.where(F.col("doc_id") % 2 == 0)
-        odd = s_docs.where(F.col("doc_id") % 2 == 1)
-        dedup_against_store(
-            even, store_dir, "text", "doc_id",
-            num_hashes=64, num_bands=16, within_batch=False, signatures=sig64,
+    with LegPool(1, "sketch_store") as store_pool:
+        store_fut = store_pool.submit(lambda: _store_rows(docs, store_dir))
+        sh, sk = _sketches(docs)
+        # per-method provenance rides the candidate union as two booleans
+        # and ONE pair-keyed aggregate replaces union->distinct; the shared
+        # exact verify then runs once and each method's survivors come back
+        # by exploding the flags. cands feeds the verify's two pair joins +
+        # the tag join, so IT is the one lineage cut
+        cands = (
+            _minhash_candidates(sk).select(
+                "id_a", "id_b", F.lit(True).alias("__m"), F.lit(False).alias("__s")
+            )
+            .unionByName(
+                _simhash_candidates(sk).select(
+                    "id_a", "id_b", F.lit(False).alias("__m"), F.lit(True).alias("__s")
+                )
+            )
+            .groupBy("id_a", "id_b")
+            .agg(F.max("__m").alias("__m"), F.max("__s").alias("__s"))
+            .localCheckpoint(eager=True)
         )
-        return dedup_against_store(
-            odd, store_dir, "text", "doc_id",
-            num_hashes=64, num_bands=16, within_batch=False,
-            update_store=False, signatures=sig64,
-        )
-
-    store_pool = LegPool(1, "sketch_store")
-    store_fut = store_pool.submit(_store_leg)
-
-    # all stages consume the same (id, shingle-hash) table — shingle
-    # once, lazily checkpoint, share. Both sketches come from ONE fused
-    # groupBy(doc_id) aggregate over that table (sketch_signatures): one
-    # scan + one doc-keyed exchange instead of two of each, and the tiny
-    # (1 row/doc) fused result is the checkpoint both band branches read.
-    sh = shingle_rows(docs, "text", "doc_id").localCheckpoint(eager=True)
-    sk = sketch_signatures(
-        docs, "text", "doc_id", num_hashes=128, shingles=sh
-    ).localCheckpoint(eager=True)
-    mh_pre = minhash_lsh_candidates(sk.select("doc_id", "minhash"), "doc_id", num_bands=16)
-    sh_cand = simhash_pairs(
-        sk.select("doc_id", "simhash"), id_col="doc_id", max_hamming=8
-    ).select("id_a", "id_b")
-    # per-method provenance rides the candidate union as two booleans and
-    # ONE pair-keyed aggregate replaces union->distinct; the shared exact
-    # verify then runs once and each method's survivors come back by
-    # exploding the flags — no per-method semi-joins, and sig/mh_pre/
-    # sh_cand each feed exactly one consumer (no checkpoints needed;
-    # cands feeds the verify's two pair joins + the tag join, so IT is
-    # the one lineage cut)
-    cands = (
-        mh_pre.select(
-            "id_a", "id_b", F.lit(True).alias("__m"), F.lit(False).alias("__s")
-        )
-        .unionByName(
-            sh_cand.select(
-                "id_a", "id_b", F.lit(False).alias("__m"), F.lit(True).alias("__s")
+        ver = ngram_jaccard(
+            docs, cands.select("id_a", "id_b"), "text", id_col="doc_id", shingles=sh
+        ).where(F.col("jaccard") >= 0.8)
+        tagged = ver.join(cands, ["id_a", "id_b"])
+        methods = F.array_compact(
+            F.array(
+                F.when(F.col("__m"), F.lit("minhash")),
+                F.when(F.col("__s"), F.lit("simhash")),
             )
         )
-        .groupBy("id_a", "id_b")
-        .agg(F.max("__m").alias("__m"), F.max("__s").alias("__s"))
-        .localCheckpoint(eager=True)
-    )
-    ver = ngram_jaccard(
-        docs, cands.select("id_a", "id_b"), "text", id_col="doc_id", shingles=sh
-    ).where(F.col("jaccard") >= 0.8)
-    tagged = ver.join(cands, ["id_a", "id_b"])
-    methods = F.array_compact(
-        F.array(
-            F.when(F.col("__m"), F.lit("minhash")),
-            F.when(F.col("__s"), F.lit("simhash")),
-        )
-    )
-    # two aggregates, not one: exploding minhash replicates simhash 128x
-    # per doc (xor of an even count vanishes), and DISTINCT would collapse
-    # byte-identical duplicate docs the oracle counts once per doc
-    sig = (
-        sk.select(F.explode("minhash").alias("__v"))
-        .agg(F.expr("bit_xor(__v)").alias("mh_xor"))
-        .join(F.broadcast(sk.agg(F.expr("bit_xor(simhash)").alias("sim_xor"))))
-    )
-    # store leg (round 9): incremental dedup vs a PERSISTENT band store
-    # (dedup_against_store — previously pytest-only). Bootstrap the
-    # parquet store from the EVEN docs (within_batch=False: every even
-    # doc's 16 band hashes are appended), then probe the ODD docs
-    # read-only: an odd doc survives iff NONE of its band hashes
-    # collides with any even doc's same-band hash. The oracle replays
-    # the ENTIRE chain engine-independently — 64-bin OPH signatures
-    # from raw text, Spark's array→string cast ("[v0, v1, v2, v3]"),
-    # and xxhash64 of that string per band via the recursive-CTE XXH64
-    # — so a single wrong signature slot, band split, or store-join bug
-    # adds/drops a survivor row. The store lives in a scratch dir
-    # (removed at call start: repeat calls are deterministic).
-    #
-    # r10: the leg was submitted to a second driver thread ABOVE (before
-    # the main legs' checkpoints — guide §2.6: its eager bootstrap write
-    # overlaps the main legs' jobs instead of serializing ~3 s of
-    # barriers); collect its survivors frame here.
-    sur = store_pool.result(store_fut)
-    strows = sur.select(
-        F.lit("store").alias("method"),
-        F.col("doc_id").alias("id_a"),
-        F.lit(-1).cast("long").alias("id_b"),
-        F.lit(None).cast("double").alias("jaccard"),
-    )
-    # mh_dedup leg (round 9): the END-PRODUCT of the flagship near-dup
-    # op — minhash_dedup's SURVIVOR set ("drop the higher id of every
-    # confirmed pair"). prefilter_margin=None keeps the path exact (the
-    # signature-estimate prefilter is a probabilistic recall trade the
-    # oracle can't replay); the oracle's survivor set is documents minus
-    # every id_b of the all-pairs exact-Jaccard >= 0.8 set — so a band
-    # miss, a verify bug, or a keep-rule regression all change rows.
-    from tsflex_spark.datapipe.dedup import minhash_dedup
-
-    # 128 hashes / 16 bands (8 rows/band) = EXACTLY the banding whose
-    # full recall the minhash leg's candidate-superset contract already
-    # certifies on these corpora — and it reuses the gate's fused
-    # signatures (signatures=sk), so the dedup leg adds a band self-join
-    # + verify on the ~tp-sized candidate set, not a second corpus
-    # signature pass. (First attempts, both deterministic per corpus:
-    # auto 8-band/64-hash missed one J≈0.9 pair at sf0.01 — 0.989/pair
-    # catch; 16-band/64-hash had full recall but 4-row bands balloon the
-    # moderate-similarity candidates ~250x, measured +30 s at sf0.1.)
-    # CORPUS-VERSION DEPENDENCY: this leg compares the LSH-candidate-
-    # limited survivor set against an ALL-PAIRS exact-Jaccard truth, so
-    # it certifies full banding recall only on the CURRENT driver
-    # corpora (16 bands x 8 rows at 128 hashes: 0.99989/pair at J=0.8,
-    # ~1-1e-7 at J=0.9). If the test data is ever regenerated, this
-    # gate can go red on a probabilistic band miss with NO engine bug —
-    # diagnose by diffing the survivor sets: a missing pair that
-    # ngram_jaccard confirms >= 0.8 from raw shingles means re-pin the
-    # banding (raise num_bands/num_hashes), not an engine fix.
-    # minhash_dedup's r10 recall warning fires whenever the banding's
-    # catch probability at the requested threshold is < 0.999 (here
-    # 128h/16b = 0.947 at J=0.8) — suppress it HERE ONLY: this leg's
-    # recall is corpus-certified by the candidate-superset contract
-    # above, so the warning would be noise in bench/driver stderr.
-    import warnings as _w
-
-    # Bounded slice (r10, store-leg precedent): the operator runs on
-    # doc_id < 1000 — vacuous at the driver's gate SFs (500 docs:
-    # contract unchanged where correctness is judged) and a 25x verify
-    # reduction at the sf0.1 bench corpus (5000 docs), where this leg
-    # alone carried ~10 s of pure re-verification the minhash contract
-    # leg above already performs corpus-wide. The corpus-wide sh/sk
-    # frames pass through unchanged — minhash_dedup's superset contract
-    # (r10) semi-join-prunes them to the slice.
-    with _w.catch_warnings():
-        _w.simplefilter("ignore", RuntimeWarning)
-        mhd = minhash_dedup(
-            docs.where(F.col("doc_id") < 1000), "text", id_col="doc_id",
-            threshold=0.8, num_hashes=128, num_bands=16, shingles=sh,
-            signatures=sk.select("doc_id", "minhash"), prefilter_margin=None,
-        )
-    mdrows = mhd.select(
-        F.lit("mh_dedup").alias("method"),
-        F.col("doc_id").alias("id_a"),
-        F.lit(-1).cast("long").alias("id_b"),
-        F.lit(None).cast("double").alias("jaccard"),
-    )
+        sig = _sketch_xor(sk)
+        strows = store_pool.result(store_fut)
     return (
         tagged.select(F.explode(methods).alias("method"), "id_a", "id_b", "jaccard")
         .unionByName(strows)
-        .unionByName(mdrows)
+        .unionByName(_mh_dedup_rows(docs, sh, sk))
         .join(F.broadcast(sig))
         .coalesce(1).orderBy("method", "id_a", "id_b")
     )
@@ -4830,7 +4862,6 @@ def q_streaming_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Chan parallel-moment merge). Runs a real availableNow streaming job
     over the events parquet, then returns the final state per user."""
     _utc(spark)
-    import tempfile
     import uuid
 
     from pyspark.sql import Window as W
@@ -4845,6 +4876,11 @@ def q_streaming_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     # source wants a DIRECTORY; pathGlobFilter pins it to the one file.
     # Identical rows, and the Chan fixed-point merge is batch-boundary-
     # independent, so results are unchanged by the source's file layout.
+    # pathGlobFilter matches leaf file NAMES: a directory-shaped
+    # events.parquet (a Spark-written dataset) would match no file and
+    # the gate would return zero rows instead of failing
+    if not os.path.isfile(f"{sf_dir}/events.parquet"):
+        raise FileNotFoundError(f"{sf_dir}/events.parquet is not a single file")
     tmp = tempfile.mkdtemp(prefix="tsfs_stateful_")
     stream = (
         spark.readStream.schema("user_id long, value double")
@@ -4877,8 +4913,6 @@ def q_streaming_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     res = spark.table(name)
     # the memory sink holds the rows; the source copy + checkpoint are done
-    import shutil
-
     shutil.rmtree(tmp, ignore_errors=True)
     rn = F.row_number().over(W.partitionBy("user_id").orderBy(F.col("n").desc()))
     final = res.withColumn("__rn", rn).where(F.col("__rn") == 1).drop("__rn")
@@ -5028,9 +5062,6 @@ def _plant_warc_archives(spark: SparkSession, sf_dir: str, n_arcs: int = 8) -> s
     names, atomic replace), so stale fixtures cannot leak between SFs
     or test-data versions.
     """
-    import shutil
-    import tempfile
-
     sf_name = os.path.basename(sf_dir.rstrip("/")) or "sf"
     out_dir = os.path.join(tempfile.gettempdir(), "tsflex_warc_gate", sf_name)
     shutil.rmtree(out_dir, ignore_errors=True)
@@ -6543,264 +6574,63 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def query_legs() -> dict[str, dict[str, Callable[[SparkSession, str], DataFrame]]]:
-    """Per-gate verification-leg profiles for the heavy multi-leg gates.
+    """Per-gate leg profiles for the heavy multi-leg gates.
 
-    bench.py times each leg ONCE (warm) and records the split in
-    BENCH_FULL.json under ``verification_legs`` so a verdict can separate
-    engine cost from verification cost mechanically instead of relying on
-    ad-hoc NOTES_DEV measurements. Each thunk is SELF-CONTAINED (rebuilds
-    its sub-plan from the parquet scans); legs share upstream fragments
-    with each other and with the gate, so leg times are a PROFILE, not a
-    partition — they need not sum to the gate time.
+    bench.py times each leg ONCE (warm) into BENCH_FULL.json
+    ``verification_legs``; ``tools/solo_bench.py gate:leg`` times one
+    alone. Every leg is a module-level function that its gate also
+    calls, fed by the same input builders (shingle / sketch / token /
+    gram-bucket checkpoints), so a leg runs exactly the plan shape the
+    gate runs. Each thunk builds its leg's inputs from the documents
+    scan and runs synchronously, so a leg's time includes building its
+    inputs and legs of one gate repeat shared inputs: leg times are a
+    profile, not a partition of the gate time.
     """
 
-    def _docs(spark, sf_dir):
-        _utc(spark)
-        return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    def on_docs(leg: Callable[[DataFrame], DataFrame]):
+        return lambda spark, sf_dir: leg(_documents(spark, sf_dir))
 
-    # ----- sketch_dedup ---------------------------------------------
-    def sk_sketch(spark, sf_dir):
-        from tsflex_spark.datapipe.dedup import shingle_rows, sketch_signatures
-
-        docs = _docs(spark, sf_dir)
-        sh = shingle_rows(docs, "text", "doc_id")
-        return sketch_signatures(docs, "text", "doc_id", num_hashes=128, shingles=sh)
-
-    def sk_mh_cands(spark, sf_dir):
-        from tsflex_spark.datapipe.dedup import minhash_lsh_candidates
-
-        sk = sk_sketch(spark, sf_dir).localCheckpoint(eager=True)
-        return minhash_lsh_candidates(
-            sk.select("doc_id", "minhash"), "doc_id", num_bands=16
-        )
-
-    def sk_sim_cands(spark, sf_dir):
-        from tsflex_spark.datapipe.dedup import simhash_pairs
-
-        sk = sk_sketch(spark, sf_dir).localCheckpoint(eager=True)
-        return simhash_pairs(
-            sk.select("doc_id", "simhash"), id_col="doc_id", max_hamming=8
-        ).select("id_a", "id_b")
-
-    def sk_xor(spark, sf_dir):
-        sk = sk_sketch(spark, sf_dir).localCheckpoint(eager=True)
-        return (
-            sk.select(F.explode("minhash").alias("__v"))
-            .agg(F.expr("bit_xor(__v)").alias("mh_xor"))
-            .join(F.broadcast(sk.agg(F.expr("bit_xor(simhash)").alias("sim_xor"))))
-        )
-
-    def sk_store(spark, sf_dir):
-        import shutil
-        import tempfile
-
-        from tsflex_spark.datapipe.dedup import (
-            dedup_against_store,
-            minhash_signatures,
-            shingle_rows,
-        )
-
-        docs = _docs(spark, sf_dir).where(F.col("doc_id") < 1000)
-        store_dir = os.path.join(tempfile.gettempdir(), "tsflex_store_leg")
-        shutil.rmtree(store_dir, ignore_errors=True)
-        sig64 = minhash_signatures(
-            docs, "text", "doc_id", num_hashes=64,
-            shingles=shingle_rows(docs, "text", "doc_id"),
-        ).localCheckpoint(eager=True)
-        dedup_against_store(
-            docs.where(F.col("doc_id") % 2 == 0), store_dir, "text", "doc_id",
-            num_hashes=64, num_bands=16, within_batch=False, signatures=sig64,
-        )
-        return dedup_against_store(
-            docs.where(F.col("doc_id") % 2 == 1), store_dir, "text", "doc_id",
-            num_hashes=64, num_bands=16, within_batch=False,
-            update_store=False, signatures=sig64,
-        )
-
-    def sk_mh_dedup(spark, sf_dir):
-        from tsflex_spark.datapipe.dedup import (
-            minhash_dedup,
-            shingle_rows,
-            sketch_signatures,
-        )
-
-        docs = _docs(spark, sf_dir)
-        sh = shingle_rows(docs, "text", "doc_id").localCheckpoint(eager=True)
-        sk = sketch_signatures(
-            docs, "text", "doc_id", num_hashes=128, shingles=sh
-        ).localCheckpoint(eager=True)
-        import warnings as _w
-
-        # same narrow suppression as the gate leg: 128h/16b recall is
-        # corpus-certified there; keep bench stderr clean
-        with _w.catch_warnings():
-            _w.simplefilter("ignore", RuntimeWarning)
-            return minhash_dedup(
-                docs, "text", id_col="doc_id", threshold=0.8, num_hashes=128,
-                num_bands=16, shingles=sh,
-                signatures=sk.select("doc_id", "minhash"), prefilter_margin=None,
-            )
-
-    # ----- ngram_jaccard --------------------------------------------
-    def nj_consec(spark, sf_dir):
-        from tsflex_spark.datapipe.dedup import ngram_jaccard, shingle_rows
-
-        docs = _docs(spark, sf_dir)
-        pairs = (
-            docs.select(F.col("doc_id").alias("id_a"))
-            .where(F.col("id_a") % 2 == 0)
-            .withColumn("id_b", F.col("id_a") + 1)
-            .join(
-                docs.select(F.col("doc_id").alias("id_b")), on="id_b", how="left_semi"
-            )
-        )
-        sh = shingle_rows(docs, "text", "doc_id").localCheckpoint(eager=True)
-        return ngram_jaccard(
-            docs, pairs, "text", id_col="doc_id", shingles=sh, prune=False
-        )
-
-    def nj_fuzzy(spark, sf_dir):
-        from tsflex_spark.datapipe.dedup import fuzzy_join, shingle_rows
-
-        docs = _docs(spark, sf_dir)
-        small = docs.where(F.col("doc_id") < 200)
-        left = small.where(F.col("doc_id") % 2 == 0).select(
-            F.col("doc_id").alias("id_a"), "text"
-        )
-        right = small.where(F.col("doc_id") % 2 == 1).select(
-            F.col("doc_id").alias("id_b"), "text"
-        )
-        small_sh = shingle_rows(small, "text", "doc_id")
-        lsh = small_sh.where(F.col("doc_id") % 2 == 0).select(
-            F.col("doc_id").alias("id_a"), "__s"
-        )
-        rsh = small_sh.where(F.col("doc_id") % 2 == 1).select(
-            F.col("doc_id").alias("id_b"), "__s"
-        )
-        return fuzzy_join(
-            left, right, "text", "id_a", "id_b", threshold=0.5, shingle_k=5,
-            method="exact", left_shingles=lsh, right_shingles=rsh,
-        )
-
-    def nj_edit(spark, sf_dir):
-        from tsflex_spark.datapipe.dedup import edit_similarity
-
-        docs = _docs(spark, sf_dir)
-        pairs = nj_consec(spark, sf_dir).withColumn("kind", F.lit("consec"))
-        return edit_similarity(pairs, docs, "text", "doc_id", prefix_len=128)
-
-    # ----- dup_clusters ---------------------------------------------
-    def dc_edges(spark, sf_dir):
-        from tsflex_spark.datapipe.dedup import ngram_jaccard, shingle_rows
-
-        docs = _docs(spark, sf_dir)
-        pairs = (
-            docs.select(F.col("doc_id").alias("id_a"))
-            .withColumn("id_b", F.col("id_a") + 1)
-            .join(
-                docs.select(F.col("doc_id").alias("id_b")), on="id_b", how="left_semi"
-            )
-        )
-        sh = shingle_rows(docs, "text", "doc_id").localCheckpoint(eager=True)
-        return ngram_jaccard(
-            docs, pairs, "text", id_col="doc_id", shingles=sh,
-            prune_checkpoint=False,
-        ).where(F.col("jaccard") >= 0.2)
-
-    def dc_cc(spark, sf_dir):
-        from tsflex_spark.datapipe.dedup import connected_components
-
-        edges = dc_edges(spark, sf_dir).localCheckpoint(eager=True)
-        return connected_components(edges, "id_a", "id_b")
-
-    def dc_pagerank(spark, sf_dir):
-        from tsflex_spark.datapipe.graph import pagerank
-
-        edges = dc_edges(spark, sf_dir).localCheckpoint(eager=True)
-        return pagerank(edges, "id_a", "id_b", damping=0.85, iters=6)
-
-    # ----- passage_spans --------------------------------------------
-    def ps_spans(spark, sf_dir):
-        from tsflex_spark.datapipe.dedup import duplicate_spans
-
-        docs = _docs(spark, sf_dir)
-        return duplicate_spans(docs, "text", id_col="doc_id", n=8, min_occurrences=2)
-
-    def ps_top_ngrams(spark, sf_dir):
-        from tsflex_spark.datapipe.text import top_ngrams
-
-        return top_ngrams(
-            _docs(spark, sf_dir), n=3, k=50, text_col="text", min_count=2
-        )
-
-    def ps_hash_embed(spark, sf_dir):
-        from tsflex_spark.datapipe.text import hash_embed
-
-        return hash_embed(
-            _docs(spark, sf_dir), "text", id_col="doc_id", dim=16, ngram=3
-        )
-
-    def ps_despan(spark, sf_dir):
-        from tsflex_spark.datapipe.dedup import remove_duplicate_spans
-
-        return remove_duplicate_spans(
-            _docs(spark, sf_dir), "text", id_col="doc_id", n=8, out_col="__rb"
-        )
-
-    # ----- quality_score --------------------------------------------
-    def qs_quality(spark, sf_dir):
-        from tsflex_spark.datapipe.text import quality_score
-
-        return quality_score(_docs(spark, sf_dir), "text", id_col="doc_id")
-
-    def qs_langid(spark, sf_dir):
-        from tsflex_spark.datapipe.text import language_id
-
-        return language_id(_docs(spark, sf_dir), "text", id_col="doc_id")
-
-    def qs_repetition(spark, sf_dir):
-        from tsflex_spark.datapipe.text import repetition_stats
-
-        return repetition_stats(_docs(spark, sf_dir), "text", id_col="doc_id")
-
-    def qs_dsir(spark, sf_dir):
-        from tsflex_spark.datapipe.dsir import fit_bucket_logratio, importance_weights
-
-        docs = _docs(spark, sf_dir)
-        target = docs.where(F.col("doc_id") % 10 == 0).select("text")
-        lr = fit_bucket_logratio(target, docs.select("text"), "text", num_buckets=64)
-        return importance_weights(docs, lr, "text", id_col="doc_id", num_buckets=64)
-
+    store_dir = os.path.join(tempfile.gettempdir(), "tsflex_store_leg")
     return {
         "sketch_dedup": {
-            "sketch": sk_sketch,
-            "mh_cands": sk_mh_cands,
-            "sim_cands": sk_sim_cands,
-            "xor": sk_xor,
-            "store": sk_store,
-            "mh_dedup": sk_mh_dedup,
+            "sketch": on_docs(lambda d: _sketches(d)[1]),
+            "mh_cands": on_docs(lambda d: _minhash_candidates(_sketches(d)[1])),
+            "sim_cands": on_docs(lambda d: _simhash_candidates(_sketches(d)[1])),
+            "xor": on_docs(lambda d: _sketch_xor(_sketches(d)[1])),
+            "store": on_docs(lambda d: _store_rows(d, store_dir)),
+            "mh_dedup": on_docs(lambda d: _mh_dedup_rows(d, *_sketches(d))),
         },
         "ngram_jaccard": {
-            "consec": nj_consec,
-            "fuzzy": nj_fuzzy,
-            "edit": nj_edit,
+            "consec": on_docs(lambda d: _consecutive_jaccard(d, _corpus_shingles(d))),
+            "fuzzy": on_docs(_fuzzy_pairs),
+            "edit": on_docs(
+                lambda d: _edit_scores(
+                    d, _consecutive_jaccard(d, _corpus_shingles(d)), _fuzzy_pairs(d)
+                )
+            ),
         },
         "dup_clusters": {
-            "edges": dc_edges,
-            "cc": dc_cc,
-            "pagerank": dc_pagerank,
+            "edges": on_docs(lambda d: _jaccard_edges(d, _corpus_shingles(d))),
+            "cc": on_docs(
+                lambda d: _edge_components(_jaccard_edges(d, _corpus_shingles(d)))
+            ),
+            "pagerank": on_docs(
+                lambda d: _edge_pagerank(_jaccard_edges(d, _corpus_shingles(d)))
+            ),
         },
         "passage_spans": {
-            "spans": ps_spans,
-            "top_ngrams": ps_top_ngrams,
-            "hash_embed": ps_hash_embed,
-            "despan": ps_despan,
+            "spans": on_docs(lambda d: _span_rows(d, _span_positions(d, _span_tokens(d)))),
+            "top_ngrams": on_docs(lambda d: _top_ngram_rows(d, _span_tokens(d))),
+            "hash_embed": on_docs(_hash_embed_rows),
+            "despan": on_docs(
+                lambda d: _despan_rows(d, _span_positions(d, _span_tokens(d)))
+            ),
         },
         "quality_score": {
-            "quality": qs_quality,
-            "langid": qs_langid,
-            "repetition": qs_repetition,
-            "dsir": qs_dsir,
+            "quality": on_docs(_quality_features),
+            "langid": on_docs(_language_ids),
+            "repetition": on_docs(_repetition_features),
+            "dsir": on_docs(lambda d: _dsir_weights(d, _dsir_buckets(d))),
         },
     }
 

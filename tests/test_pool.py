@@ -59,3 +59,33 @@ def test_failure_cancels_pending_siblings():
         pool.result(bad)
     assert pending.cancelled()
     assert ran == []
+
+
+def test_with_block_raise_drains_submitted_legs():
+    started = threading.Event()
+    finished = []
+
+    def slow_leg():
+        started.set()
+        time.sleep(0.5)
+        finished.append("slow")
+
+    ran = []
+    with pytest.raises(RuntimeError, match="build failed"):
+        with LegPool(1, "t") as pool:
+            slow = pool.submit(slow_leg)
+            pending = pool.submit(lambda: ran.append("pending"))
+            started.wait(5)
+            # main-thread plan building raises before any result() join
+            raise RuntimeError("build failed")
+    # no leg is still running once the exception reaches the caller
+    assert finished == ["slow"] and slow.done()
+    assert pending.cancelled() and ran == []
+
+
+def test_with_block_normal_exit_shuts_down():
+    with LegPool(2, "t") as pool:
+        fut = pool.submit(lambda: 7)
+        assert pool.result(fut) == 7
+    with pytest.raises(RuntimeError):
+        pool.submit(lambda: 8)

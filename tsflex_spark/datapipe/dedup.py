@@ -134,11 +134,10 @@ def minhash_signatures(
     shingle_k: int = 5,
     seed: int = 42,
     shingles: Optional[DataFrame] = None,
-    method: str = "oph",
 ) -> DataFrame:
     """(id, minhash array<long>) — one JVM-side pass, no Python.
 
-    ``method="oph"`` (default) is **one-permutation hashing**: each shingle
+    Signatures use **one-permutation hashing**: each shingle
     is hashed ONCE, assigned to bin ``pmod(h, num_hashes)``, and the
     signature slot j is the min hash within bin j (the partitioned-hash-
     space MinHash variant production sketch libraries use). Cost per
@@ -146,26 +145,12 @@ def minhash_signatures(
     drops ~num_hashes× in CPU, and the groupBy(id, bin) shuffle shrinks to
     ≤ num_hashes rows per doc after map-side combine. Empty bins (only
     possible when a doc has ≲ num_hashes shingles) are densified by
-    circular borrow from the next two bins, then a fixed sentinel —
-    deterministic, so equal shingle sets still yield equal signatures.
-
-    ``method="classic"`` is the k-independent-permutations construction:
-    minhash_j(doc) = min over shingles of xxhash64(base_hash, j) —
-    the j-th variant re-hashes the 8-byte base hash, never the string
-    (ANSI-safe: no wraparound arithmetic, which ANSI mode rejects).
+    circular borrow from the next two bins, then a per-doc fill hash
+    (``_oph_signature``) — deterministic, so equal shingle sets still
+    yield equal signatures.
     """
     sh = shingles if shingles is not None else shingle_rows(df, text_col, id_col, shingle_k)
     ex = sh.select(id_col, F.xxhash64("__s", F.lit(seed)).alias("__h"))
-    if method == "classic":
-        aggs = [
-            F.min(F.xxhash64(F.col("__h"), F.lit(j))).alias(f"__m{j}")
-            for j in range(num_hashes)
-        ]
-        g = ex.groupBy(id_col).agg(*aggs)
-        return g.select(
-            F.col(id_col),
-            F.array(*[F.col(f"__m{j}") for j in range(num_hashes)]).alias("minhash"),
-        )
     k = int(num_hashes)
     ex = ex.withColumn("__b", F.pmod(F.col("__h"), F.lit(k)).cast("int"))
     g = ex.groupBy(id_col).agg(*_oph_aggs("__h", k, "__b"))
@@ -286,7 +271,6 @@ def ngram_jaccard(
     id_col: str,
     shingle_k: int = 5,
     shingles: Optional[DataFrame] = None,
-    prune_checkpoint: bool = True,
     prune: bool = True,
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs (verification stage).
@@ -311,7 +295,7 @@ def ngram_jaccard(
     ``prune=False`` skips the involved-docs semi-join entirely — for
     pair sets that touch (nearly) every document the prune keeps
     everything, so the distinct + semi-join over the full shingle table
-    is pure overhead (it also implies no prune checkpoint)."""
+    is pure overhead, and so is the checkpoint of the pruned arrays."""
     sh = shingles if shingles is not None else shingle_rows(df, text_col, id_col, shingle_k)
     # prune the shingle table to docs that appear in a candidate pair
     # BEFORE the heavy joins: LSH keeps the candidate set tiny relative
@@ -334,7 +318,7 @@ def ngram_jaccard(
     # the arrays are never rebuilt per side. xxhash64 never returns
     # NULL, so collect_list counts exactly the grouped rows.
     arr = sh.groupBy(id_col).agg(F.collect_list("__s").alias("__arr"))
-    if prune and prune_checkpoint:
+    if prune:
         # materialize the verification working set (one array row per
         # involved doc — strictly smaller than the pruned shingle rows
         # this used to checkpoint) so the semi-join prune of the full

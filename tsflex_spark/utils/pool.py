@@ -31,18 +31,19 @@ class LegPool:
 
     Usage::
 
-        pool = LegPool(3, "text_stats")
-        a = pool.submit(build_leg_a)
-        b = pool.submit(build_leg_b)
-        ...main thread keeps building...
-        out = out.join(pool.result(a), on=...)
-        out = out.join(pool.result(b), on=...)
+        with LegPool(3, "text_stats") as pool:
+            a = pool.submit(build_leg_a)
+            b = pool.submit(build_leg_b)
+            ...main thread keeps building...
+            out = out.join(pool.result(a), on=...)
+            out = out.join(pool.result(b), on=...)
 
-    The pool never holds threads beyond the submitted legs: workers are
-    daemonic-by-default executor threads and the executor is shut down
-    (non-blocking) as soon as every leg is submitted via ``submit`` calls
-    followed by the first ``result``/``join`` — callers never need an
-    explicit close on the success path.
+    The ``with`` block owns the failure contract for the main thread
+    too: if anything inside it raises, pending legs are cancelled and
+    running ones waited out before the exception leaves the block (a
+    raise between ``submit`` and ``result`` would otherwise leave a
+    leg's Spark jobs running detached). A normal exit shuts the
+    executor down without blocking.
     """
 
     def __init__(self, max_workers: int, name: str = "leg"):
@@ -51,6 +52,15 @@ class LegPool:
         )
         self._futs: List[Future] = []
         self._closed = False
+
+    def __enter__(self) -> "LegPool":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        if exc_type is None:
+            self._shutdown()
+        else:
+            self._drain_on_error()
 
     def submit(self, fn: Callable[[], Any]) -> Future:
         fut = self._pool.submit(fn)
@@ -73,10 +83,7 @@ class LegPool:
         """Join one leg. On failure, no sibling leg keeps running Spark
         jobs past the raise (cancel + wait), then the error propagates."""
         try:
-            out = fut.result()
+            return fut.result()
         except BaseException:
             self._drain_on_error()
             raise
-        if all(f.done() for f in self._futs):
-            self._shutdown()
-        return out
