@@ -1845,7 +1845,6 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _documents(spark, sf_dir)
     from tsflex_spark.datapipe.lm import bigram_rows, score_perplexity, train_ngram_lm
     from tsflex_spark.datapipe.text import text_stats, token_count_bpe_ish
-    from tsflex_spark.utils.distributed import exact_quantiles
 
     base = text_stats(docs, "text", id_col="doc_id")
     bpe = token_count_bpe_ish(docs, "text", id_col="doc_id")
@@ -1861,7 +1860,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Concurrent first use of the shared bg checkpoint is safe (the
     # block manager locks per-partition computation).
     from tsflex_spark.datapipe.lm import score_perplexity_kn, train_kn_lm
-    from tsflex_spark.utils.distributed import exact_quantiles as _eq
+    from tsflex_spark.utils.distributed import _band_cuts
 
     def _laplace_leg():
         lm = train_ngram_lm(docs, "text", id_col="doc_id", bigrams=bg)
@@ -1896,10 +1895,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         # feeding the joined frame would re-execute the whole join once
         # per selection pass (exact_quantiles is two-pass by construction)
         lens = docs.select(F.length("text").alias("n_chars"))
-        return _eq(lens, "n_chars", [0.05, 0.95]).agg(
-            F.min(F.when(F.col("q") == 0.05, F.col("value"))).alias("p05_chars"),
-            F.max(F.when(F.col("q") == 0.95, F.col("value"))).alias("p95_chars"),
-        )
+        return _band_cuts(lens, "n_chars", 0.05, 0.95, "p05_chars", "p95_chars")
 
     with LegPool(3, "text_stats") as leg_pool:
         ppl_fut = leg_pool.submit(_laplace_leg)

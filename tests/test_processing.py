@@ -504,6 +504,37 @@ def test_halo_stitch_insufficient_radius_detectable(spark):
     assert np.array_equal(ok["d2"].to_numpy(), exp, equal_nan=True)
 
 
+@pytest.mark.parametrize("n", [3, 5, 9, 12])
+def test_halo_stitch_exact_on_short_partitions(spark, n):
+    """The halo_rows radius holds for any partition sizes: with 8 range
+    partitions over a few rows most partitions hold 0-2 rows, so a
+    2-row halo must be gathered across SEVERAL earlier/later partitions,
+    not copied from the adjacent one only."""
+    from tsflex_spark import SeriesPipeline, SeriesProcessor
+
+    ts = pd.date_range("2024-01-01", periods=n, freq="1s")
+    pdf = pd.DataFrame({"ts": ts, "v": np.arange(n, dtype="float64") ** 2})
+    sdf = spark.createDataFrame(pdf)
+
+    def back2(v: pd.Series) -> pd.Series:
+        return pd.Series(v.to_numpy(), index=v.index, name="d").diff(2)
+
+    def ahead2(v: pd.Series) -> pd.Series:
+        return pd.Series(v.to_numpy(), index=v.index, name="d").diff(-2)
+
+    for fn, halo in ((back2, (2, 0)), (ahead2, (0, 2))):
+        got = (
+            SeriesPipeline([SeriesProcessor(fn, "v", input_type="pandas", halo_rows=halo)])
+            .process(sdf, ts_col="ts")
+            .orderBy("ts")
+            .toPandas()
+        )
+        exp = fn(pdf.set_index("ts")["v"]).to_numpy()
+        assert np.array_equal(got["d"].to_numpy(), exp, equal_nan=True), (
+            halo, got["d"].tolist(), exp.tolist()
+        )
+
+
 def test_column_tier_pipeline_runs_on_stream(spark, tmp_path):
     """Column-tier SeriesProcessors compile to narrow codegen projections,
     so a SeriesPipeline must run UNCHANGED on a Structured Stream and

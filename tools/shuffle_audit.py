@@ -51,24 +51,13 @@ import os
 import sys
 import urllib.request
 
+os.environ.setdefault("SPARK_GRAFT_UI", "true")
+
 sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import SparkSession
 
-
-def get_spark_with_ui() -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("shuffle_audit")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .config("spark.ui.enabled", "true")
-        .getOrCreate()
-    )
+from tsflex_spark.session import get_spark
 
 
 def _rest(spark: SparkSession, path: str):
@@ -92,7 +81,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     import __spark_entry__ as entry_mod
 
-    spark = get_spark_with_ui()
+    spark = get_spark("shuffle_audit")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry_mod.queries()
     if len(sys.argv) > 2:

@@ -132,14 +132,10 @@ def clean_corpus(
             F.lit("language"),
         )
     if length_band is not None:
-        from tsflex_spark.utils.distributed import exact_quantiles
+        from tsflex_spark.utils.distributed import _band_cuts
 
-        q_lo, q_hi = float(length_band[0]), float(length_band[1])
         lens = docs.select(F.length(text_col).alias("__len"))
-        cuts = exact_quantiles(lens, "__len", [q_lo, q_hi]).agg(
-            F.min(F.when(F.col("q") == q_lo, F.col("value"))).alias("__blo"),
-            F.max(F.when(F.col("q") == q_hi, F.col("value"))).alias("__bhi"),
-        )
+        cuts = _band_cuts(lens, "__len", length_band[0], length_band[1], "__blo", "__bhi")
         # cutoffs come from the PRE-filter corpus in both modes (audit
         # parity; sequential re-derivation would couple stages)
         annotated = annotated.join(F.broadcast(cuts))

@@ -13,6 +13,11 @@ Spark-first tiers:
   like interpolation/resampling). Executed per ``key_cols`` group via
   Arrow ``applyInPandas``; without keys the series is one group (matches the
   single-machine reference; pass key_cols to distribute).
+- ``halo_rows=(lookback, lookahead)``: an UNKEYED order-dependent-but-local
+  function runs per range partition over its rows plus the ``lookback`` /
+  ``lookahead`` rows globally before / after them (overlap-stitch) — exact
+  for any partition sizes iff the function's row dependence radius is
+  <= ``halo_rows``.
 """
 
 from __future__ import annotations
@@ -24,7 +29,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from tsflex_spark.utils.data import cut_lineage
 from pyspark.sql import types as T
 
 
@@ -117,9 +121,9 @@ class SeriesProcessor:
         # core + halo rows borrowed from its neighbours, keeping only the
         # core outputs (overlap-stitch) — the 100 TB path for order-
         # dependent-but-LOCAL functions (diff/shift/rolling smooth/
-        # bounded-gap interpolate). Exact iff the true dependence radius
-        # is <= halo_rows; None keeps the single-group semantics for
-        # genuinely whole-series functions.
+        # bounded-gap interpolate). Exact for any partition sizes iff the
+        # true dependence radius is <= halo_rows; None keeps the
+        # single-group semantics for genuinely whole-series functions.
         if halo_rows is not None:
             lb, la = halo_rows
             assert lb >= 0 and la >= 0, "halo_rows must be non-negative"
@@ -297,60 +301,44 @@ class SeriesProcessor:
         function over ONE unkeyed logical series — the scale path that
         replaces the single-Arrow-group funnel.
 
-        Shape: range-partition in ts order; the last ``lookback`` rows of
-        partition p and the first ``lookahead`` rows of partition p+2-1
-        are REPLICATED into the neighbouring group via an explode of
-        group-membership ids (no driver hop, no single-partition
-        exchange); each Arrow group computes the function over
-        halo+core+halo and emits only its core rows. Exact iff the
-        function's dependence radius is <= halo_rows — the same contract
-        as ``utils.distributed.with_global_shift``, generalized to any
-        pandas transform.
+        Shape: range-partition in ts order (``distributed._ranged``);
+        each partition's Arrow group gets its own (core) rows plus the
+        edge rows of every earlier and later partition
+        (``distributed._neighbours``, the rows ``with_global_shift``
+        reads for lag-k), keeps the ``lookback`` rows just before and the
+        ``lookahead`` rows just after its core, computes the function
+        over halo+core+halo and emits only the output rows inside its
+        core ts span. Exact for any partition sizes iff the function's
+        dependence radius is <= halo_rows.
         """
-        from pyspark.sql import Window
+        from tsflex_spark.utils.distributed import PID, _neighbours, _ranged
 
         lookback, lookahead = self.halo_rows
-        from tsflex_spark.utils.distributed import _n_range_parts
-
-        # explicit count + materialization: AQE coalesces/replans range
-        # exchanges per-CONSUMER, desyncing __pid between the row branch
-        # and the halo-boundary branches (see distributed._ranged)
-        d = (
-            df.repartitionByRange(_n_range_parts(df), F.col(ts_col))
-            .withColumn("__pid", F.spark_partition_id())
-            .transform(cut_lineage)
-        )
-        w_asc = Window.partitionBy("__pid").orderBy(F.col(ts_col).asc())
-        w_desc = Window.partitionBy("__pid").orderBy(F.col(ts_col).desc())
-        d = d.withColumn("__rn", F.row_number().over(w_asc)).withColumn(
-            "__rnd", F.row_number().over(w_desc)
-        )
-        members = F.array(
-            F.col("__pid"),
-            F.when(F.col("__rnd") <= F.lit(int(lookback)), F.col("__pid") + 1),
-            F.when(
-                (F.col("__rn") <= F.lit(int(lookahead))) & (F.col("__pid") > 0),
-                F.col("__pid") - 1,
-            ),
-        )
-        d = d.select(
-            *df.columns, "__pid",
-            F.explode(F.filter(members, lambda g: g.isNotNull())).alias("__gid"),
-        )
+        d = _ranged(df, ts_col)
+        rows = d.withColumn("__core", F.lit(True))
+        for k, before in ((lookback, True), (lookahead, False)):
+            if k:
+                halo = _neighbours(d, ts_col, int(k), before=before)
+                rows = rows.unionByName(halo.withColumn("__core", F.lit(False)))
 
         def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
+            # range partitions never share a ts, so the core rows are one
+            # contiguous run of the ts-sorted group
             pdf = pdf.sort_values(ts_col).reset_index(drop=True)
-            res = transform(pdf)
-            # core mask from the RESULT frame (membership columns ride
-            # through the transform), so row-dropping dataframe_funcs
-            # stay aligned
-            core = (res["__pid"] == res["__gid"]).to_numpy()
+            core = np.flatnonzero(pdf["__core"].to_numpy())
+            if not len(core):
+                return pd.DataFrame(columns=out_cols)
+            lo, hi = pdf[ts_col].iloc[core[0]], pdf[ts_col].iloc[core[-1]]
+            window = pdf.iloc[max(core[0] - lookback, 0) : core[-1] + lookahead + 1]
+            res = transform(window.drop(columns=[PID, "__core"]).reset_index(drop=True))
             for c in out_cols:
                 if c not in res.columns:
                     res[c] = np.nan
-            return res.loc[core, out_cols]
+            # core = the core ts span, read on the RESULT frame so
+            # row-dropping dataframe_funcs stay aligned
+            return res.loc[res[ts_col].between(lo, hi), out_cols]
 
-        return d.groupBy("__gid").applyInPandas(run_group, schema)
+        return rows.groupBy(PID).applyInPandas(run_group, schema)
 
     def __repr__(self) -> str:
         return f"SeriesProcessor({self.name}, {self.series_names})"

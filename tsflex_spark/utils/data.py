@@ -131,16 +131,16 @@ def _known_partitions(df: DataFrame) -> int | None:
     return None
 
 
-def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Repartition a narrow input before compute-amplifying ops.
 
     A small parquet file (one row group) scans as ONE partition, so an
     explode/regex-heavy operator downstream runs on one core no matter how
-    many the cluster has. When the scan has fewer partitions than the
-    target (default ``sc.defaultParallelism``), round-robin repartition —
-    the shuffle moves only the narrow input (cheap), the amplified work
-    then spreads across every core. A 100 TB scan already has thousands
-    of splits and passes through untouched.
+    many the cluster has. When the scan has fewer partitions than
+    ``sc.defaultParallelism``, round-robin repartition — the shuffle
+    moves only the narrow input (cheap), the amplified work then spreads
+    across every core. A 100 TB scan already has thousands of splits and
+    passes through untouched.
 
     An input whose count is unknown without a job (a join or aggregate
     output, see :func:`_known_partitions`) is repartitioned unprobed, to
@@ -154,8 +154,7 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
         # streams have no static partition count to probe (df.rdd throws);
         # micro-batch sizing is the source's job — pass through untouched
         return df
-    sc = df.sparkSession.sparkContext
-    target = int(min_partitions or sc.defaultParallelism)
+    target = df.sparkSession.sparkContext.defaultParallelism
     n = _known_partitions(df)
     if n is None:
         planned = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))

@@ -17,7 +17,9 @@ These helpers keep the same semantics with a scalable plan:
 3. a per-partition aggregate (counts / sums / boundary values) — a few
    hundred rows — combined into exclusive prefix offsets with a window
    over ``lit(0)`` (tiny by construction: ≤ shuffle.partitions rows),
-   then **broadcast**-joined back on partition id.
+   then **broadcast**-joined back on partition id. Rows a partition
+   needs from its global neighbours (lag-k, the processing halo) come
+   from the other partitions' edge rows the same way (``_neighbours``).
 
 The per-partition aggregate branch and the row branch both read the same
 range exchange, so Catalyst's ReuseExchange executes the shuffle once.
@@ -27,7 +29,7 @@ rows — and every executor stays busy.
 
 from __future__ import annotations
 
-from typing import Callable, Optional, Sequence, Union
+from typing import Callable, Dict, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
@@ -68,12 +70,13 @@ def _n_range_parts(df: DataFrame) -> int:
         return df.sparkSession.sparkContext.defaultParallelism
 
 
-def _ranged(df: DataFrame, order_col: str) -> DataFrame:
-    """Range-partition by ``order_col`` and stamp the post-shuffle
+def _ranged(df: DataFrame, *order_cols: str) -> DataFrame:
+    """Range-partition by ``order_cols`` and stamp the post-shuffle
     partition id, then MATERIALIZE (eager localCheckpoint — eager because
     a lazy checkpoint materializing on an AQE broadcast-exchange thread
     can ABBA-deadlock against concurrent stage submission; see
-    feature_collection's bounds comment).
+    feature_collection's bounds comment). Every unkeyed operator in this
+    module starts here.
 
     The checkpoint is load-bearing for correctness, not a perf knob:
     every helper reads this frame from >= 2 plan branches (rows + a
@@ -89,32 +92,97 @@ def _ranged(df: DataFrame, order_col: str) -> DataFrame:
     by construction. Explicit count: user-specified counts are exempt
     from AQE repartition rewrites (see ``_n_range_parts``)."""
     return (
-        df.repartitionByRange(_n_range_parts(df), F.col(order_col))
+        df.repartitionByRange(_n_range_parts(df), *[F.col(c) for c in order_cols])
         .withColumn(PID, F.spark_partition_id())
         .transform(cut_lineage)
     )
 
 
 def _prefix(
-    tiny: DataFrame, val_col: str, out_col: str, *, how: str = "sum", reverse: bool = False
+    tiny: DataFrame,
+    cols: Dict[str, str],
+    *,
+    how: str = "sum",
+    reverse: bool = False,
+    ignorenulls: bool = False,
 ) -> DataFrame:
-    """Exclusive prefix over a per-partition aggregate table (≤
-    shuffle.partitions rows): a broadcast self-join over ``pid' < pid``
+    """Exclusive prefix over a per-partition table (one row per ``PID``,
+    ≤ shuffle.partitions rows): a broadcast self-join over ``pid' < pid``
     instead of an unpartitioned window (which Catalyst would constant-fold
     into a single-partition WindowExec). O(P²) on P ≈ hundreds of rows.
 
+    Returns ``tiny`` plus one column per ``{val_col: out_col}`` entry.
     ``how='sum'``: exclusive running sum. ``how='edge'``: value from the
     nearest earlier (``reverse=False``) / later (``reverse=True``)
-    partition."""
-    b = tiny.select(F.col(PID).alias("__bp"), F.col(val_col).alias("__bv"))
-    cond = F.col("__bp") > F.col(PID) if reverse else F.col("__bp") < F.col(PID)
-    j = tiny.join(F.broadcast(b), cond, "left")
-    if how == "sum":
-        agg = F.coalesce(F.sum("__bv"), F.lit(0)).alias(out_col)
-    else:  # "edge"
-        pick = F.min_by if reverse else F.max_by
-        agg = pick(F.col("__bv"), F.col("__bp")).alias(out_col)
-    return j.groupBy(PID, val_col).agg(agg)
+    partition — that partition's value even when it is NULL, or with
+    ``ignorenulls`` the nearest non-NULL value."""
+    bp = F.col("__bp")
+    b = tiny.select(F.col(PID).alias("__bp"), *[F.col(v).alias(f"__b{v}") for v in cols])
+    j = tiny.join(F.broadcast(b), bp > F.col(PID) if reverse else bp < F.col(PID), "left")
+    aggs = []
+    for v, out in cols.items():
+        bv = F.col(f"__b{v}")
+        if how == "sum":
+            aggs.append(F.coalesce(F.sum(bv), F.lit(0)).alias(out))
+        else:  # "edge"
+            pick = F.min_by if reverse else F.max_by
+            aggs.append(pick(bv, F.when(bv.isNotNull(), bp) if ignorenulls else bp).alias(out))
+    keep = [F.first(c).alias(c) for c in tiny.columns if c != PID]
+    return j.groupBy(PID).agg(*keep, *aggs)
+
+
+def _offsets(d: DataFrame) -> DataFrame:
+    """Per-partition row count ``__cnt`` and exclusive global row offset
+    ``__off`` of a :func:`_ranged` frame (one row per non-empty partition)."""
+    counts = d.groupBy(PID).agg(F.count(F.lit(1)).alias("__cnt"))
+    return _prefix(counts, {"__cnt": "__off"})
+
+
+def _lag1(d: DataFrame, col: str, order_col: str, out_col: str, *, lead: bool = False) -> DataFrame:
+    """Global ``lag(col)`` (``lead`` when ``lead=True``) by ``order_col``
+    over a :func:`_ranged` frame: partition-local lag/lead, and each
+    partition's edge row patched with the last (first) value of the
+    nearest earlier (later) non-empty partition — a per-partition
+    ``max_by``/``min_by`` hash aggregate through :func:`_prefix`. The
+    value is taken as is, NULL included."""
+    o = F.col(order_col)
+    wloc = W.partitionBy(PID).orderBy(o)
+    pick = F.min_by if lead else F.max_by
+    edges = d.groupBy(PID).agg(pick(F.col(col), o).alias("__edge"))
+    bnd = _prefix(edges, {"__edge": "__bnd"}, how="edge", reverse=lead).select(PID, "__bnd")
+    if lead:
+        local = F.lead(F.col(col)).over(wloc)
+        at_edge = F.row_number().over(W.partitionBy(PID).orderBy(o.desc())) == 1
+    else:
+        local = F.lag(F.col(col)).over(wloc)
+        at_edge = F.row_number().over(wloc) == 1
+    out = d.join(F.broadcast(bnd), on=PID, how="left")
+    return out.withColumn(out_col, F.when(at_edge, F.col("__bnd")).otherwise(local)).drop("__bnd")
+
+
+def _neighbours(d: DataFrame, order_col: str, k: int, *, before: bool) -> DataFrame:
+    """Rows of a :func:`_ranged` frame from the other partitions that
+    include, for each partition, the ``k`` rows globally nearest to it on
+    one side (``before``: earlier partitions, else later ones), keyed by
+    the partition they serve in ``PID``. Every partition offers its own
+    ``k`` edge rows to each partition past it — an explode over the
+    known range of partition ids, so short or empty partitions in between
+    never starve a target. At most k·P rows per target (P = the
+    range-partition count); the caller keeps the ``k`` nearest (shift-k
+    indexes its sorted array from the near end, the halo slices its
+    sorted Arrow group). No nested-loop join, and the only exchange of
+    the edge rows is the one the per-partition ``row_number`` needs."""
+    near = F.col(order_col).desc() if before else F.col(order_col).asc()
+    rank = F.row_number().over(W.partitionBy(PID).orderBy(near))
+    edges = d.withColumn("__r", rank).where(F.col("__r") <= k)
+    last = _n_range_parts(d) - 1
+    if before:
+        edges = edges.where(F.col(PID) < last)
+        targets = F.sequence(F.col(PID) + 1, F.lit(last))
+    else:
+        edges = edges.where(F.col(PID) > 0)
+        targets = F.sequence(F.lit(0), F.col(PID) - 1)
+    return edges.select(F.explode(targets).alias(PID), *[c for c in d.columns if c != PID])
 
 
 def with_global_row_number(
@@ -135,8 +203,7 @@ def with_global_row_number(
         return df.withColumn(out_col, rn)
 
     d = _ranged(df, order_col)
-    counts = d.groupBy(PID).agg(F.count(F.lit(1)).alias("__cnt"))
-    offs = _prefix(counts, "__cnt", "__off").select(PID, "__off")
+    offs = _offsets(d).select(PID, "__off")
     local = F.row_number().over(W.partitionBy(PID).orderBy(order_col))
     out = d.join(F.broadcast(offs), on=PID, how="left").withColumn(
         out_col, F.col("__off") + local - (1 if zero_based else 0)
@@ -165,8 +232,8 @@ def with_global_shift(
     several).
 
     Any ``|offset| = k`` is supported in one pass: the k boundary rows
-    each partition needs from its global neighbours travel as a tiny
-    per-partition array (≤ k·P rows aggregated, broadcast back) — lag-k
+    each partition needs from its global neighbours (:func:`_neighbours`)
+    travel as a tiny per-partition array, broadcast back — lag-k
     costs the same single range exchange as lag-1, never k composed
     shuffles. ``order_col`` is assumed strictly increasing (ties make
     any global shift ambiguous)."""
@@ -193,74 +260,26 @@ def with_global_shift(
         fn = F.lag if offset < 0 else F.lead
         return df.withColumn(out_col, fn(F.col(col), abs(offset)).over(w))
 
-    if abs(offset) > 1:
-        return _shift_k(df, col, order_col, out_col, offset)
-
     d = _ranged(df, order_col)
-    wloc = W.partitionBy(PID).orderBy(order_col)
-    if offset == -1:
-        local = F.lag(F.col(col)).over(wloc)
-        # boundary for partition p = last value of the nearest earlier
-        # non-empty partition (window `last ignorenulls` handles gaps)
-        edges = d.groupBy(PID).agg(F.max_by(F.col(col), F.col(order_col)).alias("__edge"))
-        edges = _prefix(edges, "__edge", "__bnd", how="edge").select(PID, "__bnd")
-        at_edge = F.row_number().over(wloc) == 1
-    else:
-        local = F.lead(F.col(col)).over(wloc)
-        edges = d.groupBy(PID).agg(F.min_by(F.col(col), F.col(order_col)).alias("__edge"))
-        # first value of the nearest later non-empty partition
-        edges = _prefix(edges, "__edge", "__bnd", how="edge", reverse=True).select(PID, "__bnd")
-        at_edge = F.row_number().over(W.partitionBy(PID).orderBy(F.col(order_col).desc())) == 1
-    out = d.join(F.broadcast(edges), on=PID, how="left").withColumn(
-        out_col, F.when(at_edge, F.col("__bnd")).otherwise(local)
-    )
-    return out.drop(PID, "__bnd")
+    if abs(offset) == 1:
+        return _lag1(d, col, order_col, out_col, lead=offset > 0).drop(PID)
+    return _shift_k(d, col, order_col, out_col, offset)
 
 
 def _shift_k(
-    df: DataFrame, col: str, order_col: str, out_col: str, offset: int
+    d: DataFrame, col: str, order_col: str, out_col: str, offset: int
 ) -> DataFrame:
-    """|offset| = k > 1 global shift: partition-local ``lag(k)``/``lead(k)``
-    plus, for each partition's first/last k rows, the value plucked from a
-    per-partition array of the k nearest GLOBAL neighbour values.
-
-    The neighbour arrays come from a tiny side computation: each
-    partition's k edge rows (≤ k·P rows total) ranked across partitions,
-    aggregated to one ascending-order array per target partition and
-    broadcast back — the data itself shuffles exactly once (the range
-    partition), same as lag-1."""
+    """|offset| = k > 1 global shift over a :func:`_ranged` frame:
+    partition-local ``lag(k)``/``lead(k)`` plus, for each partition's
+    first/last k rows, the value plucked from a per-partition ascending
+    array of GLOBAL neighbour values (:func:`_neighbours`, broadcast
+    back; indexed from its near end, where the k nearest sit) — the
+    data itself shuffles exactly once (the range partition), same as
+    lag-1."""
     k = abs(offset)
     lagging = offset < 0
-    d = _ranged(df, order_col)
-    o = F.col(order_col)
-    wloc = W.partitionBy(PID).orderBy(o)
-    wloc_desc = W.partitionBy(PID).orderBy(o.desc())
-
-    # per-partition edge rows: the k rows a NEIGHBOUR partition might need
-    eo = F.col("__eo")
-    edge_rank = F.row_number().over(
-        W.partitionBy(PID).orderBy(eo.desc() if lagging else eo.asc())
-    )
-    edges = (
-        d.select(PID, o.alias("__eo"), F.col(col).alias("__ev"))
-        .withColumn("__er", edge_rank)
-        .where(F.col("__er") <= k)
-        .drop("__er")
-    )
-    # for each target partition p: the k globally-nearest rows on the
-    # needed side (pid' < p for lag, > p for lead), as ONE ascending array
-    pids = d.select(PID).distinct()
-    e = edges.select(
-        F.col(PID).alias("__ep"), F.col("__eo"), F.col("__ev")
-    )
-    side = F.col("__ep") < F.col(PID) if lagging else F.col("__ep") > F.col(PID)
-    rank_o = F.col("__eo").desc() if lagging else F.col("__eo").asc()
-    cand = (
-        pids.join(F.broadcast(e), side, "inner")
-        .withColumn("__rk", F.row_number().over(W.partitionBy(PID).orderBy(rank_o)))
-        .where(F.col("__rk") <= k)
-    )
-    pred = cand.groupBy(PID).agg(
+    e = d.select(PID, F.col(order_col).alias("__eo"), F.col(col).alias("__ev"))
+    pred = _neighbours(e, "__eo", k, before=lagging).groupBy(PID).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct(F.col("__eo"), F.col("__ev")))),
             lambda s: s["__ev"],
@@ -268,6 +287,7 @@ def _shift_k(
     )
 
     out = d.join(F.broadcast(pred), on=PID, how="left")
+    wloc = W.partitionBy(PID).orderBy(F.col(order_col))
     m = F.size(F.coalesce(F.col("__nbr"), F.array()))
     if lagging:
         rn = F.row_number().over(wloc)
@@ -276,7 +296,7 @@ def _shift_k(
         # array index m - (k - rn + 1); F.get -> NULL when out of range
         fallback = F.get(F.col("__nbr"), m - (F.lit(k) - rn + 1))
     else:
-        rn = F.row_number().over(wloc_desc)
+        rn = F.row_number().over(W.partitionBy(PID).orderBy(F.col(order_col).desc()))
         local = F.lead(F.col(col), k).over(wloc)
         # (k - rn + 1)-th nearest successor: ascending array index k - rn
         fallback = F.get(F.col("__nbr"), F.lit(k) - rn)
@@ -306,28 +326,18 @@ def with_global_islands(
         chg = F.when(change_when(F.lag(F.col(lag_of)).over(w)), 1).otherwise(0)
         return df.withColumn(out_col, F.sum(chg).over(w))
 
-    d = _ranged(df, order_col)
-    wloc = W.partitionBy(PID).orderBy(order_col)
-    wrun = wloc.rowsBetween(W.unboundedPreceding, 0)
-
-    # true previous value: partition-local lag, edge row patched with the
-    # last value of the nearest earlier non-empty partition
-    edges = d.groupBy(PID).agg(F.max_by(F.col(lag_of), F.col(order_col)).alias("__edge"))
-    edges = _prefix(edges, "__edge", "__bnd", how="edge").select(PID, "__bnd")
-    d = d.join(F.broadcast(edges), on=PID, how="left")
-    prev = F.when(
-        F.row_number().over(wloc) == 1, F.col("__bnd")
-    ).otherwise(F.lag(F.col(lag_of)).over(wloc))
-    d = d.withColumn("__chg", F.when(change_when(prev), 1).otherwise(0))
-
-    # global running sum of __chg = local running sum + exclusive prefix
-    # of per-partition sums
+    # true previous value (the shared lag-1 edge step), then the global
+    # running sum of __chg = local running sum + exclusive prefix of
+    # per-partition sums
+    d = _lag1(_ranged(df, order_col), lag_of, order_col, "__prev")
+    d = d.withColumn("__chg", F.when(change_when(F.col("__prev")), 1).otherwise(0))
     sums = d.groupBy(PID).agg(F.sum("__chg").alias("__s"))
-    offs = _prefix(sums, "__s", "__off").select(PID, "__off")
+    offs = _prefix(sums, {"__s": "__off"}).select(PID, "__off")
+    wrun = W.partitionBy(PID).orderBy(order_col).rowsBetween(W.unboundedPreceding, 0)
     out = d.join(F.broadcast(offs), on=PID, how="left").withColumn(
         out_col, F.sum("__chg").over(wrun) + F.col("__off")
     )
-    return out.drop(PID, "__bnd", "__chg", "__off")
+    return out.drop(PID, "__prev", "__chg", "__off")
 
 
 def with_global_carry(
@@ -348,12 +358,7 @@ def with_global_carry(
     """
     cols = list(cols)
     order_cols = list(order_cols)
-    # materialized for the same reason as _ranged: consumer-stable pids
-    d = (
-        df.repartitionByRange(_n_range_parts(df), *[F.col(c) for c in order_cols])
-        .withColumn(PID, F.spark_partition_id())
-        .transform(cut_lineage)
-    )
+    d = _ranged(df, *order_cols)
     wloc = (
         W.partitionBy(PID)
         .orderBy(*[F.col(c) for c in order_cols])
@@ -366,21 +371,9 @@ def with_global_carry(
             for c in cols
         ]
     )
-    b = edges.select(
-        F.col(PID).alias("__bp"), *[F.col(f"__e_{c}").alias(f"__b_{c}") for c in cols]
-    )
-    bnd = (
-        edges.join(F.broadcast(b), F.col("__bp") < F.col(PID), "left")
-        .groupBy(PID)
-        .agg(
-            *[
-                F.max_by(
-                    F.col(f"__b_{c}"), F.when(F.col(f"__b_{c}").isNotNull(), F.col("__bp"))
-                ).alias(f"__bnd_{c}")
-                for c in cols
-            ]
-        )
-    )
+    bnd = _prefix(
+        edges, {f"__e_{c}": f"__bnd_{c}" for c in cols}, how="edge", ignorenulls=True
+    ).select(PID, *[f"__bnd_{c}" for c in cols])
     out = d.join(F.broadcast(bnd), on=PID, how="left")
     for c in cols:
         local = F.last(F.col(c), ignorenulls=True).over(wloc)
@@ -388,34 +381,18 @@ def with_global_carry(
     return out.drop(PID, *[f"__bnd_{c}" for c in cols])
 
 
-def _values_at_ranks(
-    df: DataFrame,
-    col: str,
-    ranks_tiny: DataFrame,
-    *,
-    pre_ranged: bool = False,
-    counts: Optional[DataFrame] = None,
-) -> DataFrame:
+def _values_at_ranks(d: DataFrame, col: str, ranks_tiny: DataFrame, offs: DataFrame) -> DataFrame:
     """Exact global order statistics without a single-partition sort.
 
-    ``ranks_tiny`` is a small DataFrame with one ``__rank`` column
-    (1-based global ranks over non-null ``col`` ascending). Scheme:
-    range-partition on ``col`` (one shuffle), per-partition counts →
-    broadcast exclusive prefix offsets → each requested rank maps to
-    exactly one partition and a LOCAL rank; a partition-local
-    ``row_number`` window (fully parallel) picks the value. Returns
-    (``__rank``, ``__v``) — at most ``len(ranks)`` rows. Ranks beyond the
-    row count yield no row (caller decides the semantics).
-
-    ``pre_ranged=True``: ``df`` is already a ``_ranged`` output (stamped
-    ``PID``, materialized, nulls dropped) — skip the second range
-    materialization; pass ``counts`` to reuse an existing per-partition
-    count table as well (exact_quantiles derives n from the same table).
+    ``d`` is a :func:`_ranged` frame over the non-null ``col`` and
+    ``offs`` its :func:`_offsets`; ``ranks_tiny`` is a small DataFrame
+    with one ``__rank`` column (1-based global ranks over ``col``
+    ascending). Each requested rank maps to exactly one partition and a
+    LOCAL rank; a partition-local ``row_number`` window (fully parallel)
+    picks the value. Returns (``__rank``, ``__v``) — at most
+    ``len(ranks)`` rows. Ranks beyond the row count yield no row (caller
+    decides the semantics).
     """
-    d = df if pre_ranged else _ranged(df.select(col).where(F.col(col).isNotNull()), col)
-    if counts is None:
-        counts = d.groupBy(PID).agg(F.count(F.lit(1)).alias("__cnt"))
-    offs = _prefix(counts, "__cnt", "__off")
     loc = (
         offs.join(
             F.broadcast(ranks_tiny),
@@ -439,7 +416,8 @@ def order_statistics(df: DataFrame, col: str, ranks: Sequence[int]) -> DataFrame
     global sort. Nulls are excluded from the ranking."""
     spark = df.sparkSession
     rdf = spark.createDataFrame([(int(r),) for r in ranks], "__rank long").distinct()
-    out = _values_at_ranks(df, col, rdf)
+    d = _ranged(df.select(col).where(F.col(col).isNotNull()), col)
+    out = _values_at_ranks(d, col, rdf, _offsets(d))
     return out.select(F.col("__rank").alias("rank"), F.col("__v").alias("value"))
 
 
@@ -466,8 +444,8 @@ def exact_quantiles(df: DataFrame, col: str, qs: Sequence[float]) -> DataFrame:
     slice is one column, so the footprint is 8-16 B/row.
     """
     d = _ranged(df.select(col).where(F.col(col).isNotNull()), col)
-    counts = d.groupBy(PID).agg(F.count(F.lit(1)).alias("__cnt"))
-    n_df = counts.agg(F.sum("__cnt").cast("long").alias("__n"))
+    offs = _offsets(d)
+    n_df = offs.agg(F.sum("__cnt").cast("long").alias("__n"))
     n_df = n_df.select(F.coalesce(F.col("__n"), F.lit(0)).alias("__n"))
     qdf = n_df.select(
         F.explode(F.array(*[F.lit(float(q)) for q in qs])).alias("q"), "__n"
@@ -485,7 +463,7 @@ def exact_quantiles(df: DataFrame, col: str, qs: Sequence[float]) -> DataFrame:
         .where(F.col("__rank") >= 1)
         .distinct()
     )
-    vals = _values_at_ranks(d, col, ranks, pre_ranged=True, counts=counts)
+    vals = _values_at_ranks(d, col, ranks, offs)
     lo = vals.select(F.col("__rank").alias("__lo"), F.col("__v").alias("__vlo"))
     hi = vals.select(F.col("__rank").alias("__hi"), F.col("__v").alias("__vhi"))
     out = qdf.join(F.broadcast(lo), on="__lo", how="left").join(
@@ -498,6 +476,19 @@ def exact_quantiles(df: DataFrame, col: str, qs: Sequence[float]) -> DataFrame:
     )
 
 
+def _band_cuts(
+    df: DataFrame, col: str, q_lo: float, q_hi: float, lo_col: str, hi_col: str
+) -> DataFrame:
+    """One-row frame of the EXACT ``q_lo`` and ``q_hi`` quantiles of
+    ``col`` as columns ``lo_col`` and ``hi_col`` — the cutoffs of a
+    quantile band, ready to broadcast-join."""
+    q_lo, q_hi = float(q_lo), float(q_hi)
+    return exact_quantiles(df, col, [q_lo, q_hi]).agg(
+        F.min(F.when(F.col("q") == q_lo, F.col("value"))).alias(lo_col),
+        F.max(F.when(F.col("q") == q_hi, F.col("value"))).alias(hi_col),
+    )
+
+
 def quantile_filter(
     df: DataFrame, col: str, q_low: float = 0.0, q_high: float = 1.0
 ) -> DataFrame:
@@ -506,10 +497,7 @@ def quantile_filter(
     outliers" curation step. Two passes over ``col`` (count + ranked
     selection), then one broadcast of a single cutoff row; the full table
     is scanned exactly once more with a codegen filter."""
-    cuts = exact_quantiles(df, col, [q_low, q_high]).agg(
-        F.min(F.when(F.col("q") == float(q_low), F.col("value"))).alias("__qlo"),
-        F.max(F.when(F.col("q") == float(q_high), F.col("value"))).alias("__qhi"),
-    )
+    cuts = _band_cuts(df, col, q_low, q_high, "__qlo", "__qhi")
     out = df.join(F.broadcast(cuts))
     return out.where(
         (F.col(col).cast("double") >= F.col("__qlo"))
@@ -551,13 +539,7 @@ def with_global_ewma(
     assert 0.0 < alpha <= 1.0, "alpha must be in (0, 1]"
     order_cols = list(order_cols)
 
-    # materialized for the same reason as _ranged: consumer-stable pids
-    d = (
-        df.repartitionByRange(_n_range_parts(df), *[F.col(c) for c in order_cols])
-        .sortWithinPartitions(*[F.col(c) for c in order_cols])
-        .withColumn(PID, F.spark_partition_id())
-        .transform(cut_lineage)
-    )
+    d = _ranged(df, *order_cols).sortWithinPartitions(*order_cols)
     from pyspark.sql import types as T
 
     # build a FRESH StructType — StructType.add mutates (and DataFrame
@@ -613,23 +595,13 @@ def with_global_ewma(
         F.max_by("__D", "__pos").alias("__de"),
         (F.max("__pos") + 1).alias("__n"),
     )
-    # inclusive cumulative row count per partition (tiny self-join)
-    cum = (
-        edges.alias("a")
-        .join(F.broadcast(edges.alias("b")), F.col(f"b.{PID}") <= F.col(f"a.{PID}"))
-        .groupBy(f"a.{PID}")
-        .agg(
-            F.sum("b.__n").alias("__cum"),
-            F.first("a.__ne").alias("__ne"),
-            F.first("a.__de").alias("__de"),
-            F.first("a.__n").alias("__n"),
-        )
-    )
+    # exclusive cumulative row count per partition
+    cum = _prefix(edges, {"__n": "__off"})
     # carry-in per partition: geometric-decayed sum of earlier edge values
     pairs = cum.alias("p").join(
         F.broadcast(cum.alias("q")), F.col(f"q.{PID}") < F.col(f"p.{PID}"), "left"
     )
-    delta = (F.col("p.__cum") - F.col("p.__n")) - F.col("q.__cum")
+    delta = F.col("p.__off") - (F.col("q.__off") + F.col("q.__n"))
     carry = pairs.groupBy(f"p.{PID}").agg(
         F.coalesce(
             F.sum(F.col("q.__ne") * F.pow(F.lit(r), delta)), F.lit(0.0)

@@ -26,6 +26,45 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _rank_sums(
+    df: DataFrame, label_col: str, score_col: str, round_scores: Optional[int]
+) -> DataFrame:
+    """One-row (``rank_sum_pos``, ``n_pos``, ``n_neg``) frame: the sum of
+    the positives' average ranks and the two class counts (doubles, 0
+    when a class is absent) — the rank aggregation both AUC forms share."""
+    y = F.col(label_col).cast("double")
+    s = F.col(score_col).cast("double")
+    if round_scores is not None:
+        s = F.round(s, int(round_scores))
+    per_score = (
+        df.select(s.alias("__s"), y.alias("__y"))
+        .where(F.col("__s").isNotNull() & F.col("__y").isNotNull())
+        .groupBy("__s")
+        .agg(
+            F.count(F.lit(1)).alias("__n"),
+            F.sum("__y").alias("__np"),
+        )
+    )
+    w = Window.orderBy("__s").rowsBetween(Window.unboundedPreceding, -1)
+    ranked = per_score.select(
+        "__n",
+        "__np",
+        # average rank of this score's tie group: rows strictly below +
+        # (n+1)/2 within the group
+        (
+            F.coalesce(F.sum("__n").over(w), F.lit(0)).cast("double")
+            + (F.col("__n") + 1) / 2.0
+        ).alias("__r"),
+    )
+    return ranked.agg(
+        F.sum(F.col("__np") * F.col("__r")).alias("rank_sum_pos"),
+        F.coalesce(F.sum("__np"), F.lit(0.0)).cast("double").alias("n_pos"),
+        F.coalesce(F.sum(F.col("__n") - F.col("__np")), F.lit(0.0))
+        .cast("double")
+        .alias("n_neg"),
+    )
+
+
 def binary_auc(
     df: DataFrame,
     label_col: str = "label",
@@ -42,37 +81,8 @@ def binary_auc(
     first — a cardinality bound for the distinct-score frame at extreme
     scale (ties are handled exactly either way).
     """
-    y = F.col(label_col).cast("double")
-    s = F.col(score_col).cast("double")
-    if round_scores is not None:
-        s = F.round(s, int(round_scores))
-    per_score = (
-        df.select(s.alias("__s"), y.alias("__y"))
-        .where(F.col("__s").isNotNull() & F.col("__y").isNotNull())
-        .groupBy("__s")
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum("__y").alias("__np"),
-        )
-    )
-    w = Window.orderBy("__s").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = per_score.select(
-        "__s",
-        "__n",
-        "__np",
-        # average rank of this score's tie group: rows strictly below +
-        # (n+1)/2 within the group
-        (
-            F.coalesce(F.sum("__n").over(w), F.lit(0)).cast("double")
-            + (F.col("__n") + 1) / 2.0
-        ).alias("__r"),
-    )
-    row = ranked.agg(
-        F.sum(F.col("__np") * F.col("__r")).alias("rank_sum_pos"),
-        F.sum("__np").alias("n_pos"),
-        F.sum(F.col("__n") - F.col("__np")).alias("n_neg"),
-    ).first()
-    n_pos, n_neg = float(row["n_pos"] or 0), float(row["n_neg"] or 0)
+    row = _rank_sums(df, label_col, score_col, round_scores).first()
+    n_pos, n_neg = row["n_pos"], row["n_neg"]
     if n_pos == 0 or n_neg == 0:
         raise ValueError(
             f"AUC undefined: n_pos={int(n_pos)}, n_neg={int(n_neg)} — "
@@ -97,35 +107,7 @@ def binary_auc_frame(
     without a blocking driver collect in the query path (guide §5).
     Degenerate inputs (a single class) yield NULL instead of raising —
     callers that need the loud error should use ``binary_auc``."""
-    y = F.col(label_col).cast("double")
-    s = F.col(score_col).cast("double")
-    if round_scores is not None:
-        s = F.round(s, int(round_scores))
-    per_score = (
-        df.select(s.alias("__s"), y.alias("__y"))
-        .where(F.col("__s").isNotNull() & F.col("__y").isNotNull())
-        .groupBy("__s")
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum("__y").alias("__np"),
-        )
-    )
-    w = Window.orderBy("__s").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = per_score.select(
-        "__n",
-        "__np",
-        (
-            F.coalesce(F.sum("__n").over(w), F.lit(0)).cast("double")
-            + (F.col("__n") + 1) / 2.0
-        ).alias("__r"),
-    )
-    agg = ranked.agg(
-        F.sum(F.col("__np") * F.col("__r")).alias("rank_sum_pos"),
-        F.coalesce(F.sum("__np"), F.lit(0.0)).cast("double").alias("n_pos"),
-        F.coalesce(F.sum(F.col("__n") - F.col("__np")), F.lit(0.0))
-        .cast("double")
-        .alias("n_neg"),
-    )
+    agg = _rank_sums(df, label_col, score_col, round_scores)
     u = F.col("rank_sum_pos") - F.col("n_pos") * (F.col("n_pos") + 1) / 2.0
     return agg.select(
         F.when(
