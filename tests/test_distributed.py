@@ -362,3 +362,27 @@ def test_multi_column_keyed_lag_k(spark):
         assert out[dst].isna().equals(exp.isna()), dst
         both = ~exp.isna()
         assert np.allclose(out[dst][both].astype(float), exp[both].astype(float)), dst
+
+
+def test_global_ewma_scan_runs_once(spark):
+    """The EWMA's Python scan feeds four consumers (the row branch, the
+    per-partition edge table and both sides of the carry self-joins).
+    It runs once, inside the range cut, so the executed plan of the
+    result re-runs no ``MapInPandas`` scan."""
+    import numpy as np
+    import pandas as pd
+
+    from tsflex_spark.utils.distributed import with_global_ewma
+
+    pdf = pd.DataFrame({"i": np.arange(200), "v": np.linspace(0.0, 1.0, 200)})
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        out = with_global_ewma(spark.createDataFrame(pdf), "v", 0.3, ["i"])
+        got = out.orderBy("i").toPandas()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert plan.count("MapInPandas") == 0, plan
+    exp = pdf["v"].ewm(alpha=0.3, adjust=True).mean().to_numpy()
+    assert np.max(np.abs(got["v_ewma"].to_numpy() - exp)) < 1e-12

@@ -242,6 +242,27 @@ def test_sparsity_warning_fires_by_default(spark):
         join_sparsity_watchers()
 
 
+def test_sparsity_join_skips_unexecuted_frames(spark):
+    """A default-sparsity calculate() whose frame never runs has no
+    warning to wait for: joining the watchers returns in seconds, not
+    after a per-watcher timeout, and an executed frame still warns."""
+    import time
+
+    from tsflex_spark.features.feature_collection import join_sparsity_watchers
+
+    ts = list(pd.date_range("2024-01-01", periods=10, freq="1s")) + list(
+        pd.date_range("2024-01-01 00:00:30", periods=10, freq="1s")
+    )
+    df = spark.createDataFrame(pd.DataFrame({"ts": ts, "v": 1.0}))
+    fc = FeatureCollection([FeatureDescriptor("sum", "v", "10s", "10s")])
+    fc.calculate(df, ts_col="ts")  # planned, never executed
+    t0 = time.perf_counter()
+    with pytest.warns(RuntimeWarning, match="gaps"):
+        fc.calculate(df, ts_col="ts").collect()
+        join_sparsity_watchers()
+    assert time.perf_counter() - t0 < 15
+
+
 def test_sparsity_approved_no_warning(spark):
     import warnings as _w
 

@@ -21,16 +21,73 @@ back to data when per-chunk processing is needed, or use
 
 from __future__ import annotations
 
-from typing import Optional, Sequence, Union
+from typing import List, Optional, Sequence, Tuple, Union
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tsflex_spark.features.segmenter import TSN, numeric_index
 from tsflex_spark.utils.data import DataType, determine_type
 from tsflex_spark.utils.distributed import with_global_islands, with_global_row_number
 from tsflex_spark.utils.time_args import to_numeric_units
+
+
+def _chunks(
+    data: DataFrame,
+    ts_col: str,
+    value_col: Optional[str],
+    key_cols: Sequence[str],
+    fs: Optional[float],
+    max_gap: Optional[Union[str, pd.Timedelta, int, float]],
+    carry: Sequence[str] = (),
+    aggs: Sequence[Column] = (),
+) -> Tuple[DataFrame, bool]:
+    """The gap-island core of ``chunk_data`` and ``chunk_features``.
+
+    Rows with a non-NULL ``value_col`` (all rows when None) get a per-key
+    island id ``__chunk`` (1, 2, ... in time order; a new island starts
+    after a sample interval ``> max_gap``), then one ``groupBy(keys,
+    __chunk)`` yields the island span ``__cs``/``__ce`` (numeric index),
+    ``n_samples`` and ``aggs``. Only ``ts_col``, ``carry`` and the keys
+    reach the islands pass. Returns the table and whether the index is
+    TIME."""
+    assert (fs is None) != (max_gap is None), "pass exactly one of fs / max_gap"
+    domain = determine_type(data, ts_col)
+    is_time = domain == DataType.TIME
+    if value_col is not None:
+        data = data.where(F.col(value_col).isNotNull())
+    if max_gap is not None:
+        gap_n = to_numeric_units(max_gap, is_time)
+    else:
+        gap_n = (1.5 / float(fs)) * (1_000_000 if is_time else 1)
+
+    d = numeric_index(data.select(ts_col, *carry, *key_cols), ts_col, domain)
+    d = with_global_islands(
+        d,
+        TSN,
+        TSN,
+        lambda prev: prev.isNull() | ((F.col(TSN) - prev) > F.lit(gap_n)),
+        "__chunk",
+        key_cols=key_cols,
+    )
+    chunks = d.groupBy(*key_cols, "__chunk").agg(
+        F.min(TSN).alias("__cs"),
+        F.max(TSN).alias("__ce"),
+        F.count(F.lit(1)).alias("n_samples"),
+        *aggs,
+    )
+    return chunks, is_time
+
+
+def _span(is_time: bool) -> List[Column]:
+    """``__cs``/``__ce`` → the ``chunk_start``/``chunk_end`` output columns."""
+    if is_time:
+        return [
+            F.timestamp_micros(F.col(c).cast("long")).alias(a)
+            for c, a in (("__cs", "chunk_start"), ("__ce", "chunk_end"))
+        ]
+    return [F.col("__cs").alias("chunk_start"), F.col("__ce").alias("chunk_end")]
 
 
 def chunk_data(
@@ -53,32 +110,7 @@ def chunk_data(
     where ``chunk_id`` numbers chunks per key in time order and the chunk
     range is the inclusive ``[first_ts, last_ts]`` span of its samples.
     """
-    assert (fs is None) != (max_gap is None), "pass exactly one of fs / max_gap"
-    domain = determine_type(data, ts_col)
-    is_time = domain == DataType.TIME
-    if value_col is not None:
-        data = data.where(F.col(value_col).isNotNull())
-
-    if max_gap is not None:
-        gap_n = to_numeric_units(max_gap, is_time)
-    else:
-        gap_n = (1.5 / float(fs)) * (1_000_000 if is_time else 1)
-
-    d = numeric_index(data.select(ts_col, *key_cols), ts_col, domain)
-    d = with_global_islands(
-        d,
-        TSN,
-        TSN,
-        lambda prev: prev.isNull() | ((F.col(TSN) - prev) > F.lit(gap_n)),
-        "__chunk",
-        key_cols=key_cols,
-    )
-
-    chunks = d.groupBy(*key_cols, "__chunk").agg(
-        F.min(TSN).alias("__cs"),
-        F.max(TSN).alias("__ce"),
-        F.count(F.lit(1)).alias("n_samples"),
-    )
+    chunks, is_time = _chunks(data, ts_col, value_col, key_cols, fs, max_gap)
 
     if min_chunk_dur is not None:
         min_n = to_numeric_units(min_chunk_dur, is_time)
@@ -114,18 +146,9 @@ def chunk_data(
             chunks, "__cs", "chunk_id", key_cols=key_cols, zero_based=True
         ).withColumn("chunk_id", F.col("chunk_id").cast("int"))
 
-    if is_time:
-        start = F.timestamp_micros(F.col("__cs").cast("long"))
-        end = F.timestamp_micros(F.col("__ce").cast("long"))
-    else:
-        start, end = F.col("__cs"), F.col("__ce")
-    return out.select(
-        *key_cols,
-        "chunk_id",
-        start.alias("chunk_start"),
-        end.alias("chunk_end"),
-        "n_samples",
-    ).orderBy(*key_cols, "chunk_id")
+    return out.select(*key_cols, "chunk_id", *_span(is_time), "n_samples").orderBy(
+        *key_cols, "chunk_id"
+    )
 
 
 def chunk_features(
@@ -151,55 +174,18 @@ def chunk_features(
     """
     from tsflex_spark.features.catalog import lookup_native
 
-    assert (fs is None) != (max_gap is None), "pass exactly one of fs / max_gap"
-    domain = determine_type(data, ts_col)
-    is_time = domain == DataType.TIME
-    gap_n = (
-        to_numeric_units(max_gap, is_time)
-        if max_gap is not None
-        else (1.5 / float(fs)) * (1_000_000 if is_time else 1)
-    )
     key_cols = list(key_cols)
-
-    d = numeric_index(
-        data.select(ts_col, value_col, *key_cols).where(F.col(value_col).isNotNull()),
-        ts_col,
-        domain,
-    )
-    d = with_global_islands(
-        d,
-        TSN,
-        TSN,
-        lambda prev: prev.isNull() | ((F.col(TSN) - prev) > F.lit(gap_n)),
-        "__chunk",
-        key_cols=key_cols,
-    )
+    feat_cols = [f"{value_col}__{name}__w=chunk" for name in aggs]
     exprs = []
-    for name in aggs:
+    for name, feat in zip(aggs, feat_cols):
         spec = lookup_native(name, {})
         assert spec is not None, f"{name!r} is not a native catalog function"
-        exprs.append(
-            spec.build(F.col(value_col), F.col(TSN), {}).alias(
-                f"{value_col}__{name}__w=chunk"
-            )
-        )
-    out = d.groupBy(*key_cols, "__chunk").agg(
-        F.min(TSN).alias("__cs"),
-        F.max(TSN).alias("__ce"),
-        F.count(F.lit(1)).alias("n_samples"),
-        *exprs,
-    )
-    if is_time:
-        start = F.timestamp_micros(F.col("__cs").cast("long"))
-        end = F.timestamp_micros(F.col("__ce").cast("long"))
-    else:
-        start, end = F.col("__cs"), F.col("__ce")
-    feat_cols = [f"{value_col}__{name}__w=chunk" for name in aggs]
+        exprs.append(spec.build(F.col(value_col), F.col(TSN), {}).alias(feat))
+    out, is_time = _chunks(data, ts_col, value_col, key_cols, fs, max_gap, [value_col], exprs)
     return out.select(
         *key_cols,
         (F.col("__chunk") - 1).cast("int").alias("chunk_id"),
-        start.alias("chunk_start"),
-        end.alias("chunk_end"),
+        *_span(is_time),
         "n_samples",
         *feat_cols,
     ).orderBy(*key_cols, "chunk_id")

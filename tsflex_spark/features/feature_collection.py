@@ -37,6 +37,7 @@ from tsflex_spark.features.feature import FeatureDescriptor, MultipleFeatureDesc
 from tsflex_spark.features import segmenter as seg
 from tsflex_spark.features import summary
 from tsflex_spark.features.segmenter import (
+    CFG,
     END,
     OUT_IDX,
     SEG,
@@ -112,15 +113,26 @@ def _materialize_bounds(bounds_plan: DataFrame, key_cols: Sequence[str]) -> Data
     return local_rows_df(bounds_plan.sparkSession, rows, bounds_plan.schema)
 
 
-# daemon threads waiting on in-flight sparsity observations (module-level:
-# FeatureCollection must stay cloudpickle-serializable, threads are not)
-_SPARSITY_WATCHERS: List = []
+# (daemon thread, "has the frame run" probe) per sparsity observation
+# (module-level: FeatureCollection must stay cloudpickle-serializable,
+# threads are not)
+_SPARSITY_WATCHERS: List[Tuple[Any, Callable[[], bool]]] = []
 
 
 def join_sparsity_watchers(timeout: float = 30.0) -> None:
-    """Wait for pending sparsity-warning watchers (deterministic tests)."""
-    while _SPARSITY_WATCHERS:
-        _SPARSITY_WATCHERS.pop().join(timeout=timeout)
+    """Wait for the sparsity warnings of every ``calculate()`` frame that
+    has run (deterministic tests). A frame that never ran has no warning
+    to wait for: its watcher stays pending, unjoined, and still warns if
+    the frame runs later."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is not None:  # observations complete from the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+    _SPARSITY_WATCHERS[:] = [w for w in _SPARSITY_WATCHERS if w[0].is_alive()]
+    for t, ran in list(_SPARSITY_WATCHERS):
+        if ran():
+            t.join(timeout=timeout)
 
 
 def _resolve_dtype(dt: Any) -> T.DataType:
@@ -813,8 +825,8 @@ class FeatureCollection:
         t.start()
         # reap finished watchers so a long-lived session doesn't accumulate
         # one thread object per executed calculate()
-        _SPARSITY_WATCHERS[:] = [w for w in _SPARSITY_WATCHERS if w.is_alive()]
-        _SPARSITY_WATCHERS.append(t)
+        _SPARSITY_WATCHERS[:] = [w for w in _SPARSITY_WATCHERS if w[0].is_alive()]
+        _SPARSITY_WATCHERS.append((t, lambda: obs._jo.future().isCompleted()))
         return out
 
     # ----------------------------------------------------------- internals
@@ -1032,19 +1044,7 @@ class FeatureCollection:
 
         def _fill_one(row: Dict[str, Any], pdf: pd.DataFrame, spec_idx: int) -> None:
             series_tuple, win_str, fw = out_specs[spec_idx]
-            if fw.input_type is pd.Series:
-                idx = pd.to_datetime(pdf[TSN], unit="us") if is_time else pdf[TSN]
-                series_vals = [
-                    pd.Series(pdf[s].to_numpy(), index=idx, name=s).dropna()
-                    for s in series_tuple
-                ]
-            else:
-                series_vals = [pdf[s].dropna() for s in series_tuple]
-            try:
-                outs = fw.apply(series_vals)
-            except Exception:
-                outs = [np.nan] * len(fw.output_names)
-            _store(row, spec_idx, fw, outs)
+            _store(row, spec_idx, fw, fw.apply_segment(series_tuple, pdf, pdf[TSN], is_time))
 
         vec_flags = [
             fw.vectorized and fw.input_type is np.ndarray
@@ -1152,9 +1152,11 @@ class FeatureCollection:
         result = self._segment_features(assigned, entries, group_cols, domain, spc)
 
         if include_empty_windows:
-            spine = seg.make_segment_spine(
-                bounds, window_n, strides_n, include_final_window, key_cols
-            )
+            spine = seg.segment_spine(
+                bounds, [(0, window_n, strides_n)], include_final_window, key_cols
+            ).drop(CFG)
+            if len(strides_n) > 1:  # coinciding starts count once
+                spine = spine.dropDuplicates(group_cols)
             out = spine.join(result, on=group_cols, how="left")
         else:
             # sparse-data scale path: skip the grid spine entirely — with a

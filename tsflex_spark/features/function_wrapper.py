@@ -10,7 +10,7 @@ entirely (see catalog.py).
 
 from __future__ import annotations
 
-from typing import Any, Callable, List, Optional, Union
+from typing import Any, Callable, List, Mapping, Optional, Sequence, Union
 
 import numpy as np
 import pandas as pd
@@ -131,6 +131,29 @@ class FuncWrapper:
             f"expected {n} ({self.output_names})"
         )
         return list(arr)
+
+    def apply_segment(
+        self,
+        series: Sequence[str],
+        columns: Mapping[str, Any],
+        index: Any,
+        time_index: bool,
+    ) -> List[Any]:
+        """One segment through :meth:`apply`, as every Python-function tier
+        (batch UDF tier, stateful streams) runs it: each input series is
+        the pandas Series ``columns[s]`` with nulls dropped — for
+        ``input_type=pd.Series`` indexed by ``index`` (unix microseconds
+        made a ``DatetimeIndex`` when ``time_index``). A function that
+        raises yields one NaN per output."""
+        if self.input_type is pd.Series:
+            idx = pd.to_datetime(index, unit="us") if time_index else index
+            vals = [pd.Series(columns[s].to_numpy(), index=idx, name=s).dropna() for s in series]
+        else:
+            vals = [columns[s].dropna() for s in series]
+        try:
+            return self.apply(vals)
+        except Exception:
+            return [np.nan] * len(self.output_names)
 
     def __repr__(self) -> str:
         return f"FuncWrapper({self.func_name}, {self.output_names}, {self.kwargs})"

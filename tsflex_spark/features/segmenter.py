@@ -24,13 +24,28 @@ positions, where every segment holds the row at its own start. Manual
 segment length), which AQE/Catalyst executes as a hash join, never a
 nested-loop.
 
+The rule is written once, as two functions every strided path calls:
+
+- ``member_sql`` — which segments contain a position: the one-level path
+  (``assign_segments``, positions ``TSN`` from each key's ``START``), the
+  bucket summary (``features/summary.py``, bucket indices in grain
+  units) and the stateful stream (``streaming/stateful.py``, unbounded
+  epoch-aligned grid);
+- ``segment_spine`` — every segment of a key's grid: the one-level
+  path's empty-window spine and the bucket summary's.
+
+``nb_sql`` (segments per stride) and ``out_sql`` (output index) are the
+count and output-index rules both share. Structural expressions are
+SQL strings parsed JVM-side: each ``Column`` operator built from Python
+costs py4j round trips.
+
 All index arithmetic is integer microseconds for TIME domain (exact), raw
 numerics for SEQUENCE.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence, Union
+from typing import Callable, List, Optional, Sequence, Tuple, Union
 
 import numpy as np
 import pandas as pd
@@ -45,6 +60,7 @@ SEG = "__seg_start"
 SEG_END = "__seg_end"
 SEG_ID = "__seg_id"
 OUT_IDX = "__out_idx"
+CFG = "__cfg"  # config id column of a multi-config spine or summary
 START = "__start"
 END = "__end"
 
@@ -103,6 +119,11 @@ def make_bounds(
     return out.where(F.col(START).isNotNull() & F.col(END).isNotNull())
 
 
+def _q(name: str) -> str:
+    """Backtick-quote an identifier for a SQL expression string."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def sql_lit(x: Num) -> str:
     """SQL literal keeping the Python numeric type (int -> BIGINT,
     float -> DOUBLE), so window arithmetic types match ``F.lit`` math."""
@@ -121,44 +142,71 @@ def nb_sql(window: str, stride: str, include_final: bool) -> str:
     return f"({nb0} + IF({START} + {nb0} * {stride} <= {END}, 1L, 0L))"
 
 
-def _nb_expr(window: Num, stride: Num, include_final: bool) -> Column:
-    return F.expr(nb_sql(sql_lit(window), sql_lit(stride), include_final))
+def member_sql(
+    pos: str,
+    window: str,
+    strides: Sequence[str],
+    item: Callable[[int], str],
+    nbs: Optional[Sequence[str]] = None,
+    origin: Optional[str] = None,
+) -> str:
+    """The membership rule: SQL array of ``item(i)`` — an expression over
+    the segment index ``__k`` of stride ``i`` — for every segment of
+    every stride that contains position ``pos``.
+
+    Segment ``k`` of stride ``s`` covers ``[origin + k*s, origin + k*s +
+    window)``, so ``pos`` lies in ``k ∈ [floor((pos - window - origin)/s)
+    + 1, floor((pos - origin)/s)]`` (fan-out ≤ ceil(window/s) per
+    stride). With ``nbs`` (stride ``i`` has ``nbs[i]`` segments, see
+    ``nb_sql``) the range is clamped to ``[0, nbs[i] - 1]``; without, the
+    grid is unbounded both ways (the stream's epoch-aligned grid). A
+    range that comes out empty gives an empty array, never a descending
+    sequence. Several strides: union of their items, deduplicated."""
+    shift = f" - {origin}" if origin else ""
+    arrays = []
+    for i, s in enumerate(strides):
+        lo = f"floor(({pos} - {window}{shift}) / {s}) + 1"
+        hi = f"floor(({pos}{shift}) / {s})"
+        if nbs is not None:
+            lo, hi = f"greatest({lo}, 0L)", f"least({hi}, {nbs[i]} - 1)"
+        arrays.append(f"IF({hi} >= {lo}, transform(sequence({lo}, {hi}), __k -> {item(i)}), array())")
+    return arrays[0] if len(arrays) == 1 else f"array_distinct(concat({', '.join(arrays)}))"
 
 
-def _explode_counter(df: DataFrame, nb_col: str, out_col: str) -> DataFrame:
-    """Explode ``k = 0..nb-1`` without materializing one giant array per row."""
-    df = df.where(F.col(nb_col) > 0)
-    n_blocks = F.floor((F.col(nb_col) - 1) / F.lit(_BLOCK))
-    df = df.withColumn("__blk", F.explode(F.sequence(F.lit(0).cast("long"), n_blocks)))
-    lo = F.col("__blk") * F.lit(_BLOCK)
-    hi = F.least(F.col(nb_col) - 1, (F.col("__blk") + 1) * F.lit(_BLOCK) - 1)
-    return df.withColumn(out_col, F.explode(F.sequence(lo, hi))).drop("__blk")
-
-
-def make_segment_spine(
+def segment_spine(
     bounds: DataFrame,
-    window: Num,
-    strides: Sequence[Num],
+    configs: Sequence[Tuple[int, Num, Sequence[Num]]],
     include_final_window: bool,
     key_cols: Sequence[str],
 ) -> DataFrame:
-    """Generate the segments DataFrame ``(keys..., SEG, SEG_END)``.
-
-    Fully distributed (explodes the per-key bounds rows); multi-stride
-    start-index union with dedup (reference strided_rolling.py:264-274).
-    """
-    spines = []
-    for i, s in enumerate(strides):
-        sp = bounds.withColumn("__nb", _nb_expr(window, s, include_final_window))
-        sp = _explode_counter(sp, "__nb", "__k")
-        sp = sp.select(*key_cols, (F.col(START) + F.col("__k") * F.lit(s)).alias(SEG))
-        spines.append(sp)
-    spine = spines[0]
-    for sp in spines[1:]:
-        spine = spine.unionByName(sp)
-    if len(spines) > 1:
-        spine = spine.dropDuplicates(list(key_cols) + [SEG])
-    return spine.withColumn(SEG_END, F.col(SEG) + F.lit(window))
+    """The spine rule: every segment of every ``(config id, window,
+    strides)`` config over each key's ``[START, END]``, as rows ``(keys...,
+    CFG, SEG, SEG_END)``. Fully distributed: the per-key bounds rows
+    explode in blocks of ``_BLOCK`` indices, so no row ever builds one
+    giant array. A multi-stride config's coinciding starts repeat."""
+    keys_q = [_q(k) for k in key_cols]
+    cs = ", ".join(
+        f"named_struct('__c', {c}, '__n', {nb_sql(sql_lit(w), sql_lit(s), include_final_window)}, "
+        f"'__s', {sql_lit(s)}, '__w', {sql_lit(w)})"
+        for c, w, ss in configs
+        for s in ss
+    )
+    return (
+        bounds.selectExpr(*keys_q, START, f"inline(array({cs}))")
+        .where("__n > 0")
+        .selectExpr(
+            *keys_q, START, "__c", "__n", "__s", "__w",
+            f"explode(sequence(0L, floor((__n - 1) / {_BLOCK}))) AS __blk",
+        )
+        .selectExpr(
+            *keys_q, START, "__c", "__s", "__w",
+            f"explode(sequence(__blk * {_BLOCK}, least(__n - 1, (__blk + 1) * {_BLOCK} - 1))) AS __k",
+        )
+        .selectExpr(
+            *keys_q, f"__c AS {CFG}",
+            f"{START} + __k * __s AS {SEG}", f"{START} + __k * __s + __w AS {SEG_END}",
+        )
+    )
 
 
 def assign_segments(
@@ -183,24 +231,12 @@ def assign_segments(
     # reference slices data to [start, end] inclusive before segmenting
     # (feature_collection.py:1230-1238; pandas .loc[start:end])
     joined = joined.where((F.col(TSN) >= F.col(START)) & (F.col(TSN) <= F.col(END)))
-
-    cand_arrays = []
-    for i, s in enumerate(strides):
-        nb = _nb_expr(window, s, include_final_window)
-        k_hi = F.least(F.floor((F.col(TSN) - F.col(START)) / F.lit(s)), nb - 1)
-        k_lo = F.greatest(
-            F.floor((F.col(TSN) - F.lit(window) - F.col(START)) / F.lit(s)) + 1,
-            F.lit(0).cast("long"),
-        )
-        # never build a descending sequence; emit a same-typed empty array instead
-        full = F.transform(
-            F.sequence(k_lo, F.greatest(k_lo, k_hi)), lambda k: F.col(START) + k * F.lit(s)
-        )
-        arr = F.when(k_hi >= k_lo, full).otherwise(F.slice(full, 1, 0))
-        cand_arrays.append(arr)
-    cands = cand_arrays[0] if len(cand_arrays) == 1 else F.array_distinct(F.concat(*cand_arrays))
-    out = joined.withColumn(SEG, F.explode(cands))
-    return out.drop(START, END)
+    ss = [sql_lit(s) for s in strides]
+    cands = member_sql(
+        TSN, sql_lit(window), ss, lambda i: f"{START} + __k * {ss[i]}",
+        nbs=[nb_sql(sql_lit(window), s, include_final_window) for s in ss], origin=START,
+    )
+    return joined.withColumn(SEG, F.explode(F.expr(cands))).drop(START, END)
 
 
 def manual_segment_spine(

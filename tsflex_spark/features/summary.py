@@ -28,11 +28,13 @@ breaks the guard at the shared grain gets its own table at
 ``gcd(w, *strides)``; one that breaks it even there (window 61 s, stride
 60 s: grain 1 s) keeps the one-level explode.
 
-Structural expressions (bucket index, segment ranges, spine) are built as
-SQL strings parsed JVM-side: each ``Column`` operator built from Python
-costs py4j round trips, and plan building is driver-bound at small
-scale. Only the catalog's partial/final aggregates are ``Column`` objects,
-each built once and shared by every member config.
+Which windows a bucket falls in, and every window of a key's grid, come
+from the segmenter's two rule functions (``segmenter.member_sql`` over bucket
+indices in grain units, ``segmenter.segment_spine``) — the same rule the
+one-level path and the stateful stream use. Structural expressions are
+SQL strings parsed JVM-side; only the catalog's partial/final aggregates
+are ``Column`` objects, each built once and shared by every member
+config.
 
 Derived doubles (mean/rms/std/...) may differ from the one-level plan in
 the last float ulp (double-sum reassociation, textbook moments); sums,
@@ -48,18 +50,22 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tsflex_spark.features.segmenter import (
+    CFG,
     END,
     OUT_IDX,
+    SEG,
+    SEG_END,
     START,
     TSN,
-    _BLOCK,
+    _q,
+    member_sql,
     nb_sql,
     out_sql,
+    segment_spine,
     sql_lit,
 )
 from tsflex_spark.utils.data import DataType
 
-CFG = "__cfg"  # member-config id column of the long-format summary
 BKT = "__bkt"  # bucket index column of the bucket table
 
 # (series_tuple, output column name, NativeSpec, kwargs, (partial kinds, final builder))
@@ -108,11 +114,6 @@ def plan_tables(cfgs: Sequence[Tuple[Any, Sequence[Any]]]) -> List[Tuple[int, Li
         if i not in shared:
             tables.append((gcd(*nums), [i]))
     return tables
-
-
-def _q(name: str) -> str:
-    """Backtick-quote an identifier for a SQL expression string."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _out(seg: str, w: str, window_idx: str, domain: DataType) -> str:
@@ -210,22 +211,13 @@ def build(
     # 2. explode every bucket into its (config, output index) pairs
     arrays = []
     for cfg_id, w, ss, _items in members:
-        W = _integral(w) // g
-        per_stride = []
-        for s in ss:
-            S = _integral(s) // g
-            nb = nb_sql(sql_lit(w), sql_lit(s), include_final_window)
-            hi = f"least(floor({BKT} / {S}), {nb} - 1)"
-            lo = f"greatest(floor(({BKT} - {W}) / {S}) + 1, 0L)"
-            o = _out(f"{START} + __k * {sql_lit(s)}", sql_lit(w), window_idx, domain)
-            per_stride.append(
-                f"transform(filter(sequence({lo}, greatest({lo}, {hi})), __k -> __k <= {hi}), "
-                f"__k -> named_struct('{CFG}', {cfg_id}, '{OUT_IDX}', {o}))"
-            )
-        arrays.append(
-            per_stride[0] if len(per_stride) == 1
-            else f"array_distinct(concat({', '.join(per_stride)}))"
-        )
+        S = [str(_integral(s) // g) for s in ss]
+        arrays.append(member_sql(
+            BKT, str(_integral(w) // g), S,
+            lambda i: f"named_struct('{CFG}', {cfg_id}, '{OUT_IDX}', "
+            f"{_out(f'{START} + __k * {sql_lit(ss[i])}', sql_lit(w), window_idx, domain)})",
+            nbs=[nb_sql(sql_lit(w), sql_lit(s), include_final_window) for s in ss],
+        ))
     arr = arrays[0] if len(arrays) == 1 else f"concat({', '.join(arrays)})"
     keys_q = [_q(k) for k in key_cols]
     rows = partials.selectExpr(*keys_q, *aliases.values(), f"inline({arr})")
@@ -234,29 +226,10 @@ def build(
         # per-key spine: every (config, window) with NULL partials; a
         # multi-stride config's coinciding starts repeat harmlessly (NULL
         # partials add nothing to any aggregate)
-        cs = ", ".join(
-            f"named_struct('__c', {cfg_id}, '__n', {nb_sql(sql_lit(w), sql_lit(s), include_final_window)}, "
-            f"'__s', {sql_lit(s)}, '__w', {sql_lit(w)})"
-            for cfg_id, w, ss, _items in members
-            for s in ss
-        )
-        spine = (
-            bounds.selectExpr(*keys_q, START, f"inline(array({cs}))")
-            .where("__n > 0")
-            .selectExpr(
-                *keys_q, START, "__c", "__n", "__s", "__w",
-                f"explode(sequence(0L, floor((__n - 1) / {_BLOCK}))) AS __blk",
-            )
-            .selectExpr(
-                *keys_q, START, "__c", "__s", "__w",
-                f"explode(sequence(__blk * {_BLOCK}, least(__n - 1, (__blk + 1) * {_BLOCK} - 1))) AS __k",
-            )
-            .selectExpr(
-                *keys_q,
-                f"__c AS {CFG}",
-                f"{_out(f'{START} + __k * __s', '__w', window_idx, domain)} AS {OUT_IDX}",
-            )
-        )
+        spine = segment_spine(
+            bounds, [(cfg_id, w, ss) for cfg_id, w, ss, _items in members],
+            include_final_window, key_cols,
+        ).selectExpr(*keys_q, CFG, f"{out_sql(SEG, SEG_END, window_idx, domain)} AS {OUT_IDX}")
         rows = rows.unionByName(spine, allowMissingColumns=True)
 
     # 3. one final aggregation for every member config

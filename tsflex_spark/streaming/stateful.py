@@ -23,6 +23,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def _store_doubles(row: dict, names: Sequence[str], outs: Sequence) -> None:
+    """A stream's feature outputs into ``row`` as doubles (NaN when a value
+    is not numeric)."""
+    for n, v in zip(names, outs):
+        try:
+            row[n] = float(v)
+        except (TypeError, ValueError):
+            row[n] = float("nan")
+
+
 def running_stats_stream(
     df: DataFrame,
     value_col: str = "value",
@@ -317,18 +327,18 @@ def windowed_features_stream(
 
     df = _ensure_event_time(df, ts_col)
     df = df.withWatermark(ts_col, watermark)
+    from tsflex_spark.features.segmenter import member_sql
     from tsflex_spark.utils.time_args import ts_micros
 
-    # window-start membership: every stride-multiple start with
-    # start <= ts < start + window. Tumbling (s == w) gives exactly one
-    # start; sliding gives ceil(w/s) — a stateless explode, so the
-    # per-(key, start) state machinery below is identical for both.
-    t = ts_micros(ts_col)
-    first = (F.floor((t - w_us) / s_us) + 1).cast("long")
-    last = F.floor(t / s_us).cast("long")
-    d = df.withColumn("__wsi", F.explode(F.sequence(first, last))).withColumn(
-        "__ws", (F.col("__wsi") * F.lit(s_us)).cast("long")
-    ).drop("__wsi")
+    # window-start membership on the unbounded epoch-aligned grid: every
+    # stride-multiple start with start <= ts < start + window. Tumbling
+    # (s == w) gives exactly one start; sliding gives ceil(w/s) — a
+    # stateless explode, so the per-(key, start) state machinery below is
+    # identical for both.
+    starts = member_sql("__t", f"{w_us}L", [f"{s_us}L"], lambda _i: f"__k * {s_us}L")
+    d = df.withColumn("__t", ts_micros(ts_col)).withColumn(
+        "__ws", F.explode(F.expr(starts))
+    ).drop("__t")
 
     n_series = len(series_cols)
 
@@ -348,23 +358,7 @@ def windowed_features_stream(
             row: dict = dict(zip(key_cols, key[:-1]))
             row[ts_col] = pd.Timestamp((ws_val + w_us) * 1000)
             for series_tuple, fw, names in specs:
-                if fw.input_type is pd.Series:
-                    idx = pd.to_datetime(pdf["__tsn"], unit="us")
-                    vals = [
-                        pd.Series(pdf[s].to_numpy(), index=idx, name=s).dropna()
-                        for s in series_tuple
-                    ]
-                else:
-                    vals = [pdf[s].dropna() for s in series_tuple]
-                try:
-                    outs = fw.apply(vals)
-                except Exception:
-                    outs = [np.nan] * len(names)
-                for n, v in zip(names, outs):
-                    try:
-                        row[n] = float(v)
-                    except (TypeError, ValueError):
-                        row[n] = np.nan
+                _store_doubles(row, names, fw.apply_segment(series_tuple, pdf, pdf["__tsn"], True))
             state.remove()
             yield pd.DataFrame([row])
             return
@@ -488,27 +482,9 @@ def session_features_stream_udf(
             row["session_start"] = pd.Timestamp(int(t[0]) * 1000)
             row["session_end"] = pd.Timestamp((int(t[-1]) + gap_us) * 1000)
             row["n_events"] = int(hi - lo)
+            cols = {s: pd.Series(v[lo:hi]) for s, v in zip(series_cols, val_arrs)}
             for series_tuple, fw, names in specs:
-                if fw.input_type is pd.Series:
-                    idx = pd.to_datetime(t, unit="us")
-                    vals = [
-                        pd.Series(val_arrs[series_cols.index(s)][lo:hi], index=idx, name=s).dropna()
-                        for s in series_tuple
-                    ]
-                else:
-                    vals = [
-                        pd.Series(val_arrs[series_cols.index(s)][lo:hi]).dropna()
-                        for s in series_tuple
-                    ]
-                try:
-                    outs = fw.apply(vals)
-                except Exception:
-                    outs = [np.nan] * len(names)
-                for n, v in zip(names, outs):
-                    try:
-                        row[n] = float(v)
-                    except (TypeError, ValueError):
-                        row[n] = np.nan
+                _store_doubles(row, names, fw.apply_segment(series_tuple, cols, t, True))
             rows.append(row)
         return rows
 

@@ -91,11 +91,14 @@ def _ranged(df: DataFrame, *order_cols: str) -> DataFrame:
     Freezing the pid into materialized blocks makes it consumer-stable
     by construction. Explicit count: user-specified counts are exempt
     from AQE repartition rewrites (see ``_n_range_parts``)."""
-    return (
-        df.repartitionByRange(_n_range_parts(df), *[F.col(c) for c in order_cols])
-        .withColumn(PID, F.spark_partition_id())
-        .transform(cut_lineage)
-    )
+    return cut_lineage(_range_split(df, *order_cols))
+
+
+def _range_split(df: DataFrame, *order_cols: str) -> DataFrame:
+    """:func:`_ranged` before its cut: a partition-local step that every
+    branch must read (EWMA's scan) goes between the two, so it runs once."""
+    d = df.repartitionByRange(_n_range_parts(df), *[F.col(c) for c in order_cols])
+    return d.withColumn(PID, F.spark_partition_id())
 
 
 def _prefix(
@@ -539,7 +542,7 @@ def with_global_ewma(
     assert 0.0 < alpha <= 1.0, "alpha must be in (0, 1]"
     order_cols = list(order_cols)
 
-    d = _ranged(df, *order_cols).sortWithinPartitions(*order_cols)
+    d = _range_split(df, *order_cols).sortWithinPartitions(*order_cols)
     from pyspark.sql import types as T
 
     # build a FRESH StructType — StructType.add mutates (and DataFrame
@@ -588,7 +591,9 @@ def with_global_ewma(
             pos += n
             yield pdf
 
-    local = d.mapInPandas(scan, schema)
+    # the scan runs before the range cut: the row branch, the edge table
+    # and the carry joins all read its materialized output
+    local = cut_lineage(d.mapInPandas(scan, schema))
 
     edges = local.groupBy(PID).agg(
         F.max_by("__N", "__pos").alias("__ne"),
