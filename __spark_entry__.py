@@ -3923,7 +3923,9 @@ def _store_rows(docs: DataFrame, store_dir: str) -> DataFrame:
     signatures, Spark's array→string cast, xxhash64 per band), so a
     wrong signature slot, band split or store-join bug adds or drops a
     survivor row. ``store_dir`` is emptied first, so repeat calls are
-    deterministic.
+    deterministic, and removed before returning: the probe checkpoints
+    its colliding-id set, so the survivors' plan no longer reads the
+    store.
 
     Bounded slice (doc_id < 1000, the oracle replays the same bound):
     the collision semantics are not scale-dependent, and the slice keeps
@@ -3948,6 +3950,7 @@ def _store_rows(docs: DataFrame, store_dir: str) -> DataFrame:
         num_hashes=64, num_bands=16, within_batch=False,
         update_store=False, signatures=sig64,
     )
+    shutil.rmtree(store_dir, ignore_errors=True)
     return _survivor_rows(sur, "store")
 
 
@@ -5056,7 +5059,8 @@ def _plant_warc_archives(spark: SparkSession, sf_dir: str, n_arcs: int = 8) -> s
     an engine pattern; on a real cluster the fixture would live on
     shared storage. Archives regenerate on every call (same file
     names, atomic replace), so stale fixtures cannot leak between SFs
-    or test-data versions.
+    or test-data versions. The directory stays after the gate returns:
+    its result reads the archives lazily, at every consumption.
     """
     sf_name = os.path.basename(sf_dir.rstrip("/")) or "sf"
     out_dir = os.path.join(tempfile.gettempdir(), "tsflex_warc_gate", sf_name)

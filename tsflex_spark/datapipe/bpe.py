@@ -113,14 +113,11 @@ def word_frequencies(
 ) -> DataFrame:
     """Distributed ``(word, count)`` table, top ``max_words`` by count
     (ties: lexicographic) — the only statistic BPE training needs."""
-    t = F.col(text_col)
-    if lowercase:
-        t = F.lower(t)
+    from tsflex_spark.datapipe.text import _tokens
     from tsflex_spark.utils.data import fan_out
 
-    words = fan_out(df).select(F.explode(F.split(F.trim(t), r"\s+")).alias("word")).where(
-        F.col("word") != ""
-    )
+    t = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
+    words = fan_out(df).select(F.explode(_tokens(t)).alias("word"))
     counts = words.groupBy("word").agg(F.count(F.lit(1)).alias("count"))
     # TakeOrderedAndProject: per-partition heap + driver merge, no global sort
     return counts.orderBy(F.col("count").desc(), F.col("word")).limit(max_words)

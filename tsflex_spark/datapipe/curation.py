@@ -201,7 +201,9 @@ def corpus_stats(
 ) -> DataFrame:
     """Per-source corpus report — the numbers a mixture plan
     (``mix_sources`` weights, token budgets) is written against:
-    document count, total/mean characters, total/mean whitespace tokens,
+    document count, total/mean characters, total/mean ``text._tokens``
+    tokens (the count ``text_stats`` reports; NULL text is left out of
+    the token sum and mean),
     and (when ``lang_col`` is given) distinct languages plus the share of
     the majority language.
 
@@ -211,8 +213,9 @@ def corpus_stats(
     source — so the big shuffle carries one row per (source, lang), not
     per document.
     """
-    toks = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
-    toks = F.when(F.length(F.trim(F.col(text_col))) == 0, F.lit(0)).otherwise(toks)
+    from tsflex_spark.datapipe.text import _tokens
+
+    toks = F.size(_tokens(F.col(text_col)))
     base = df.groupBy(source_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.length(text_col)).alias("total_chars"),

@@ -7,8 +7,9 @@ thousands of documents vs a corpus of billions), so its distinct n-gram
 hashes broadcast and the corpus side is ONE map-side hash join — the
 corpus text never shuffles. Per-doc totals ride a single groupBy on the
 (long) doc id with map-side partial aggregation. N-grams are built with
-explode + ``slice`` (whole-stage codegen; no interpreted higher-order
-lambdas — see ``dedup.shingle_rows`` for the measured 10x gap).
+``text._grams`` + ``slice`` (whole-stage codegen; no interpreted
+higher-order lambdas — see ``dedup.shingle_rows`` for the measured 10x
+gap).
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tsflex_spark.datapipe.text import _tokens
+from tsflex_spark.datapipe.text import _grams, _tokens, _word_gram
 from tsflex_spark.utils.data import fan_out
 
 __all__ = ["word_ngram_rows", "decontaminate", "drop_contaminated"]
@@ -35,24 +36,18 @@ def word_ngram_rows(
 ) -> DataFrame:
     """Distinct (id, xxhash64(word n-gram)) rows.
 
-    Tokens are whitespace-split (empties removed); a document shorter
-    than ``n`` tokens contributes its whole token sequence as one gram
-    (same clamp the char-shingle path uses). Hashing happens BEFORE the
-    distinct so the shuffle key is two longs, never the gram string.
+    Tokens are ``text._tokens``; a document shorter than ``n`` tokens
+    contributes its whole token sequence as one gram (the clamp the
+    char-shingle path uses), and one with no tokens contributes none.
+    Hashing happens BEFORE the distinct so the shuffle key is two longs,
+    never the gram string.
     """
     txt = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
     d = fan_out(df).select(F.col(id_col), _tokens(txt).alias("__t"))
-    d = d.select(
-        F.col(id_col),
-        F.col("__t"),
-        F.explode_outer(
-            F.sequence(F.lit(1), F.greatest(F.size("__t") - F.lit(n - 1), F.lit(1)))
-        ).alias("__i"),
+    d = _grams(d, [F.col(id_col)], "__t", n, whole=True)
+    d = d.select(F.col(id_col), _word_gram("__t", n).alias("__str")).where(
+        F.col("__str") != ""
     )
-    d = d.select(
-        F.col(id_col),
-        F.concat_ws(" ", F.slice(F.col("__t"), F.col("__i"), n)).alias("__str"),
-    ).where(F.col("__str") != "")
     return (
         d.select(F.col(id_col), F.xxhash64(F.col("__str")).alias(out_col))
         .dropDuplicates([id_col, out_col])

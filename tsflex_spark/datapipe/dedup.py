@@ -198,6 +198,31 @@ def _oph_signature(k: int) -> Column:
     return F.expr(f"array({terms})")
 
 
+def band_rows(
+    signatures: DataFrame, id_col: str, num_bands: int = 16
+) -> DataFrame:
+    """(id, band, band_hash) — one row per LSH band of each signature:
+    band b is ``xxhash64`` of the string cast of signature slots
+    ``[b·r, (b+1)·r)``, r = ``size(minhash) / num_bands`` truncated.
+    The bands are exploded first and hashed as a projection (codegen, no
+    lambda). ``minhash_lsh_candidates`` self-joins these rows and
+    ``dedup_against_store`` persists them, so the hash must stay
+    bit-identical across versions."""
+    r = (F.size("minhash") / num_bands).cast("int")
+    d = signatures.select(
+        F.col(id_col),
+        F.col("minhash"),
+        F.explode(F.sequence(F.lit(0), F.lit(num_bands - 1))).alias("band"),
+    )
+    return d.select(
+        F.col(id_col),
+        F.col("band"),
+        F.xxhash64(F.slice("minhash", F.col("band") * r + 1, r).cast("string")).alias(
+            "band_hash"
+        ),
+    )
+
+
 def minhash_lsh_candidates(
     signatures: DataFrame,
     id_col: str,
@@ -205,24 +230,10 @@ def minhash_lsh_candidates(
 ) -> DataFrame:
     """LSH banding: equal band-hash ⇒ candidate pair (id_a < id_b).
 
-    Scale path: explode to (band, band_hash) — an equi-join self-join keyed
-    on the band bucket; only colliding docs ever meet.
+    Scale path: ``band_rows`` (id, band, band_hash) self-joined on the
+    band bucket; only colliding docs ever meet.
     """
-    bands = signatures.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(num_bands - 1)),
-                lambda b: F.xxhash64(
-                    F.slice(
-                        F.col("minhash"),
-                        b * (F.size(F.col("minhash")) / num_bands).cast("int") + 1,
-                        (F.size(F.col("minhash")) / num_bands).cast("int"),
-                    ).cast("string")
-                ),
-            )
-        ).alias("band", "band_hash"),
-    )
+    bands = band_rows(signatures, id_col, num_bands)
     a = bands.select(F.col(id_col).alias("id_a"), "band", "band_hash")
     b = bands.select(F.col(id_col).alias("id_b"), "band", "band_hash")
     pairs = a.join(b, on=["band", "band_hash"]).where(F.col("id_a") < F.col("id_b"))
@@ -1098,11 +1109,12 @@ def span_gram_rows(
     ``localCheckpoint()`` (not ``persist`` — see ``bigram_rows``), and
     pass it to both via ``positions=`` — halving the dominant corpus
     scan.
-    ``n`` must match the consumers' ``n``. ``tokens`` (an
-    ``(id, __t array<string>)`` frame of lowercased whitespace tokens)
-    skips the tokenize — pass it when another corpus pass (e.g.
+    ``n`` must match the consumers' ``n``; docs shorter than ``n``
+    tokens contribute no rows. ``tokens`` (an ``(id, __t
+    array<string>)`` frame of lowercased ``text._tokens``) skips the
+    tokenize — pass it when another corpus pass (e.g.
     ``text.top_ngrams``) already tokenized."""
-    from tsflex_spark.datapipe.text import _tokens
+    from tsflex_spark.datapipe.text import _grams, _tokens, _word_gram
     from tsflex_spark.utils.data import fan_out
 
     if tokens is not None:
@@ -1111,25 +1123,11 @@ def span_gram_rows(
         d = fan_out(df).select(
             F.col(id_col), _tokens(F.lower(F.col(text_col))).alias("__t")
         )
-    d = d.select(
-        F.col(id_col),
-        F.col("__t"),
-        # guard: sequence(1, 0) would generate a DESCENDING [1, 0]; docs
-        # shorter than n tokens must contribute no grams (explode drops
-        # the null)
-        F.explode(
-            F.when(
-                F.size("__t") >= n,
-                F.sequence(F.lit(1), F.size("__t") - F.lit(n - 1)),
-            )
-        ).alias("__i"),
-    )
+    d = _grams(d, [F.col(id_col)], "__t", n, whole=False)
     return d.select(
         F.col(id_col),
         (F.col("__i") - 1).alias("__pos"),  # 0-based token index
-        F.xxhash64(
-            F.concat_ws(" ", F.slice(F.col("__t"), F.col("__i"), n))
-        ).alias("__gh"),
+        F.xxhash64(_word_gram("__t", n)).alias("__gh"),
     )
 
 
@@ -1299,29 +1297,6 @@ def dedup_exact_stream(
         df.withColumn("__h", F.xxhash64(*[F.col(c) for c in cols]))
         .dropDuplicatesWithinWatermark(["__h"])
         .drop("__h")
-    )
-
-
-def band_rows(
-    signatures: DataFrame, id_col: str, num_bands: int = 16
-) -> DataFrame:
-    """(id, band, band_hash) — one row per LSH band of each signature.
-    The same banding expression ``minhash_lsh_candidates`` joins on,
-    exposed for store-backed (incremental) dedup."""
-    return signatures.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(num_bands - 1)),
-                lambda b: F.xxhash64(
-                    F.slice(
-                        F.col("minhash"),
-                        b * (F.size(F.col("minhash")) / num_bands).cast("int") + 1,
-                        (F.size(F.col("minhash")) / num_bands).cast("int"),
-                    ).cast("string")
-                ),
-            )
-        ).alias("band", "band_hash"),
     )
 
 

@@ -32,20 +32,15 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tsflex_spark.datapipe.text import _tokens
+from tsflex_spark.datapipe.text import _grams, _tokens, _word_gram
 
 
 def _hashed_buckets(df: DataFrame, text_col: str, id_col: str, num_buckets: int) -> DataFrame:
-    """(id, bucket, c): hashed unigram+bigram counts per document."""
-    toks = F.transform(_tokens(F.col(text_col)), F.lower)
-    n = F.size(toks)
-    uni = toks
-    big = F.zip_with(
-        F.slice(toks, 1, F.greatest(n - 1, F.lit(0))),
-        F.slice(toks, 2, F.greatest(n - 1, F.lit(0))),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
-    grams = F.concat(uni, big)
+    """(id, bucket, c): hashed unigram+bigram counts per document.
+
+    Every unigram start (``text._grams``, n = 1) is also a bigram start
+    except the last, so each start emits its unigram and, when one
+    starts there, its bigram."""
     # KEYED fan-out before the compute-amplifying explode (r10 used
     # round-robin fan_out for the same input-skew reason — guide §2.5;
     # r11 keys it by id): HashPartitioning(id) below the explode
@@ -55,9 +50,14 @@ def _hashed_buckets(df: DataFrame, text_col: str, id_col: str, num_buckets: int)
     # the shingle_rows pattern).
     from tsflex_spark.utils.data import keyed_fan_out
 
-    g = keyed_fan_out(df, id_col).select(
-        F.col(id_col), F.explode(grams).alias("gram")
+    d = keyed_fan_out(df, id_col).select(
+        F.col(id_col), _tokens(F.lower(F.col(text_col))).alias("__t")
     )
+    d = _grams(d, [F.col(id_col)], "__t", 1, whole=False)
+    big = F.when(F.col("__i") < F.size("__t"), _word_gram("__t", 2))
+    g = d.select(
+        F.col(id_col), F.explode(F.array(F.element_at("__t", F.col("__i")), big)).alias("gram")
+    ).where(F.col("gram").isNotNull())
     return (
         g.select(id_col, F.pmod(F.xxhash64("gram"), F.lit(num_buckets)).alias("bucket"))
         .groupBy(id_col, "bucket")

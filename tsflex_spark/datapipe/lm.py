@@ -45,12 +45,29 @@ from pyspark.sql import functions as F
 
 from tsflex_spark.utils.data import cut_lineage
 
-from tsflex_spark.datapipe.text import _tokens
+from tsflex_spark.datapipe.text import _grams, _tokens
+
+
+def _word_rows(df: DataFrame, text_col: str, id_col: str, names: Sequence[str]) -> DataFrame:
+    """(id, *names) — one row per ``len(names)``-gram occurrence of the
+    lowercased ``_tokens``, one ``element_at`` column per word (codegen,
+    no window). Docs shorter than the order contribute nothing (no
+    padding, no BOS)."""
+    from tsflex_spark.utils.data import fan_out
+
+    # fan_out before the explode: a single-file parquet scan is ONE
+    # partition, so the corpus tokenize+explode otherwise runs on one
+    # core (guide §2.5 input skew)
+    d = fan_out(df).select(F.col(id_col), _tokens(F.lower(F.col(text_col))).alias("__t"))
+    d = _grams(d, [F.col(id_col)], "__t", len(names), whole=False)
+    return d.select(
+        id_col,
+        *[F.element_at("__t", F.col("__i") + j).alias(w) for j, w in enumerate(names)],
+    )
 
 
 def bigram_rows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, w1, w2) — one row per bigram occurrence; lowercase whitespace
-    tokens, built in-row with slice + arrays_zip (codegen, no window).
+    """(id, w1, w2) — one row per bigram occurrence (``_word_rows``).
 
     Public so a caller that both TRAINS and SCORES on the same corpus
     (self-perplexity) can compute the explode once, cut its lineage with
@@ -59,20 +76,7 @@ def bigram_rows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     measured as multi-minute analysis stalls on deep chains), and pass
     it to ``train_ngram_lm(bigrams=...)`` and
     ``score_perplexity(bigrams=...)`` — halving the corpus explode."""
-    toks = F.transform(_tokens(F.col(text_col)), F.lower)
-    n = F.size(toks)
-    z = F.arrays_zip(
-        F.slice(toks, 1, F.greatest(n - 1, F.lit(0))).alias("w1"),
-        F.slice(toks, 2, F.greatest(n - 1, F.lit(0))).alias("w2"),
-    )
-    from tsflex_spark.utils.data import fan_out
-
-    # fan_out before the explode: a single-file parquet scan is ONE
-    # partition, so the corpus tokenize+explode otherwise runs on one
-    # core (guide §2.5 input skew)
-    return fan_out(df).select(F.col(id_col), F.explode(z).alias("__b")).select(
-        id_col, F.col("__b.w1").alias("w1"), F.col("__b.w2").alias("w2")
-    )
+    return _word_rows(df, text_col, id_col, ["w1", "w2"])
 
 
 _bigrams = bigram_rows
@@ -135,9 +139,7 @@ def train_ngram_lm(
     pairs = pairs_all.filter(F.col("c") >= int(min_count)) if min_count > 1 else pairs_all
     from tsflex_spark.utils.data import fan_out
 
-    toks = fan_out(docs).select(
-        F.explode(F.transform(_tokens(F.col(text_col)), F.lower)).alias("w")
-    )
+    toks = fan_out(docs).select(F.explode(_tokens(F.lower(F.col(text_col)))).alias("w"))
     vocab = toks.agg(F.count_distinct("w").alias("v"))
     return NGramLM(pairs=pairs, contexts=contexts, vocab=vocab)
 
@@ -251,8 +253,8 @@ def score_perplexity_local(
 
     pairs, contexts, v = model.pairs, model.contexts, model.v
     out_schema = f"{id_col} long, n_bigrams long, sum_logp_e6 long, ppl double"
-    # ASCII \s+ == Java's default \s — exact tokenizer parity with the
-    # Catalyst path (str.split() would also split unicode whitespace)
+    # ASCII \s+ == Java's default \s — exact tokenizer parity with
+    # text._tokens (str.split() would also split unicode whitespace)
     ws_re = re.compile(r"\s+", re.ASCII)
 
     def _score(batches):
@@ -367,22 +369,9 @@ def ppl_buckets(
 def ngram_rows(
     df: DataFrame, text_col: str, id_col: str, order: int
 ) -> DataFrame:
-    """(id, g1..g<order>) — one row per ``order``-gram occurrence;
-    lowercase whitespace tokens, in-row slice + arrays_zip (codegen).
-    Docs shorter than ``order`` tokens contribute nothing (no padding —
-    same no-BOS convention as ``bigram_rows``)."""
-    toks = F.transform(_tokens(F.col(text_col)), F.lower)
-    n = F.size(toks)
-    width = F.greatest(n - F.lit(order - 1), F.lit(0))
-    z = F.arrays_zip(
-        *[F.slice(toks, i + 1, width).alias(f"g{i + 1}") for i in range(order)]
-    )
-    from tsflex_spark.utils.data import fan_out
-
-    out = fan_out(df).select(F.col(id_col), F.explode(z).alias("__g"))
-    return out.select(
-        id_col, *[F.col(f"__g.g{i + 1}").alias(f"g{i + 1}") for i in range(order)]
-    )
+    """(id, g1..g<order>) — one row per ``order``-gram occurrence
+    (``_word_rows``; same no-BOS convention as ``bigram_rows``)."""
+    return _word_rows(df, text_col, id_col, [f"g{i + 1}" for i in range(order)])
 
 
 @dataclass
@@ -509,9 +498,7 @@ def train_kn_lm(
         # approximation (KenLM pads with </s>; we document instead).
     from tsflex_spark.utils.data import fan_out
 
-    toks = fan_out(docs).select(
-        F.explode(F.transform(_tokens(F.col(text_col)), F.lower)).alias("w")
-    )
+    toks = fan_out(docs).select(F.explode(_tokens(F.lower(F.col(text_col)))).alias("w"))
     vrow = toks.agg((F.count_distinct("w") + F.lit(1)).alias("v"))  # +1 unk
     uni = tables[1]
     urow = uni.agg(F.sum("cc").alias("tot1"), F.count(F.lit(1)).alias("n1p1"))

@@ -22,8 +22,41 @@ _STOPWORDS = [
 
 
 def _tokens(col: Column) -> Column:
-    """Whitespace tokens with empties removed (split-on-\\s+ semantics)."""
-    return F.filter(F.split(col, r"\s+"), lambda x: x != F.lit(""))
+    """The engine's word tokens: ``col`` split on runs of Java's ``\\s``
+    (ASCII ``[ \\t\\n\\x0b\\f\\r]``), empties removed. NULL stays NULL;
+    empty and whitespace-only text give ``[]``. Lowercase callers pass
+    ``lower(text)`` in: lowering never creates or removes whitespace, so
+    that equals lowering each token. ``array_remove`` keeps the tokenizer
+    in codegen, where a ``filter`` lambda is interpreted per element.
+    Its Python twin is the ``re.ASCII`` split in
+    ``lm.score_perplexity_local``; the two must agree token for token."""
+    return F.array_remove(F.split(col, r"\s+"), "")
+
+
+def _grams(d: DataFrame, keep: Sequence, seq: str, n: int, *, whole: bool) -> DataFrame:
+    """``d`` exploded to one row per n-gram start ``__i`` (1-based) of
+    the array column ``seq`` — a strided window n, stride 1: starts
+    ``1 .. size - n + 1``. Returns ``(*keep, seq, __i)``; each caller
+    projects its own gram (``slice(seq, __i, n)`` joined or hashed, or
+    ``element_at`` per word), so the explode comes FIRST and everything
+    stays in whole-stage codegen (a ``transform`` lambda is interpreted
+    per element).
+
+    ``whole`` is what a sequence shorter than n gives: one whole-sequence
+    gram at ``__i = 1`` (NULL included, since ``greatest`` skips a NULL
+    size), or no gram. The guard matters because ``sequence(1, 0)``
+    steps BACKWARDS (``[1, 0]``)."""
+    last = F.size(seq) - F.lit(n - 1)
+    if whole:
+        starts = F.sequence(F.lit(1), F.greatest(last, F.lit(1)))
+    else:
+        starts = F.when(last >= 1, F.sequence(F.lit(1), last))
+    return d.select(*keep, F.col(seq), F.explode(starts).alias("__i"))
+
+
+def _word_gram(seq: str, n: int) -> Column:
+    """The space-joined word n-gram at ``__i`` of a ``_grams`` frame."""
+    return F.concat_ws(" ", F.slice(F.col(seq), F.col("__i"), n))
 
 
 def _char_grams(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
@@ -32,9 +65,8 @@ def _char_grams(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
     NULL gram, and text of at most k characters yields one gram, the
     whole text (``""`` included).
 
-    PERF: positions are exploded FIRST and the gram is a plain
-    projection, so everything stays in whole-stage codegen (a
-    ``transform`` lambda is interpreted per element). A string
+    PERF: the start positions come from ``_grams`` (``whole=True``) and
+    the gram is a plain projection. A string
     ``substr(s, i, k)`` walks the UTF-8 bytes from the start to find
     character i: O(position) per gram, O(n²) per document. Instead the
     text is split into its characters once per document and each gram
@@ -48,13 +80,7 @@ def _char_grams(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
     """
     norm = F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
     d = df.select(F.col(id_col), F.split(norm, "").alias("__chars"))
-    # size(NULL) is NULL (or -1), so NULL text still yields one position
-    npos = F.greatest(F.size("__chars") - F.lit(k - 1), F.lit(1))
-    d = d.select(
-        F.col(id_col),
-        F.col("__chars"),
-        F.explode(F.sequence(F.lit(1), npos)).alias("__i"),
-    )
+    d = _grams(d, [F.col(id_col)], "__chars", k, whole=True)
     gram = F.array_join(F.slice("__chars", F.col("__i"), F.lit(k)), "")
     return d.select(F.col(id_col), gram.alias("__g"))
 
@@ -75,8 +101,10 @@ def quality_score(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     the standard pre-training-corpus filters, entirely in codegen'd exprs."""
     df = fan_out(df)
     # hoist the token array into a projected column — inline references
-    # would re-run the regex split once per consuming expression (6×)
-    df = df.withColumn("__toks", _tokens(F.col(text_col)))
+    # would re-run the regex split once per consuming expression. The
+    # tokens of the lowered text are the lowered tokens, so one split
+    # serves the count and the stopword test
+    df = df.withColumn("__toks", _tokens(F.lower(F.col(text_col))))
     toks = F.col("__toks")
     n_chars = F.length(text_col).cast("double")
     n_tokens = F.size(toks).cast("double")
@@ -85,11 +113,10 @@ def quality_score(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     n_punct = (n_chars - F.length(F.regexp_replace(F.col(text_col), r"[\.,;:!\?'\"]", ""))).cast("double")
     n_digit = (n_chars - F.length(F.regexp_replace(F.col(text_col), r"[0-9]", ""))).cast("double")
     n_upper = (n_chars - F.length(F.regexp_replace(F.col(text_col), r"[A-Z]", ""))).cast("double")
-    lower_toks = F.transform(toks, F.lower)
-    n_stop = F.size(F.array_intersect(lower_toks, F.array(*[F.lit(s) for s in _STOPWORDS]))).cast("double")
-    mean_word_len = (
-        F.aggregate(toks, F.lit(0).cast("double"), lambda acc, t: acc + F.length(t)) / safe_toks
-    )
+    n_stop = F.size(F.array_intersect(toks, F.array(*[F.lit(s) for s in _STOPWORDS]))).cast("double")
+    # the tokens' characters are the text's non-whitespace characters
+    # (counted on the original text: lowering can change a length)
+    mean_word_len = F.length(F.regexp_replace(F.col(text_col), r"\s+", "")) / safe_toks
     punct_ratio = n_punct / safe_chars
     digit_ratio = n_digit / safe_chars
     upper_ratio = n_upper / safe_chars
@@ -194,7 +221,7 @@ def language_id(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Heuristic language ID: argmax of per-language stopword hit counts;
     'und' (undetermined) when no marker hits."""
     df = fan_out(df)
-    df = df.withColumn("__lt", F.transform(_tokens(F.col(text_col)), F.lower))
+    df = df.withColumn("__lt", _tokens(F.lower(F.col(text_col))))
     lower_toks = F.col("__lt")
     scores = []
     for lang, markers in _LANG_MARKERS.items():
@@ -993,9 +1020,11 @@ def gopher_rules(
         F.size(F.filter(toks, lambda x: x.rlike(r"[A-Za-z]"))).cast("double")
         / safe_words
     )
-    lower_toks = F.transform(toks, F.lower)
     n_required = F.size(
-        F.array_intersect(lower_toks, F.array(*[F.lit(w) for w in _GOPHER_REQUIRED_WORDS]))
+        F.array_intersect(
+            _tokens(F.lower(F.col(text_col))),
+            F.array(*[F.lit(w) for w in _GOPHER_REQUIRED_WORDS]),
+        )
     )
     rules = {
         "r_word_count": (n_words >= min_words) & (n_words <= max_words),
@@ -1047,8 +1076,9 @@ def top_ngrams(
     can't dominate). ``min_count`` prunes the long singleton tail
     before the heap.
 
-    Reuses ``decontam.word_ngram_rows``'s explode/slice construction
-    (codegen `slice` + `concat_ws`, no interpreted HOF lambdas).
+    Grams come from ``_grams`` (docs shorter than ``n`` contribute
+    nothing) and are ``slice`` + ``concat_ws`` projections — codegen,
+    no interpreted HOF lambdas.
 
     ``tokens`` — a pre-tokenized ``([id,] __t array<string>)`` frame
     (same contract as ``dedup.span_gram_rows``): skips the tokenize so
@@ -1066,24 +1096,8 @@ def top_ngrams(
     else:
         txt = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
         d = fan_out(df).select(*cols, _tokens(txt).alias("__t"))
-    # explode to a column FIRST: a generator nested inside another
-    # expression is UNSUPPORTED_GENERATOR.NESTED_IN_EXPRESSIONS
-    d = d.select(
-        *cols,
-        F.col("__t"),
-        # docs shorter than n contribute nothing; the explicit empty
-        # branch matters because sequence(1, 0) steps BACKWARDS ([1, 0])
-        F.explode(
-            F.when(
-                F.size("__t") >= F.lit(n),
-                F.sequence(F.lit(1), F.size("__t") - F.lit(n - 1)),
-            ).otherwise(F.array().cast("array<int>"))
-        ).alias("__i"),
-    )
-    d = d.select(
-        *cols,
-        F.concat_ws(" ", F.slice(F.col("__t"), F.col("__i"), n)).alias("__g"),
-    ).where(F.col("__g") != "")
+    d = _grams(d, cols, "__t", n, whole=False)
+    d = d.select(*cols, _word_gram("__t", n).alias("__g")).where(F.col("__g") != "")
     aggs = [F.count(F.lit(1)).alias("count"), F.min("__g").alias("__str")]
     if id_col is not None:
         aggs.append(F.approx_count_distinct(id_col).alias("n_docs"))

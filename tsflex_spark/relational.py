@@ -19,9 +19,17 @@ from collections.abc import Mapping as _AbcMapping
 from typing import Mapping, Optional, Sequence, Union
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegralType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from tsflex_spark.utils.time_args import to_numeric_units, ts_micros
 
@@ -119,6 +127,35 @@ def asof_join(
     return out.drop(*drop)
 
 
+def _num(df: DataFrame, c: str) -> Column:
+    """``c`` on the number line the range joins bucket and compare on:
+    timestamps in integer microseconds, fractional columns (float,
+    double, decimal) as their own values, anything else as ``long``."""
+    dt = df.schema[c].dataType
+    if isinstance(dt, (TimestampType, TimestampNTZType)):
+        return ts_micros(c)
+    if isinstance(dt, (FloatType, DoubleType, DecimalType)):
+        return F.col(c)
+    return F.col(c).cast("long")
+
+
+def _bucket(c: Column, g: int) -> Column:
+    """Granule bucket ``floor(c / g)`` of a ``_num`` column."""
+    return F.floor(c.cast("double") / g)
+
+
+def _buckets(df: DataFrame, s: str, e: str, g: int) -> Column:
+    """The granule buckets a half-open ``[s, e)`` of ``_num`` columns
+    covers. An integral end stops at ``floor((e - 1) / g)``; a fractional
+    one at ``floor(e / g)``, one bucket too many only when ``e / g`` is
+    whole (the exact predicate drops what it adds)."""
+    if isinstance(df.schema[e].dataType, IntegralType):
+        last = F.floor((F.col(e) - 1) / g)
+    else:
+        last = _bucket(F.col(e), g)
+    return F.sequence(_bucket(F.col(s), g), last)
+
+
 def range_join(
     left: DataFrame,
     right: DataFrame,
@@ -147,15 +184,10 @@ def range_join(
 
     ``how='inner'`` keeps matched rows; ``'left'`` keeps unmatched left
     rows with NULL interval columns. Timestamp/NTZ columns are compared
-    in integer microseconds.
+    in integer microseconds, fractional columns by their own values.
     """
     assert how in ("inner", "left"), how
     by = list(by)
-
-    def _num(df: DataFrame, c: str):
-        dt = df.schema[c].dataType.simpleString()
-        return ts_micros(c) if dt.startswith("timestamp") else F.col(c).cast("long")
-
     l_n = left.withColumn("__t", _num(left, left_on))
     r_n = right.withColumn("__s", _num(right, right_start)).withColumn(
         "__e", _num(right, right_end)
@@ -164,12 +196,9 @@ def range_join(
         row = r_n.agg(F.max(F.col("__e") - F.col("__s")).alias("m")).first()
         granule = max(int(row["m"] or 1), 1)
     g = int(granule)
-    buckets = F.sequence(
-        F.floor(F.col("__s") / g), F.floor((F.col("__e") - 1) / g)
-    )
     r_n = r_n.where(F.col("__e") > F.col("__s"))  # empty intervals match nothing
-    r_b = r_n.withColumn("__b", F.explode(buckets))
-    l_b = l_n.withColumn("__b", F.floor(F.col("__t") / g))
+    r_b = r_n.withColumn("__b", F.explode(_buckets(r_n, "__s", "__e", g)))
+    l_b = l_n.withColumn("__b", _bucket(F.col("__t"), g))
     cond = [l_b["__b"] == r_b["__b"]] + [l_b[c] == r_b[c] for c in by]
     matched = (
         l_b.join(r_b, cond, "inner")
@@ -216,14 +245,10 @@ def interval_join(
     length across both sides (one tiny aggregate each).
 
     Right-side columns that collide with left names (outside ``by``)
-    get ``right_suffix``. Timestamps compare in integer microseconds.
+    get ``right_suffix``. Timestamps compare in integer microseconds,
+    fractional columns by their own values.
     """
     by = list(by)
-
-    def _num(df: DataFrame, c: str):
-        dt = df.schema[c].dataType.simpleString()
-        return ts_micros(c) if dt.startswith("timestamp") else F.col(c).cast("long")
-
     l_n = (
         left.withColumn("__ls", _num(left, left_start))
         .withColumn("__le", _num(left, left_end))
@@ -246,16 +271,10 @@ def interval_join(
         gr = r_n.agg(F.max(F.col("__re") - F.col("__rs")).alias("m")).first()["m"]
         granule = max(int(gl or 1), int(gr or 1), 1)
     g = int(granule)
-    l_b = l_n.withColumn(
-        "__b", F.explode(F.sequence(F.floor(F.col("__ls") / g), F.floor((F.col("__le") - 1) / g)))
-    )
-    r_b = r_n.withColumn(
-        "__b", F.explode(F.sequence(F.floor(F.col("__rs") / g), F.floor((F.col("__re") - 1) / g)))
-    )
+    l_b = l_n.withColumn("__b", F.explode(_buckets(l_n, "__ls", "__le", g)))
+    r_b = r_n.withColumn("__b", F.explode(_buckets(r_n, "__rs", "__re", g)))
     cond = [l_b["__b"] == r_b["__b"]] + [l_b[c] == r_b[c] for c in by]
-    first_shared = F.greatest(
-        F.floor(l_b["__ls"] / g), F.floor(r_b["__rs"] / g)
-    )
+    first_shared = F.greatest(_bucket(l_b["__ls"], g), _bucket(r_b["__rs"], g))
     out = (
         l_b.join(r_b, cond, "inner")
         .where(
