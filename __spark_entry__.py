@@ -5754,9 +5754,13 @@ def q_sliding_fine_stride(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fine-stride sliding windows (4h window / 10m stride, fan-out 24):
     exercises the two-level pre-aggregation rewrite — rows bucket at the
     gcd grain (one un-duplicated shuffle), buckets roll into segments.
-    Decimal sums keep the rewrite bit-exact vs the oracle, INCLUDING the
-    moment (std) and two-series (corr) decompositions: partial exact sums
-    per bucket, final double formula identical on both engines."""
+    Decimal sums keep sum/count/min/max and the two-series (corr)
+    decomposition bit-exact vs the oracle: partial exact sums per bucket,
+    final double formula identical on both engines. std's variance
+    numerator n·Σv² − (Σv)² is exact decimal arithmetic on both sides
+    (the summary forms it from sums shifted by the first sample, which
+    leaves an exact value unchanged) and is cast to double once, so a
+    one-sample window reads exactly 0 on both."""
     _utc(spark)
     va = F.col("value").cast("decimal(12,2)")
     vb = (va + F.col("user_id").cast("decimal(10,0)")).cast("decimal(14,2)")
@@ -5808,9 +5812,7 @@ agg AS (SELECT s_start,
                count(e.value) AS cnt,
                min(e.value) AS mn, max(e.value) AS mx,
                CAST(count(e.value) AS DOUBLE) AS n,
-               CAST(sum(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS sv,
-               CAST(sum(CAST(e.value AS DECIMAL(18,2)) * CAST(e.value AS DECIMAL(18,2)))
-                    AS DOUBLE) AS sq,
+               sum(CAST(e.value AS DECIMAL(18,2)) * CAST(e.value AS DECIMAL(18,2))) AS sq_dec,
                CAST(sum(e.va) AS DOUBLE) AS sa,
                CAST(sum(e.vb) AS DOUBLE) AS sb,
                CAST(sum(e.va * e.vb) AS DOUBLE) AS sab,
@@ -5825,7 +5827,8 @@ SELECT make_timestamp(s_start + {w}) AS ts,
        mn AS min_val,
        mx AS max_val,
        CASE WHEN n > 0
-            THEN sqrt(greatest((n * sq - sv * sv) / (n * n), 0.0)) END AS std_val,
+            THEN sqrt(greatest(CAST(cnt * sq_dec - sum_dec * sum_dec AS DOUBLE) / (n * n), 0.0))
+            END AS std_val,
        CASE WHEN n > 1 AND (n * saa - sa * sa) * (n * sbb - sb * sb) > 0
             THEN (n * sab - sa * sb)
                  / sqrt((n * saa - sa * sa) * (n * sbb - sb * sb)) END AS corr_ab

@@ -406,6 +406,25 @@ def test_streaming_batch_parity(spark):
     assert list(out["v__sum__w=50seconds"]) == [50.0, 50.0]
 
 
+def test_native_helpers_reject_unknown_name(spark):
+    """The streaming and chunking helpers compile catalog names through
+    ``catalog.native_agg``: an unknown name raises ValueError (not an
+    assert, which ``python -O`` strips) before any plan is built."""
+    import pytest as _pytest
+
+    from tsflex_spark.chunking.chunking import chunk_features
+    from tsflex_spark.streaming.rolling import rolling_features_stream, session_features_stream
+
+    ts = pd.date_range("2024-01-01", periods=10, freq="1s")
+    df = spark.createDataFrame(pd.DataFrame({"ts": ts, "value": np.ones(10)}))
+    with _pytest.raises(ValueError, match="not a native catalog function"):
+        rolling_features_stream(df, {"value": ["sum", "nope"]}, window="5 seconds")
+    with _pytest.raises(ValueError, match="not a native catalog function"):
+        session_features_stream(df, "5 seconds", {"value": ["nope"]})
+    with _pytest.raises(ValueError, match="not a native catalog function"):
+        chunk_features(df, aggs=("sum", "nope"))
+
+
 # ---------------------------------------------------------- asof join
 def test_asof_join_backward_basic(spark):
     from tsflex_spark.relational import asof_join

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import ref_segment_starts
-from tsflex_spark import FeatureCollection, FeatureDescriptor
+from tsflex_spark import FeatureCollection, FeatureDescriptor, FuncWrapper
 
 
 def _seq_df(spark, n=20):
@@ -540,11 +540,26 @@ def test_summary_grain_guard(spark):
         assert ((a == b) | (a.isna() & b.isna())).all(), c
 
 
+def _np_moments(pdf, col, out_ts, w, ddof=0):
+    """numpy two-pass std/var of ``col`` over each window ``[t - w, t)``."""
+    t = pdf["ts"].to_numpy()
+    std, var = [], []
+    for end in out_ts:
+        x = pdf[col][(t >= end - w) & (t < end)].dropna().astype(float).to_numpy()
+        ok = len(x) > ddof
+        std.append(np.std(x, ddof=ddof) if ok else np.nan)
+        var.append(np.var(x, ddof=ddof) if ok else np.nan)
+    return np.array(std), np.array(var)
+
+
 def test_two_level_moments_and_two_series(spark):
     """std (moment) and corr/covar_pop (two-series) decompose through the
     bucket summary: corr/covar use the SAME exact-sum partials as the
-    one-level builds (bit-exact on decimal inputs); std's textbook formula
-    may differ from one-level Welford stddev_pop only in float ulps."""
+    one-level builds (bit-exact on decimal inputs). The moments differ by
+    design — Spark's Welford aggregates one-level, sums shifted by each
+    key's first sample in the summary — and both stay within 1e-9 of
+    numpy's two-pass std/var, also on a series at a 1e6 offset and on
+    one-sample windows of decimal input (exactly 0 there)."""
     from tsflex_spark import FeatureCollection, FeatureDescriptor
 
     rng = np.random.default_rng(11)
@@ -579,12 +594,46 @@ def test_two_level_moments_and_two_series(spark):
         a, b = one[c], two[c]
         same = (a == b) | (a.isna() & b.isna())
         assert same.all(), (c, one[~same].head(), two[~same].head())
-    # moments: Welford (one-level) vs exact-sum textbook (two-level)
-    for c in ["v__std__w=4h", "v__var__w=4h"]:
-        a, b = one[c], two[c]
-        both = ~(a.isna() | b.isna())
-        assert (a.isna() == b.isna()).all()
-        assert np.allclose(a[both], b[both], rtol=1e-9, atol=1e-9), c
+    w4h = pd.Timedelta("4h")
+    ref_std, ref_var = _np_moments(pdf, "v", two["ts"], w4h)
+    for out in (one, two):
+        assert np.allclose(out["v__std__w=4h"], ref_std, rtol=1e-9, atol=1e-9, equal_nan=True)
+        assert np.allclose(out["v__var__w=4h"], ref_var, rtol=1e-9, atol=1e-9, equal_nan=True)
+
+    # a 1 Hz N(1e6, 1) series for two hours, then one sample every 15 min
+    # (one-sample 10 min windows); ``d`` is decimal(12,2) input
+    dense = pd.date_range("2024-01-01", periods=7200, freq="1s")
+    sparse = dense[-1] + pd.to_timedelta(np.arange(1, 9) * 15, unit="min")
+    ots = dense.append(sparse)
+    opdf = pd.DataFrame(
+        {
+            "ts": ots,
+            "o": rng.normal(1e6, 1.0, size=len(ots)),
+            "d": np.round(rng.normal(50.0, 30.0, size=len(ots)), 2),
+        }
+    )
+    odf = spark.createDataFrame(opdf).withColumn("d", F.col("d").cast("decimal(12,2)"))
+    odescs = [
+        FeatureDescriptor(FuncWrapper(f, output_names=f"{f}{ddof}", ddof=ddof), s, "10m", "5m")
+        for f in ("std", "var") for s in ("o", "d") for ddof in (0, 1)
+    ]
+    kw = dict(ts_col="ts", approve_sparsity=True)
+    one = _one_level(odescs, "o", "10m", "5m").calculate(odf, **kw).toPandas()
+    two = FeatureCollection(odescs).calculate(odf, **kw).toPandas()
+    assert list(one["ts"]) == list(two["ts"])
+    for s in ("o", "d"):
+        for ddof in (0, 1):
+            ref_std, ref_var = _np_moments(opdf, s, two["ts"], pd.Timedelta("10m"), ddof)
+            for out in (one, two):
+                for c, ref in ((f"{s}__std{ddof}__w=10m", ref_std), (f"{s}__var{ddof}__w=10m", ref_var)):
+                    got = out[c].to_numpy(dtype=float)
+                    assert np.allclose(got, ref, rtol=1e-9, atol=1e-9, equal_nan=True), (c, got, ref)
+    # one-sample windows of decimal input: exactly 0 on both paths
+    ref_std, _ = _np_moments(opdf, "d", two["ts"], pd.Timedelta("10m"))
+    lone = (two["ts"] > dense[-1] + pd.Timedelta("10m")) & (ref_std == 0.0)
+    assert lone.sum() > 0
+    for out in (one, two):
+        assert (out.loc[lone, "d__std0__w=10m"] == 0.0).all()
 
 
 def test_two_level_rewrite_triggers(spark):
@@ -610,6 +659,25 @@ def test_two_level_rewrite_triggers(spark):
     # correctness spot check: every full 4h window sums 240 minutes
     vals = out.toPandas()["v__sum__w=4h"]
     assert (vals.iloc[2:-2] == 240.0).all()
+
+
+def test_aligned_time_segment_covers_one_bucket(spark):
+    """A TIME segment whose end sits on a bucket edge covers its own bucket
+    only: ``[00:00, 06:00)`` at a 6 h grain is one bucket, not two (a
+    sub-microsecond epsilon below the end rounds away at epoch-micros
+    magnitudes). A fractional end on an edge may add the next bucket,
+    whose rows the exact predicate drops; an empty segment covers its
+    start's bucket."""
+    from tsflex_spark.features.segmenter import SEG, SEG_END, cover_buckets, manual_segment_spine
+
+    g = 6 * 3600 * 10**6
+    starts = (pd.to_datetime(["2024-01-01", "2024-01-02"]).astype("int64") // 1000).to_numpy()
+    spine = manual_segment_spine(spark, starts, starts + g)
+    got = spine.select(F.size(cover_buckets(spine, SEG, SEG_END, float(g)))).collect()
+    assert [r[0] for r in got] == [1, 1]
+    frac = manual_segment_spine(spark, np.array([0.0, 1.0, 3.0]), np.array([4.0, 2.5, 3.0]))
+    got = frac.orderBy(SEG).select(cover_buckets(frac, SEG, SEG_END, 2.0)).collect()
+    assert [r[0] for r in got] == [[0, 1, 2], [0, 1], [1]]
 
 
 def test_manual_segments_one_array_paths(spark):
@@ -780,6 +848,86 @@ def test_two_level_rewrite_equivalence_keyed(spark):
     for c in one.columns:
         same = (one[c] == two[c]) | (one[c].isna() & two[c].isna())
         assert same.all(), c
+
+
+_MOMENTS = {"std", "var", "nanstd", "nanvar", "variation_coefficient"}
+_PARITY_KWARGS = {
+    "count_above": {"t": 50.0}, "count_below": {"t": 50.0}, "frac_above": {"t": 50.0},
+    "range_count": {"lo": 20.0, "hi": 60.0}, "crossings": {"t": 50.0},
+}
+
+
+def _parity_descriptors():
+    """One descriptor per decomposable catalog function (both arities),
+    plus ddof=1 for the moments and threshold kwargs: every name for
+    which ``decomposition``/``decomposition2`` returns a definition."""
+    from tsflex_spark.features.catalog import (
+        decomposition, decomposition2, lookup_native2, native_names,
+    )
+
+    descs, moments = [], []
+    for name in native_names():
+        pair = lookup_native2(name, {}) is not None
+        if (decomposition2 if pair else decomposition)(name) is None:
+            continue
+        series = ("a", "b") if pair else "a"
+        variants = [(name, _PARITY_KWARGS.get(name, {}))]
+        if name in _MOMENTS:
+            variants.append((f"{name}_ddof1", {"ddof": 1}))
+        for out, kw in variants:
+            descs.append(FeatureDescriptor(FuncWrapper(name, output_names=out, **kw), series, "4h", "1h"))
+            if name in _MOMENTS:
+                moments.append(f"a__{out}__w=4h")
+    return descs, moments
+
+
+@pytest.mark.parametrize("dtype", ["decimal(12,2)", "double"])
+def test_catalog_parity_summary_vs_one_level(spark, dtype):
+    """Every decomposable catalog function gives the same dtype on the
+    bucket summary and on the one-level path, and the same values:
+    bit-identical on decimal input (moments within 1e-9 — Welford vs
+    shifted sums), within 1e-12 on double input. Keyed data with NULLs
+    in both series and a 12 h gap (empty windows)."""
+    rng = np.random.default_rng(13)
+    rows = 3000
+    ts = pd.to_datetime("2024-01-01") + pd.to_timedelta(
+        np.sort(rng.choice(400_000, size=rows, replace=False)), unit="s"
+    )
+    pdf = pd.DataFrame(
+        {
+            "ts": ts,
+            "k": rng.integers(0, 3, size=rows),
+            "a": rng.integers(-2000, 10000, size=rows) / 100.0,
+            "b": rng.integers(1, 10000, size=rows) / 100.0,
+        }
+    )
+    gap = (pdf["ts"] > ts[0] + pd.Timedelta("30h")) & (pdf["ts"] < ts[0] + pd.Timedelta("42h"))
+    pdf = pdf[~(gap & (pdf["k"] == 1))]
+    pdf.loc[rng.random(len(pdf)) < 0.1, "a"] = np.nan
+    pdf.loc[rng.random(len(pdf)) < 0.1, "b"] = np.nan
+    df = (
+        spark.createDataFrame(pdf)
+        .withColumn("a", F.expr(f"CAST(nanvl(a, NULL) AS {dtype})"))
+        .withColumn("b", F.expr(f"CAST(nanvl(b, NULL) AS {dtype})"))
+    )
+    descs, moments = _parity_descriptors()
+    kw = dict(ts_col="ts", key_cols=["k"], approve_sparsity=True)
+    one_df = _one_level(descs, "a", "4h", "1h").calculate(df, **kw).drop("a__np_sum__w=4h")
+    two_df = FeatureCollection(descs).calculate(df, **kw)
+    assert FeatureCollection(descs).explain_features(is_time=True)["two_level"].all()
+    assert one_df.dtypes == two_df.dtypes
+    one = one_df.toPandas().sort_values(["k", "ts"]).reset_index(drop=True)
+    two = two_df.toPandas().sort_values(["k", "ts"]).reset_index(drop=True)
+    assert len(one) == len(two) and len(one.columns) > len(descs)
+    exact = dtype.startswith("decimal")
+    for c in one.columns:
+        a, b = one[c], two[c]
+        if exact and c not in moments or not pd.api.types.is_float_dtype(a):
+            same = (a == b) | (a.isna() & b.isna())
+            assert same.all(), (c, one.loc[~same, c].head(), two.loc[~same, c].head())
+        else:
+            tol = 1e-9 if exact else 1e-12
+            assert np.allclose(a.astype(float), b.astype(float), rtol=tol, atol=tol, equal_nan=True), c
 
 
 def test_native_two_series_corr(spark):
@@ -1279,8 +1427,8 @@ def test_two_level_new_natives_parity(spark):
             continue
         a, b = one[c].to_numpy(dtype=float), two[c].to_numpy(dtype=float)
         if c == "v__variation_coefficient__w=1m4s":
-            # one-level Welford stddev_pop vs two-level textbook sums:
-            # equal to float ulps, not bit-identical (same as std/var)
+            # one-level Welford stddev_pop vs the summary's shifted sums:
+            # equal within 1e-9, not bit-identical (same as std/var)
             both = ~(np.isnan(a) | np.isnan(b))
             assert (np.isnan(a) == np.isnan(b)).all()
             assert np.allclose(a[both], b[both], rtol=1e-9, atol=1e-9), c

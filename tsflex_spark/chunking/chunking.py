@@ -172,15 +172,14 @@ def chunk_features(
     Output: ``(keys..., chunk_id, chunk_start, chunk_end, n_samples,
     <value>__<agg>__w=chunk ...)``.
     """
-    from tsflex_spark.features.catalog import lookup_native
+    from tsflex_spark.features.catalog import native_agg
 
     key_cols = list(key_cols)
     feat_cols = [f"{value_col}__{name}__w=chunk" for name in aggs]
-    exprs = []
-    for name, feat in zip(aggs, feat_cols):
-        spec = lookup_native(name, {})
-        assert spec is not None, f"{name!r} is not a native catalog function"
-        exprs.append(spec.build(F.col(value_col), F.col(TSN), {}).alias(feat))
+    exprs = [
+        native_agg(name, F.col(value_col), F.col(TSN)).alias(feat)
+        for name, feat in zip(aggs, feat_cols)
+    ]
     out, is_time = _chunks(data, ts_col, value_col, key_cols, fs, max_gap, [value_col], exprs)
     return out.select(
         *key_cols,

@@ -51,6 +51,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from tsflex_spark.utils.data import DataType
 from tsflex_spark.utils.time_args import ts_micros
@@ -83,21 +84,34 @@ def output_index(col: Column, domain: DataType) -> Column:
     return col
 
 
+def shift_col(series: str) -> str:
+    """Bounds column holding ``series``' moment shift (``make_bounds``)."""
+    return f"__shift_{series}"
+
+
 def make_bounds(
     data: DataFrame,
     series_cols: Sequence[str],
     key_cols: Sequence[str],
     bound_method: str = "inner",
 ) -> DataFrame:
-    """Per-key ``(START, END)`` bounds over the required series.
+    """Per-key ``(START, END)`` bounds over the required series, plus each
+    series' first sample as its moment shift (``shift_col``): the bucket
+    summary takes moment partials about it, so a large offset does not
+    cancel in the final.
 
     inner = max(firsts)..min(lasts); inner-outer = max..max; outer = min..max
     (reference tsflex/features/utils.py:59-99). One tiny aggregate — O(#keys)
     rows regardless of data size.
     """
-    mins = [F.min(F.when(F.col(s).isNotNull(), F.col(TSN))).alias(f"__mn_{i}") for i, s in enumerate(series_cols)]
-    maxs = [F.max(F.when(F.col(s).isNotNull(), F.col(TSN))).alias(f"__mx_{i}") for i, s in enumerate(series_cols)]
-    agg = data.groupBy(*key_cols).agg(*mins, *maxs) if key_cols else data.agg(*mins, *maxs)
+    def at(s: str) -> Column:
+        return F.when(F.col(s).isNotNull(), F.col(TSN))
+
+    mins = [F.min(at(s)).alias(f"__mn_{i}") for i, s in enumerate(series_cols)]
+    maxs = [F.max(at(s)).alias(f"__mx_{i}") for i, s in enumerate(series_cols)]
+    shifts = [F.min_by(F.col(s), at(s)).alias(shift_col(s)) for s in series_cols]
+    aggs = [*mins, *maxs, *shifts]
+    agg = data.groupBy(*key_cols).agg(*aggs) if key_cols else data.agg(*aggs)
     mn_cols = [F.col(f"__mn_{i}") for i in range(len(series_cols))]
     mx_cols = [F.col(f"__mx_{i}") for i in range(len(series_cols))]
 
@@ -115,7 +129,10 @@ def make_bounds(
         start, end = _l(mn_cols), _g(mx_cols)
     else:
         raise ValueError(f"invalid bound_method {bound_method!r}")
-    out = agg.select(*key_cols, start.alias(START), end.alias(END))
+    out = agg.select(
+        *key_cols, start.alias(START), end.alias(END),
+        *[F.col(_q(shift_col(s))) for s in series_cols],
+    )
     return out.where(F.col(START).isNotNull() & F.col(END).isNotNull())
 
 
@@ -220,9 +237,9 @@ def assign_segments(
     """Tag every data row with each segment start it falls into.
 
     Data-side membership computation — the scale-critical path (module
-    docstring). Returns ``data`` columns + ``SEG``; rows in no segment are
-    dropped, rows in many segments are duplicated (fan-out ≤
-    ceil(window/stride)+1 per stride).
+    docstring). Returns ``data`` columns + ``SEG`` (the bounds' own
+    columns are dropped); rows in no segment are dropped, rows in many
+    segments are duplicated (fan-out ≤ ceil(window/stride)+1 per stride).
     """
     if key_cols:
         joined = data.join(F.broadcast(bounds), on=list(key_cols), how="inner")
@@ -236,7 +253,8 @@ def assign_segments(
         TSN, sql_lit(window), ss, lambda i: f"{START} + __k * {ss[i]}",
         nbs=[nb_sql(sql_lit(window), s, include_final_window) for s in ss], origin=START,
     )
-    return joined.withColumn(SEG, F.explode(F.expr(cands))).drop(START, END)
+    bounds_only = [c for c in bounds.columns if c not in key_cols]
+    return joined.withColumn(SEG, F.explode(F.expr(cands))).drop(*bounds_only)
 
 
 def manual_segment_spine(
@@ -264,6 +282,27 @@ def manual_segment_spine(
     return spine
 
 
+def bucket(c: Column, g: Num) -> Column:
+    """Granule bucket ``floor(c / g)`` of a position."""
+    return F.floor(c.cast("double") / g)
+
+
+def cover_buckets(df: DataFrame, s: str, e: str, g: Num) -> Column:
+    """The grain-``g`` buckets that ``df``'s half-open ``[s, e)`` covers —
+    the bucketed equi-join rule of manual segments and of the range joins
+    (``relational``). With an integral end and grain no position below
+    ``e`` lies past bucket ``floor((e - 1) / g)``; otherwise the last is
+    ``floor(e / g)``, one bucket too many only when ``e / g`` is whole
+    (the exact predicate drops what it adds). An empty range covers its
+    start's bucket."""
+    first = bucket(F.col(s), g)
+    if isinstance(df.schema[e].dataType, IntegralType) and float(g).is_integer():
+        last = bucket(F.col(e) - 1, g)
+    else:
+        last = bucket(F.col(e), g)
+    return F.sequence(first, F.greatest(first, last))
+
+
 def assign_manual_segments(
     data: DataFrame,
     spine: DataFrame,
@@ -278,16 +317,8 @@ def assign_manual_segments(
     (SURVEY §4.2 "bucketize" strategy).
     """
     g = max(float(max_seg_len), 1.0)
-    seg_b = spine.withColumn(
-        "__bkt",
-        F.explode(
-            F.sequence(
-                F.floor(F.col(SEG) / F.lit(g)),
-                F.greatest(F.floor(F.col(SEG) / F.lit(g)), F.floor((F.col(SEG_END) - F.lit(1e-9)) / F.lit(g))),
-            )
-        ),
-    )
-    data_b = data.withColumn("__bkt", F.floor(F.col(TSN) / F.lit(g)))
+    seg_b = spine.withColumn("__bkt", F.explode(cover_buckets(spine, SEG, SEG_END, g)))
+    data_b = data.withColumn("__bkt", bucket(F.col(TSN), g))
     cond = (F.col(TSN) >= F.col(SEG)) & (F.col(TSN) < F.col(SEG_END))
     joined = data_b.join(F.broadcast(seg_b), on=list(key_cols) + ["__bkt"], how="inner").where(cond)
     return joined.drop("__bkt")

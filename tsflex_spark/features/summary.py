@@ -17,9 +17,12 @@ strides are integral through ONE such table:
    divides every window and stride, so buckets nest exactly in
    segments); the per-key spine rows (NULL partials) are unioned in, so
    empty windows come out of the same aggregation;
-3. **one keyed aggregation** per ``(keys, output index, config)``
-   finalizes every output. The caller's assembly then pivots the configs
-   into columns in the same ``groupBy`` that merges the other paths.
+3. **one keyed aggregation** per ``(keys, output index, config)`` merges
+   each partial kind by its own rule (``catalog.merge_partial``) and
+   applies the function's final — the same final its one-level build
+   applies to one segment's partials. The caller's assembly then pivots
+   the configs into columns in the same ``groupBy`` that merges the
+   other paths.
 
 **Grain guard.** A config never buckets finer than
 ``(w // g) <= 4 · fanout`` allows (``fanout = w / min(strides)``; a tiny
@@ -36,9 +39,14 @@ SQL strings parsed JVM-side; only the catalog's partial/final aggregates
 are ``Column`` objects, each built once and shared by every member
 config.
 
-Derived doubles (mean/rms/std/...) may differ from the one-level plan in
-the last float ulp (double-sum reassociation, textbook moments); sums,
-counts, extrema and first/last are exact.
+Sums, counts, extrema and first/last are exact, and with decimal or
+integer input every non-moment output is bit-identical to the one-level
+plan. Double sums reassociate across buckets, so derived doubles
+(mean/rms/...) can differ from the one-level plan in rounding. The
+moments (std/var/variation_coefficient) are the one real difference:
+the one-level plan runs Spark's Welford aggregates, the summary a
+final over sums shifted by each key's first sample (``make_bounds``);
+the two agree to about 1e-9 relative or better, not to the last bit.
 """
 
 from __future__ import annotations
@@ -62,6 +70,7 @@ from tsflex_spark.features.segmenter import (
     nb_sql,
     out_sql,
     segment_spine,
+    shift_col,
     sql_lit,
 )
 from tsflex_spark.utils.data import DataType
@@ -145,7 +154,7 @@ def build(
     sample-count columns for the sparsity observer as
     ``(series, config-filtered count expression, column)``.
     """
-    from tsflex_spark.features.catalog import pair_partial_builder, partial_builder
+    from tsflex_spark.features.catalog import merge_partial, pair_partial_builder, partial_builder
 
     cols: Dict[str, Column] = {}
 
@@ -171,7 +180,8 @@ def build(
             if pair:
                 expr = pair_partial_builder(kind)(col(series_tuple[0]), col(series_tuple[1]))
             else:
-                expr = partial_builder(kind)(col(series_tuple[0]), col(TSN))
+                s = series_tuple[0]
+                expr = partial_builder(kind)(col(s), col(TSN), col(shift_col(s)))
             aggs.append(expr.alias(aliases[key]))
         return aliases[key]
 
@@ -185,8 +195,8 @@ def build(
             pair = getattr(spec, "arity", 1) == 2
             fkey = (series_tuple, spec.name, kinds, repr(sorted(kwargs.items())))
             if fkey not in finals:
-                pcols = {k: col(partial(k, series_tuple, pair)) for k in kinds}
-                expr = fin(pcols)
+                p = {k: col(partial(k, series_tuple, pair)) for k in kinds}
+                expr = fin({k: merge_partial(k, p) for k in kinds})
                 if spec.empty is not None:
                     if spec.empty not in fills:
                         fills[spec.empty] = F.lit(spec.empty)

@@ -26,11 +26,11 @@ from pyspark.sql.types import (
     DecimalType,
     DoubleType,
     FloatType,
-    IntegralType,
     TimestampNTZType,
     TimestampType,
 )
 
+from tsflex_spark.features.segmenter import bucket, cover_buckets
 from tsflex_spark.utils.time_args import to_numeric_units, ts_micros
 
 
@@ -139,23 +139,6 @@ def _num(df: DataFrame, c: str) -> Column:
     return F.col(c).cast("long")
 
 
-def _bucket(c: Column, g: int) -> Column:
-    """Granule bucket ``floor(c / g)`` of a ``_num`` column."""
-    return F.floor(c.cast("double") / g)
-
-
-def _buckets(df: DataFrame, s: str, e: str, g: int) -> Column:
-    """The granule buckets a half-open ``[s, e)`` of ``_num`` columns
-    covers. An integral end stops at ``floor((e - 1) / g)``; a fractional
-    one at ``floor(e / g)``, one bucket too many only when ``e / g`` is
-    whole (the exact predicate drops what it adds)."""
-    if isinstance(df.schema[e].dataType, IntegralType):
-        last = F.floor((F.col(e) - 1) / g)
-    else:
-        last = _bucket(F.col(e), g)
-    return F.sequence(_bucket(F.col(s), g), last)
-
-
 def range_join(
     left: DataFrame,
     right: DataFrame,
@@ -197,8 +180,8 @@ def range_join(
         granule = max(int(row["m"] or 1), 1)
     g = int(granule)
     r_n = r_n.where(F.col("__e") > F.col("__s"))  # empty intervals match nothing
-    r_b = r_n.withColumn("__b", F.explode(_buckets(r_n, "__s", "__e", g)))
-    l_b = l_n.withColumn("__b", _bucket(F.col("__t"), g))
+    r_b = r_n.withColumn("__b", F.explode(cover_buckets(r_n, "__s", "__e", g)))
+    l_b = l_n.withColumn("__b", bucket(F.col("__t"), g))
     cond = [l_b["__b"] == r_b["__b"]] + [l_b[c] == r_b[c] for c in by]
     matched = (
         l_b.join(r_b, cond, "inner")
@@ -271,10 +254,10 @@ def interval_join(
         gr = r_n.agg(F.max(F.col("__re") - F.col("__rs")).alias("m")).first()["m"]
         granule = max(int(gl or 1), int(gr or 1), 1)
     g = int(granule)
-    l_b = l_n.withColumn("__b", F.explode(_buckets(l_n, "__ls", "__le", g)))
-    r_b = r_n.withColumn("__b", F.explode(_buckets(r_n, "__rs", "__re", g)))
+    l_b = l_n.withColumn("__b", F.explode(cover_buckets(l_n, "__ls", "__le", g)))
+    r_b = r_n.withColumn("__b", F.explode(cover_buckets(r_n, "__rs", "__re", g)))
     cond = [l_b["__b"] == r_b["__b"]] + [l_b[c] == r_b[c] for c in by]
-    first_shared = F.greatest(_bucket(l_b["__ls"], g), _bucket(r_b["__rs"], g))
+    first_shared = F.greatest(bucket(l_b["__ls"], g), bucket(r_b["__rs"], g))
     out = (
         l_b.join(r_b, cond, "inner")
         .where(

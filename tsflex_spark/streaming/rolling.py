@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from pyspark.sql.types import TimestampNTZType
 
-from tsflex_spark.features.catalog import lookup_native
+from tsflex_spark.features.catalog import native_agg
 from tsflex_spark.utils.time_args import ts_micros
 
 
@@ -62,16 +62,12 @@ def rolling_features_stream(
     if watermark is not None:
         df = df.withWatermark(ts_col, watermark)
     win = F.window(F.col(ts_col), window, slide or window)
-    exprs = []
-    for series, funcs in aggs.items():
-        for name in funcs:
-            spec = lookup_native(name, {})
-            assert spec is not None, f"{name!r} is not a native catalog function"
-            exprs.append(
-                spec.build(F.col(series), ts_micros(ts_col), {}).alias(
-                    f"{series}__{name}__w={window.replace(' ', '')}"
-                )
-            )
+    w = window.replace(" ", "")
+    exprs = [
+        native_agg(name, F.col(series), ts_micros(ts_col)).alias(f"{series}__{name}__w={w}")
+        for series, funcs in aggs.items()
+        for name in funcs
+    ]
     out = df.groupBy(*key_cols, win).agg(*exprs)
     return out.select(
         *key_cols,
@@ -95,16 +91,11 @@ def session_features_stream(
     if watermark is not None:
         df = df.withWatermark(ts_col, watermark)
     win = F.session_window(F.col(ts_col), gap)
-    exprs = [F.count(F.lit(1)).alias("n_events")]
-    for series, funcs in aggs.items():
-        for name in funcs:
-            spec = lookup_native(name, {})
-            assert spec is not None, f"{name!r} is not a native catalog function"
-            exprs.append(
-                spec.build(F.col(series), ts_micros(ts_col), {}).alias(
-                    f"{series}__{name}__w=session"
-                )
-            )
+    exprs = [F.count(F.lit(1)).alias("n_events")] + [
+        native_agg(name, F.col(series), ts_micros(ts_col)).alias(f"{series}__{name}__w=session")
+        for series, funcs in aggs.items()
+        for name in funcs
+    ]
     out = df.groupBy(*key_cols, win).agg(*exprs)
     return out.select(
         *key_cols,
