@@ -5756,11 +5756,11 @@ def q_sliding_fine_stride(spark: SparkSession, sf_dir: str) -> DataFrame:
     gcd grain (one un-duplicated shuffle), buckets roll into segments.
     Decimal sums keep sum/count/min/max and the two-series (corr)
     decomposition bit-exact vs the oracle: partial exact sums per bucket,
-    final double formula identical on both engines. std's variance
-    numerator n·Σv² − (Σv)² is exact decimal arithmetic on both sides
-    (the summary forms it from sums shifted by the first sample, which
-    leaves an exact value unchanged) and is cast to double once, so a
-    one-sample window reads exactly 0 on both."""
+    final double formula identical on both engines. std is checked
+    against DuckDB's own ``stddev_pop``: the summary's variance numerator
+    n·Σv² − (Σv)² is exact on decimal input (sums shifted by the first
+    sample leave it unchanged), so a one-sample window reads exactly 0,
+    as it does in DuckDB."""
     _utc(spark)
     va = F.col("value").cast("decimal(12,2)")
     vb = (va + F.col("user_id").cast("decimal(10,0)")).cast("decimal(14,2)")
@@ -5812,7 +5812,7 @@ agg AS (SELECT s_start,
                count(e.value) AS cnt,
                min(e.value) AS mn, max(e.value) AS mx,
                CAST(count(e.value) AS DOUBLE) AS n,
-               sum(CAST(e.value AS DECIMAL(18,2)) * CAST(e.value AS DECIMAL(18,2))) AS sq_dec,
+               stddev_pop(CAST(e.value AS DECIMAL(18,2))) AS sd,
                CAST(sum(e.va) AS DOUBLE) AS sa,
                CAST(sum(e.vb) AS DOUBLE) AS sb,
                CAST(sum(e.va * e.vb) AS DOUBLE) AS sab,
@@ -5826,9 +5826,7 @@ SELECT make_timestamp(s_start + {w}) AS ts,
        cnt AS cnt_val,
        mn AS min_val,
        mx AS max_val,
-       CASE WHEN n > 0
-            THEN sqrt(greatest(CAST(cnt * sq_dec - sum_dec * sum_dec AS DOUBLE) / (n * n), 0.0))
-            END AS std_val,
+       sd AS std_val,
        CASE WHEN n > 1 AND (n * saa - sa * sa) * (n * sbb - sb * sb) > 0
             THEN (n * sab - sa * sb)
                  / sqrt((n * saa - sa * sa) * (n * sbb - sb * sb)) END AS corr_ab

@@ -558,8 +558,9 @@ def test_two_level_moments_and_two_series(spark):
     one-level builds (bit-exact on decimal inputs). The moments differ by
     design — Spark's Welford aggregates one-level, sums shifted by each
     key's first sample in the summary — and both stay within 1e-9 of
-    numpy's two-pass std/var, also on a series at a 1e6 offset and on
-    one-sample windows of decimal input (exactly 0 there)."""
+    numpy's two-pass std/var, also on a series at a 1e6 offset, on
+    one-sample windows of decimal input (exactly 0 there) and on a series
+    whose first sample is NaN (only the windows holding a NaN read NaN)."""
     from tsflex_spark import FeatureCollection, FeatureDescriptor
 
     rng = np.random.default_rng(11)
@@ -601,7 +602,9 @@ def test_two_level_moments_and_two_series(spark):
         assert np.allclose(out["v__var__w=4h"], ref_var, rtol=1e-9, atol=1e-9, equal_nan=True)
 
     # a 1 Hz N(1e6, 1) series for two hours, then one sample every 15 min
-    # (one-sample 10 min windows); ``d`` is decimal(12,2) input
+    # (one-sample 10 min windows); ``d`` is decimal(12,2) input; ``n`` is
+    # another offset series whose first sample and the one an hour in are
+    # NaN (a real NaN, set in Spark: not a NULL)
     dense = pd.date_range("2024-01-01", periods=7200, freq="1s")
     sparse = dense[-1] + pd.to_timedelta(np.arange(1, 9) * 15, unit="min")
     ots = dense.append(sparse)
@@ -610,12 +613,19 @@ def test_two_level_moments_and_two_series(spark):
             "ts": ots,
             "o": rng.normal(1e6, 1.0, size=len(ots)),
             "d": np.round(rng.normal(50.0, 30.0, size=len(ots)), 2),
+            "n": rng.normal(1e6, 1.0, size=len(ots)),
+            "i": np.arange(len(ots)),
         }
     )
-    odf = spark.createDataFrame(opdf).withColumn("d", F.col("d").cast("decimal(12,2)"))
+    nan_at = [0, 3600]
+    odf = (
+        spark.createDataFrame(opdf)
+        .withColumn("d", F.col("d").cast("decimal(12,2)"))
+        .withColumn("n", F.when(F.col("i").isin(nan_at), F.lit(float("nan"))).otherwise(F.col("n")))
+    )
     odescs = [
         FeatureDescriptor(FuncWrapper(f, output_names=f"{f}{ddof}", ddof=ddof), s, "10m", "5m")
-        for f in ("std", "var") for s in ("o", "d") for ddof in (0, 1)
+        for f in ("std", "var") for s in ("o", "d", "n") for ddof in (0, 1)
     ]
     kw = dict(ts_col="ts", approve_sparsity=True)
     one = _one_level(odescs, "o", "10m", "5m").calculate(odf, **kw).toPandas()
@@ -634,6 +644,64 @@ def test_two_level_moments_and_two_series(spark):
     assert lone.sum() > 0
     for out in (one, two):
         assert (out.loc[lone, "d__std0__w=10m"] == 0.0).all()
+    # NaN samples: NaN exactly in the windows that hold one, numpy's value
+    # everywhere else (the shift is the first finite sample)
+    t = opdf["ts"].to_numpy()
+    holds = np.array([
+        any(end - pd.Timedelta("10m") <= t[j] < end for j in nan_at) for end in two["ts"]
+    ])
+    assert holds.sum() > 0 and (~holds).sum() > 0
+    for ddof in (0, 1):
+        ref_std, ref_var = _np_moments(opdf, "n", two["ts"], pd.Timedelta("10m"), ddof)
+        for out in (one, two):
+            for c, ref in ((f"n__std{ddof}__w=10m", ref_std), (f"n__var{ddof}__w=10m", ref_var)):
+                got = out[c].to_numpy(dtype=float)
+                assert np.isnan(got[holds]).all(), c
+                assert np.allclose(got[~holds], ref[~holds], rtol=1e-9, atol=1e-9, equal_nan=True), c
+
+
+def test_integral_means_and_moments_do_not_overflow(spark):
+    """Means, rms and the moments of integral input stay overflow-free on
+    both paths: the sums under them are exact decimals, so a bigint
+    window whose sum passes 2⁶³ (epoch nanoseconds) and an int series
+    whose squares pass 2³¹ read numpy's values instead of raising."""
+    from tsflex_spark import FeatureCollection, FeatureDescriptor
+
+    n = 120
+    ts = pd.date_range("2024-01-01", periods=n, freq="1s")
+    rng = np.random.default_rng(5)
+    big = [1_700_000_000_000_000_000 + j * 10**12 + int(x) for j, x in enumerate(rng.integers(0, 10**9, n))]
+    small = [60000 * (j % 2) for j in range(n)]
+    pdf = pd.DataFrame({"ts": ts, "b": np.array(big, dtype=np.int64), "s": np.array(small, dtype=np.int32)})
+    df = (
+        spark.createDataFrame(pdf)
+        .withColumn("b", F.col("b").cast("bigint"))
+        .withColumn("s", F.col("s").cast("int"))
+    )
+    funcs = ("mean", "nanmean", "mean_abs", "rms", "std", "var", "variation_coefficient")
+    descs = [FeatureDescriptor(f, c, "10s", "5s") for f in funcs for c in ("b", "s")]
+    kw = dict(ts_col="ts", approve_sparsity=True)
+    one = _one_level(descs, "b", "10s", "5s").calculate(df, **kw).toPandas()
+    two = FeatureCollection(descs).calculate(df, **kw).toPandas()
+    assert FeatureCollection(descs).explain_features(is_time=True)["two_level"].all()
+    assert list(one["ts"]) == list(two["ts"]) and len(two) > 0
+    for c, vals in (("b", big), ("s", small)):
+        ref = {f: [] for f in funcs}
+        for end in two["ts"]:
+            x = [v for t, v in zip(ts, vals) if end - pd.Timedelta("10s") <= t < end]
+            mean = sum(x) / len(x)  # exact integer sum, one rounding
+            d = np.array([v - x[0] for v in x], dtype=float)  # exact offsets
+            ref["mean"].append(mean)
+            ref["nanmean"].append(mean)
+            ref["mean_abs"].append(sum(abs(v) for v in x) / len(x))
+            ref["rms"].append(float(np.sqrt(sum(v * v for v in x) / len(x))))
+            ref["std"].append(np.std(d))
+            ref["var"].append(np.var(d))
+            ref["variation_coefficient"].append(np.std(d) / mean if mean else np.nan)
+        for out in (one, two):
+            for f in funcs:
+                got = out[f"{c}__{f}__w=10s"].to_numpy(dtype=float)
+                assert np.allclose(got, ref[f], rtol=1e-8, atol=0, equal_nan=True), (c, f, got, ref[f])
 
 
 def test_two_level_rewrite_triggers(spark):
@@ -665,9 +733,8 @@ def test_aligned_time_segment_covers_one_bucket(spark):
     """A TIME segment whose end sits on a bucket edge covers its own bucket
     only: ``[00:00, 06:00)`` at a 6 h grain is one bucket, not two (a
     sub-microsecond epsilon below the end rounds away at epoch-micros
-    magnitudes). A fractional end on an edge may add the next bucket,
-    whose rows the exact predicate drops; an empty segment covers its
-    start's bucket."""
+    magnitudes). Fractional ends stop at the bucket of the double just
+    below them."""
     from tsflex_spark.features.segmenter import SEG, SEG_END, cover_buckets, manual_segment_spine
 
     g = 6 * 3600 * 10**6
@@ -675,9 +742,17 @@ def test_aligned_time_segment_covers_one_bucket(spark):
     spine = manual_segment_spine(spark, starts, starts + g)
     got = spine.select(F.size(cover_buckets(spine, SEG, SEG_END, float(g)))).collect()
     assert [r[0] for r in got] == [1, 1]
-    frac = manual_segment_spine(spark, np.array([0.0, 1.0, 3.0]), np.array([4.0, 2.5, 3.0]))
+    # fractional ends: an end on an edge adds no bucket either, an end one
+    # ulp past it does (a position can sit on the edge), and an empty
+    # segment covers its start's bucket
+    past = np.nextafter(6.0, 7.0)
+    frac = manual_segment_spine(
+        spark, np.array([0.0, 1.0, 3.0, 4.5, 2.0]), np.array([4.0, 2.5, 3.0, past, 12.0])
+    )
     got = frac.orderBy(SEG).select(cover_buckets(frac, SEG, SEG_END, 2.0)).collect()
-    assert [r[0] for r in got] == [[0, 1, 2], [0, 1], [1]]
+    assert [r[0] for r in got] == [[0, 1], [0, 1], [1, 2, 3, 4, 5], [1], [2, 3]]
+    got = frac.orderBy(SEG).select(cover_buckets(frac, SEG, SEG_END, 3.0)).collect()
+    assert [r[0] for r in got][4] == [1, 2]
 
 
 def test_manual_segments_one_array_paths(spark):

@@ -78,8 +78,9 @@ def _reg(
 # --- decomposable functions: partial kinds + one final -----------------------
 # A partial kind is an aggregate over a bucket's (or a segment's) rows plus
 # the rule that merges it across buckets. One-series kinds see (v, tsn, k):
-# value, numeric index and the key's moment shift (the series' first
-# sample, ``segmenter.make_bounds``). Threshold counts are PARAMETERIZED
+# value, numeric index and the key's moment shift (read only by the
+# ``SHIFTED`` kinds: 0 one-level, the series' first finite sample in the
+# summary, ``summary.shift_aggs``). Threshold counts are PARAMETERIZED
 # kinds: the kwarg value is baked into the key (``cntgt=4.0``), so distinct
 # thresholds get distinct bucket columns while identical ones share one,
 # and ``partial_builder`` re-derives the predicate from the key alone.
@@ -91,13 +92,25 @@ def _ordered(v: Column, lead: Column, tsn: Column) -> Column:
     return F.when(v.isNotNull(), F.struct(lead.alias("o"), tsn.alias("t")))
 
 
+def _wide(v: Column) -> Column:
+    """``v`` with integral input as decimal, so a sum that only feeds a
+    double final cannot overflow; decimal and floating input keep their
+    type (a NULL decimal(1,0) widens nothing else)."""
+    return F.coalesce(v, F.lit(None).cast("decimal(1,0)"))
+
+
 _PARTIALS: dict[str, tuple] = {  # kind -> (row aggregate, merge rule)
     "sum": (lambda v, tsn, k: F.sum(v), "sum"),
     "cnt": (lambda v, tsn, k: F.count(v), "sum"),
     "min": (lambda v, tsn, k: F.min(v), "min"),
     "max": (lambda v, tsn, k: F.max(v), "max"),
     "sumsq": (lambda v, tsn, k: F.sum(v * v), "sum"),
-    "sumabs": (lambda v, tsn, k: F.sum(F.abs(v)), "sum"),
+    # the sums under a mean or rms: widened, so integral input cannot
+    # overflow where a double average would not (``sum``/``abs_energy``
+    # keep the input's own sum type)
+    "wsum": (lambda v, tsn, k: F.sum(_wide(v)), "sum"),
+    "wsumsq": (lambda v, tsn, k: F.sum(_wide(v) * _wide(v)), "sum"),
+    "sumabs": (lambda v, tsn, k: F.sum(F.abs(_wide(v))), "sum"),
     "maxabs": (lambda v, tsn, k: F.max(F.abs(v)), "max"),
     "firstv": (lambda v, tsn, k: F.min_by(v, tsn), "first"),
     "mintsn": (lambda v, tsn, k: F.min(tsn), "min"),
@@ -110,9 +123,10 @@ _PARTIALS: dict[str, tuple] = {  # kind -> (row aggregate, merge rule)
     "amaxs": (lambda v, tsn, k: F.min(_ordered(v, -v, tsn)), "min"),
     "amins": (lambda v, tsn, k: F.min(_ordered(v, v, tsn)), "min"),
     # moments about the shift: Σ(v−k), Σ(v−k)²
-    "dsum": (lambda v, tsn, k: F.sum(v - k), "sum"),
-    "dsumsq": (lambda v, tsn, k: F.sum((v - k) * (v - k)), "sum"),
+    "dsum": (lambda v, tsn, k: F.sum(_wide(v) - k), "sum"),
+    "dsumsq": (lambda v, tsn, k: F.sum((_wide(v) - k) * (_wide(v) - k)), "sum"),
 }
+SHIFTED = frozenset({"dsum", "dsumsq"})  # the kinds that read the shift
 
 _MERGES: dict[str, Callable[[dict, str], Column]] = {
     "sum": lambda p, kind: F.sum(p[kind]),
@@ -178,8 +192,8 @@ def _moments(ddof: int) -> dict:
     return {
         "var": (kinds, var), "nanvar": (kinds, var), "std": std, "nanstd": std,
         "variation_coefficient": (
-            (*kinds, "sum"),
-            lambda m: F.try_divide(_sqrt_nonneg(var(m)), _mean(m["sum"], m["cnt"])),
+            (*kinds, "wsum"),
+            lambda m: F.try_divide(_sqrt_nonneg(var(m)), _mean(m["wsum"], m["cnt"])),
         ),
     }
 
@@ -194,10 +208,10 @@ _DECOMPOSABLE: dict[str, tuple] = {  # name -> (partial kinds, final over merged
     **{n: (("cnt",), _pick("cnt")) for n in ("count", "len")},
     **{n: (("min",), _pick("min")) for n in ("min", "amin", "nanmin")},
     **{n: (("max",), _pick("max")) for n in ("max", "amax", "nanmax")},
-    **{n: (("sum", "cnt"), lambda m: _mean(m["sum"], m["cnt"])) for n in ("mean", "nanmean")},
+    **{n: (("wsum", "cnt"), lambda m: _mean(m["wsum"], m["cnt"])) for n in ("mean", "nanmean")},
     "ptp": (("min", "max"), lambda m: m["max"] - m["min"]),
     "abs_energy": (("sumsq",), _pick("sumsq")),
-    "rms": (("sumsq", "cnt"), lambda m: F.sqrt(_mean(m["sumsq"], m["cnt"]))),
+    "rms": (("wsumsq", "cnt"), lambda m: F.sqrt(_mean(m["wsumsq"], m["cnt"]))),
     "mean_abs": (("sumabs", "cnt"), lambda m: _mean(m["sumabs"], m["cnt"])),
     "first": (("firstv", "mintsn"), _pick("firstv")),
     "last": (("lastv", "maxtsn"), _pick("lastv")),
@@ -359,7 +373,7 @@ def _var_build(v: Column, tsn: Column, kw: dict) -> Column:
 # numpy ddof=0 convention used throughout); NULL when mean == 0. The mean
 # is the summary's double mean — a decimal avg would round it to scale 6
 def _cv_build(v: Column, tsn: Column, kw: dict) -> Column:
-    return F.try_divide(_std_build(v, tsn, kw), _mean(F.sum(v), F.count(v)))
+    return F.try_divide(_std_build(v, tsn, kw), _mean(F.sum(_wide(v)), F.count(v)))
 
 
 for _n, _b in [("std", _std_build), ("nanstd", _std_build), ("var", _var_build),

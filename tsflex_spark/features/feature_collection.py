@@ -470,23 +470,6 @@ class FeatureCollection:
         data_n = seg.numeric_index(
             data.select(ts_col, *key_cols, *required), ts_col, domain
         ).drop(ts_col)
-        # bounds are O(#keys) rows but their plan is a full scan; both the
-        # segment-assignment and the spine consume them — materialize so the
-        # scan never runs twice per config (see _materialize_bounds for the
-        # literal-frame vs eager-checkpoint split). DEFERRED (r11): a
-        # count-based config computes its own bounds in position space and
-        # never reads this one — building it up front paid a full
-        # scan+aggregate job per gate for nothing on count-only calls.
-        bounds_cell: List[Optional[DataFrame]] = [None]
-
-        def _bounds() -> DataFrame:
-            if bounds_cell[0] is None:
-                bounds_cell[0] = _materialize_bounds(
-                    seg.make_bounds(data_n, required, key_cols, bound_method),
-                    key_cols,
-                )
-            return bounds_cell[0]
-
         manual = segment_start_idxs is not None or segment_end_idxs is not None
 
         # group descriptors by numeric (window, strides) config → fusion
@@ -533,6 +516,26 @@ class FeatureCollection:
         # manual and too-fine configs keep their own paths
         tables = dict(enumerate(self._plan_summary(configs)))
         table_of = {cfg: ti for ti, (_g, ms) in tables.items() for _i, cfg, _it in ms}
+        # the summaries' moment shifts ride the bounds' own scan
+        shifts = summary.shift_aggs(
+            [it for _g, ms in tables.values() for _i, _cfg, items in ms for it in items]
+        )
+        # bounds are O(#keys) rows but their plan is a full scan; both the
+        # segment-assignment and the spine consume them — materialize so the
+        # scan never runs twice per config (see _materialize_bounds for the
+        # literal-frame vs eager-checkpoint split). DEFERRED (r11): a
+        # count-based config computes its own bounds in position space and
+        # never reads this one — building it up front paid a full
+        # scan+aggregate job per gate for nothing on count-only calls.
+        bounds_cell: List[Optional[DataFrame]] = [None]
+
+        def _bounds() -> DataFrame:
+            if bounds_cell[0] is None:
+                bounds_cell[0] = _materialize_bounds(
+                    seg.make_bounds(data_n, required, key_cols, bound_method, shifts),
+                    key_cols,
+                )
+            return bounds_cell[0]
 
         from tsflex_spark.utils.logging import log_execution
 

@@ -51,7 +51,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegralType
+from pyspark.sql.types import DoubleType, FloatType, IntegralType
 
 from tsflex_spark.utils.data import DataType
 from tsflex_spark.utils.time_args import ts_micros
@@ -84,33 +84,25 @@ def output_index(col: Column, domain: DataType) -> Column:
     return col
 
 
-def shift_col(series: str) -> str:
-    """Bounds column holding ``series``' moment shift (``make_bounds``)."""
-    return f"__shift_{series}"
-
-
 def make_bounds(
     data: DataFrame,
     series_cols: Sequence[str],
     key_cols: Sequence[str],
     bound_method: str = "inner",
+    extra: Sequence[Column] = (),
 ) -> DataFrame:
-    """Per-key ``(START, END)`` bounds over the required series, plus each
-    series' first sample as its moment shift (``shift_col``): the bucket
-    summary takes moment partials about it, so a large offset does not
-    cancel in the final.
+    """Per-key ``(START, END)`` bounds over the required series, plus the
+    ``extra`` per-key aggregates (aliased) computed in the same scan and
+    kept as bounds columns — the bucket summary's moment shifts
+    (``summary.shift_aggs``); ``assign_segments`` drops them.
 
     inner = max(firsts)..min(lasts); inner-outer = max..max; outer = min..max
     (reference tsflex/features/utils.py:59-99). One tiny aggregate — O(#keys)
     rows regardless of data size.
     """
-    def at(s: str) -> Column:
-        return F.when(F.col(s).isNotNull(), F.col(TSN))
-
-    mins = [F.min(at(s)).alias(f"__mn_{i}") for i, s in enumerate(series_cols)]
-    maxs = [F.max(at(s)).alias(f"__mx_{i}") for i, s in enumerate(series_cols)]
-    shifts = [F.min_by(F.col(s), at(s)).alias(shift_col(s)) for s in series_cols]
-    aggs = [*mins, *maxs, *shifts]
+    mins = [F.min(F.when(F.col(s).isNotNull(), F.col(TSN))).alias(f"__mn_{i}") for i, s in enumerate(series_cols)]
+    maxs = [F.max(F.when(F.col(s).isNotNull(), F.col(TSN))).alias(f"__mx_{i}") for i, s in enumerate(series_cols)]
+    aggs = [*mins, *maxs, *extra]
     agg = data.groupBy(*key_cols).agg(*aggs) if key_cols else data.agg(*aggs)
     mn_cols = [F.col(f"__mn_{i}") for i in range(len(series_cols))]
     mx_cols = [F.col(f"__mx_{i}") for i in range(len(series_cols))]
@@ -129,10 +121,8 @@ def make_bounds(
         start, end = _l(mn_cols), _g(mx_cols)
     else:
         raise ValueError(f"invalid bound_method {bound_method!r}")
-    out = agg.select(
-        *key_cols, start.alias(START), end.alias(END),
-        *[F.col(_q(shift_col(s))) for s in series_cols],
-    )
+    extra_cols = agg.columns[len(key_cols) + 2 * len(series_cols):] if extra else []
+    out = agg.select(*key_cols, start.alias(START), end.alias(END), *[F.col(_q(c)) for c in extra_cols])
     return out.where(F.col(START).isNotNull() & F.col(END).isNotNull())
 
 
@@ -290,16 +280,25 @@ def bucket(c: Column, g: Num) -> Column:
 def cover_buckets(df: DataFrame, s: str, e: str, g: Num) -> Column:
     """The grain-``g`` buckets that ``df``'s half-open ``[s, e)`` covers —
     the bucketed equi-join rule of manual segments and of the range joins
-    (``relational``). With an integral end and grain no position below
-    ``e`` lies past bucket ``floor((e - 1) / g)``; otherwise the last is
-    ``floor(e / g)``, one bucket too many only when ``e / g`` is whole
-    (the exact predicate drops what it adds). An empty range covers its
-    start's bucket."""
+    (``relational``): from ``s``'s bucket to the bucket of the largest
+    position below ``e``. With an integral end and grain that is
+    ``e - 1``; with a floating end ``e - |e|·2⁻⁵³``, which rounds to the
+    double just below a positive ``e`` (to ``e`` itself at worst, never
+    lower). So no position below ``e`` lies past the last bucket, and an
+    end on a bucket edge adds no bucket. Any other end (decimal: the
+    position below it may have no double of its own) stops at ``e``'s
+    own bucket, one too many when ``e / g`` is whole; the exact
+    predicate drops what it adds. An empty range covers its start's
+    bucket."""
     first = bucket(F.col(s), g)
-    if isinstance(df.schema[e].dataType, IntegralType) and float(g).is_integer():
-        last = bucket(F.col(e) - 1, g)
+    t = df.schema[e].dataType
+    if isinstance(t, IntegralType) and float(g).is_integer():
+        below = F.col(e) - 1
+    elif isinstance(t, (DoubleType, FloatType)):
+        below = F.col(e) - F.abs(F.col(e)) * 2.0**-53
     else:
-        last = bucket(F.col(e), g)
+        below = F.col(e)
+    last = bucket(below, g)
     return F.sequence(first, F.greatest(first, last))
 
 

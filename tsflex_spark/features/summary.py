@@ -45,8 +45,9 @@ plan. Double sums reassociate across buckets, so derived doubles
 (mean/rms/...) can differ from the one-level plan in rounding. The
 moments (std/var/variation_coefficient) are the one real difference:
 the one-level plan runs Spark's Welford aggregates, the summary a
-final over sums shifted by each key's first sample (``make_bounds``);
-the two agree to about 1e-9 relative or better, not to the last bit.
+final over sums shifted by each key's first finite sample
+(``shift_aggs``); the two agree to about 1e-9 relative or better, not
+to the last bit.
 """
 
 from __future__ import annotations
@@ -70,7 +71,6 @@ from tsflex_spark.features.segmenter import (
     nb_sql,
     out_sql,
     segment_spine,
-    shift_col,
     sql_lit,
 )
 from tsflex_spark.utils.data import DataType
@@ -89,6 +89,32 @@ def _integral(x: Any) -> Optional[int]:
     if isinstance(x, float) and x.is_integer():
         return int(x)
     return None
+
+
+def shift_col(series: str) -> str:
+    """Bounds column holding ``series``' moment shift (``shift_aggs``)."""
+    return f"__shift_{series}"
+
+
+def shift_aggs(items: Sequence[Item]) -> List[Column]:
+    """Per-key aggregates of the moment shifts ``items`` read, for the
+    bounds' own scan (``segmenter.make_bounds(extra=...)``): each such
+    series' first finite sample, so a large offset does not cancel in the
+    moment finals. NaN and ±Inf never become the shift (they would turn
+    every window of the key into NaN); a key with no finite sample gets
+    0, and its NaN windows stay NaN."""
+    from tsflex_spark.features.catalog import SHIFTED
+
+    series = sorted({
+        st[0] for st, _o, spec, _kw, (kinds, _f) in items
+        if getattr(spec, "arity", 1) == 1 and SHIFTED & set(kinds)
+    })
+    # NaN compares above +Inf in Spark SQL, so one comparison keeps both out
+    finite = [F.abs(F.col(_q(s)).cast("double")) < F.lit(float("inf")) for s in series]
+    return [
+        F.coalesce(F.min_by(F.col(_q(s)), F.when(ok, F.col(TSN))), F.lit(0)).alias(shift_col(s))
+        for s, ok in zip(series, finite)
+    ]
 
 
 def _fits(w: int, ss: Sequence[int], g: int) -> bool:
@@ -147,6 +173,7 @@ def build(
     """One bucket table + one final aggregation for ``members``
     (``(config id, window, strides, items)``).
 
+    ``bounds`` carries the ``shift_aggs`` columns of the members' items.
     Returns ``(frame, outs, spc)``: ``frame`` is long-format — ``keys,
     OUT_IDX, CFG`` plus one value column per distinct final aggregate
     (``prefix`` + index); ``outs`` maps ``(config id, value column,
@@ -154,7 +181,12 @@ def build(
     sample-count columns for the sparsity observer as
     ``(series, config-filtered count expression, column)``.
     """
-    from tsflex_spark.features.catalog import merge_partial, pair_partial_builder, partial_builder
+    from tsflex_spark.features.catalog import (
+        SHIFTED,
+        merge_partial,
+        pair_partial_builder,
+        partial_builder,
+    )
 
     cols: Dict[str, Column] = {}
 
@@ -181,7 +213,8 @@ def build(
                 expr = pair_partial_builder(kind)(col(series_tuple[0]), col(series_tuple[1]))
             else:
                 s = series_tuple[0]
-                expr = partial_builder(kind)(col(s), col(TSN), col(shift_col(s)))
+                k = col(shift_col(s)) if kind in SHIFTED else None
+                expr = partial_builder(kind)(col(s), col(TSN), k)
             aggs.append(expr.alias(aliases[key]))
         return aliases[key]
 
